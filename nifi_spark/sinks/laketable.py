@@ -1453,26 +1453,16 @@ class LakeTable:
         batch_id: int | None = None,
         extra_summary: dict | None = None,
         pre_folded: bool = False,
-        fold_mode: str = "bucket",
         touched: list[int] | None = None,
     ) -> int | None:
         """Fold a raw change batch to last-writer-wins per key and MERGE it —
-        one physical shuffle for fold + join + write.
-
-        ``fold_mode``:
-
-        - ``"bucket"`` (default): hash-repartition raw events on ``_bucket``
-          once; the per-key LWW fold runs inside bucket partitions
-          (``groupBy(_bucket, key)`` reuses the exchange), the merge join
-          and the partitioned file write reuse it too. Shuffle volume is
-          O(events) once. Right when events ≈ keys per batch (CDC steady
-          state) or when upstream normalization dominates.
-        - ``"prefold"``: two-phase — map-side partial LWW fold first
-          (shuffle volume O(distinct keys per mapper), the skew defense:
-          a Zipf-hot key is pre-folded to one row per map partition, see
-          operators/ordering.py), then bucket repartition of the folded
-          rows. Two shuffles, but the second moves only folded keys. Right
-          when events ≫ keys (heavy edit churn on few keys).
+        one physical shuffle for fold + join + write: raw events
+        hash-repartition on ``_bucket`` once, the per-key LWW fold runs
+        inside bucket partitions (``groupBy(_bucket, key)`` reuses the
+        exchange), and the merge join and the partitioned file write reuse
+        it too. ``pre_folded=True`` (one row per key already — e.g. the
+        salted hot-key fold, operators/ordering.lww_fold_salted) skips the
+        fold.
 
         Key columns must be non-null (null keys belong in the DLQ — the
         pipeline routes them there before this call).
@@ -1489,7 +1479,7 @@ class LakeTable:
         payload_cols = [
             c for c in events.columns if c not in (*key_cols, seq_col, op_col)
         ]
-        folded = self._fold_events(events, key_cols, seq_col, pre_folded, fold_mode)
+        folded = self._fold_events(events, key_cols, seq_col, pre_folded)
 
         if not self.exists():
             return self._commit_initial(
@@ -1510,20 +1500,12 @@ class LakeTable:
         finally:
             folded.unpersist()
 
-    def _fold_events(self, events, key_cols, seq_col, pre_folded, fold_mode):
-        """Batch-local LWW fold, bucket-aligned (see merge_events docstring
-        for the fold_mode semantics)."""
+    def _fold_events(self, events, key_cols, seq_col, pre_folded):
+        """Batch-local LWW fold, bucket-aligned (see merge_events)."""
         src = events.withColumn("_bucket", self._bucket_col(key_cols[0]))
         np = [c for c in events.columns if c not in key_cols]  # non-key incl seq/op
         if pre_folded:
             return src.repartition(self.n_buckets, F.col("_bucket"))
-        if fold_mode == "prefold":
-            return (
-                src.groupBy(*key_cols)
-                .agg(F.max_by(F.struct(*np, "_bucket"), F.col(seq_col)).alias("_w"))
-                .select(*key_cols, "_w.*")
-                .repartition(self.n_buckets, F.col("_bucket"))
-            )
         return (
             src.repartition(self.n_buckets, F.col("_bucket"))
             .groupBy("_bucket", *key_cols)
@@ -1578,10 +1560,7 @@ class LakeTable:
         if not self.exists():
             # the initial commit is the BASE image (read() doesn't fold
             # clean buckets) — always fold it, even in raw mode
-            folded = self._fold_events(
-                events, key_cols, seq_col, pre_folded,
-                "bucket" if fold_mode == "raw" else fold_mode,
-            )
+            folded = self._fold_events(events, key_cols, seq_col, pre_folded)
             return self._commit_initial(
                 folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
             )
@@ -1592,7 +1571,7 @@ class LakeTable:
             # it. (pre_folded batches are already one row per key.)
             folded = events.withColumn("_bucket", self._bucket_col(key_cols[0]))
         else:
-            folded = self._fold_events(events, key_cols, seq_col, pre_folded, fold_mode)
+            folded = self._fold_events(events, key_cols, seq_col, pre_folded)
         head0 = self._manifest()
         if batch_id is not None:
             last = self._batch_id_of(head0)

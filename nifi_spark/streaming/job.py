@@ -30,12 +30,13 @@ optional Arrow normalization for raw-JSON feeds.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..fsio import FsIO
@@ -89,7 +90,6 @@ class CdcPipeline:
         salt_buckets: int = 0,
         watermark_delay_s: int | None = None,
         from_json_payload: bool = False,
-        fold_mode: str = "bucket",
         sink_mode: str = "merge",
         compact_every: int = 16,
         txn_consistent: bool = False,
@@ -156,8 +156,8 @@ class CdcPipeline:
         # quality_action="halt" fails the micro-batch on any failed check
         # so nothing commits (replay re-evaluates after the fix),
         # "record" logs verdicts + metrics and proceeds. Opt-in cost: ONE
-        # extra aggregate job per batch (a second batch scan on the fused
-        # append path, which otherwise stays at one job).
+        # extra aggregate job per batch (a second batch scan in append
+        # mode, whose sink otherwise runs one job).
         if quality_action not in ("record", "halt"):
             raise ValueError(
                 f"quality_action must be 'record' or 'halt', got {quality_action!r}"
@@ -176,18 +176,18 @@ class CdcPipeline:
         )
         self.checkpoint_dir = checkpoint_dir
         self.salt_buckets = salt_buckets
-        self.fold_mode = fold_mode
         self.sink_mode = sink_mode
         self.compact_every = compact_every
-        self._since_compact = 0
         # Inline snapshot-expiry cadence: a thousand-batch stream commits a
         # manifest per batch; without expiry the commit log grows without
         # bound and head discovery/time-travel degrade. Same single-writer
-        # assumption as the inline compaction below. 0 = off (run
+        # assumption as the inline compaction. 0 = off (run
         # `laketable expire` from a maintenance process instead).
         self.expire_every = expire_every
         self.expire_keep_n = expire_keep_n
-        self._since_expire = 0
+        # committed batches of this instance: the clock every maintenance
+        # cadence (compaction, index fold, expiry, MV refresh) runs on
+        self._n_commits = 0
         # Live downstream aggregate view (operators/mv.py): every
         # ``mv_refresh_every`` committed batches, the changelog since the
         # view's last synced version is folded into the MV by partial
@@ -203,7 +203,6 @@ class CdcPipeline:
         self.mv_key_cols = mv_key_cols or ["conv_id"]
         self._mv_agg_fn = mv_agg_fn
         self._mv = None
-        self._since_mv = 0
         if mv_path is not None:
             self._mv = LakeTable(spark, mv_path, n_buckets=n_buckets)
             if self._mv_agg_fn is None:
@@ -220,10 +219,9 @@ class CdcPipeline:
         # (overwrite-by-batch, replay-idempotent). Contract: a conversation
         # must arrive within one micro-batch (the index's new-id
         # discipline); ``index_compact_every`` folds the per-batch index
-        # partitions on the same single-writer cadence as compact_every.
+        # partitions on the post-commit maintenance cadence (_run_cadence).
         self._ndx = None
         self.index_compact_every = index_compact_every
-        self._since_index_compact = 0
         if near_dup_index is not None:
             from ..operators.dedup_incremental import LshIndex
 
@@ -445,8 +443,6 @@ class CdcPipeline:
         replayed batch re-derives both sides deterministically and the
         sink dedups by batch id.
         """
-        from pyspark.sql import Observation
-
         from ..operators.txn import txn_complete_filter
 
         prev_path, gens = self._pending_before(batch_id)
@@ -493,21 +489,9 @@ class CdcPipeline:
             if abandoned is not None:
                 # expired open txns land in the DLQ instead of vanishing
                 # (one small append per batch when the option is on; runs
-                # inside the overlapped persist job, same replay caveat as
-                # the _bad DLQ append — the apply_batch pre-check guards
-                # the committed-replay path)
-                (
-                    abandoned.select(
-                        F.lit(batch_id).cast("long").alias("batch_id"),
-                        "payload_json",
-                        "source_file",
-                        "source_pos",
-                        F.lit("txn-abandoned").alias("reason"),
-                    )
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(fsio_join(self.table_path, "_dlq"))
-                )
+                # inside the overlapped persist job — the apply_batch
+                # pre-check guards the committed-replay path)
+                self._write_dlq(abandoned, batch_id, "txn-abandoned")
             if prev_path is not None:
                 consumed = int(prev_path.rsplit("b_", 1)[1])
                 for g in gens:
@@ -638,7 +622,7 @@ class CdcPipeline:
             )
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
-        """Normalize → flag (DLQ/late) → one metrics pass → merge → lineage.
+        """Normalize → flag (DLQ/late) → gates → sink → post-commit.
 
         Returns metrics. Malformed events (unparseable payload / missing
         key or sequence) route to a dead-letter table under
@@ -647,43 +631,35 @@ class CdcPipeline:
         .../standard/RetryFlowFile.java `retries_exceeded` routing;
         SURVEY.md §1.1 penalization row).
 
+        After the gates, both sink modes run one sequence:
+
+        1. accounting — ``self._obs_aggs`` per source file (counts,
+           offset/seq ranges, event-time max, touched buckets). Append
+           mode observes them on the delta write itself; merge mode reads
+           only the touched base buckets, so it runs them first as one
+           aggregation over the cached batch;
+        2. the sink call — ``append_events`` or ``merge_events``, handed
+           the touched set so it runs no probe of its own;
+        3. post-commit (:meth:`_post_commit`) — DDL evolve, DLQ, lineage,
+           watermark, then the maintenance cadence.
+
         Driver-action budget per micro-batch (the fixed cost that
-        serializes a thousands-of-batches stream): TWO Spark jobs — one
-        cached per-source-file aggregation that yields the batch metrics,
-        the lineage offset-range records, AND the touched-bucket set in a
-        single pass, then the merge/append itself (handed the touched set,
-        so it runs no probe of its own). Lineage rows are already on the
-        driver and append without a job; the optional DLQ write reads the
-        cache (pays only when bad rows exist).
+        serializes a thousands-of-batches stream): ONE Spark job in append
+        mode (the delta write; a multi-file batch adds one aggregation for
+        per-file lineage), TWO in merge mode (the accounting pass and the
+        merge). Lineage rows are already on the driver and append without
+        a job; the DDL collect and the DLQ write run only when the batch
+        carries DDL or bad rows.
         """
         metrics = {"batch_id": batch_id, "n_events": 0, "n_late": 0, "n_dlq": 0, "n_ddl": 0, "version": None}
-        # Replay pre-check, driver-only (manifest head read): the fused
-        # append path must know before launching its single job — its
-        # observation is populated by that job, so short-circuiting later
-        # (as merge_events does internally) would leave nothing to await.
+        # Replay pre-check, driver-only (manifest head read): append mode
+        # must know before launching its single job — its observation is
+        # populated by that job, so short-circuiting later (as the sinks
+        # do internally) would leave nothing to await.
         if batch_id is not None and self.table.exists():
             last = self.table._batch_id_of(self.table._manifest())
             if last is not None and batch_id <= last:
-                # defensive heal for state written by runs that committed
-                # the sink BEFORE the index (the current order is index
-                # first, so new runs never leave this gap): reconstruct
-                # the PARSED/flagged frame — never the raw batch, whose
-                # text column is NULL under from_json_payload — and index
-                # it. The txn-admitted set of the original run cannot be
-                # rebuilt (the pending store has moved on), so txn mode
-                # records the skip instead of freezing a wrong doc set.
-                if (
-                    self._ndx is not None
-                    and batch_id not in self._ndx.committed_batches()
-                ):
-                    wm = self._ndx._compacted_upto()
-                    if wm is None or batch_id > wm:
-                        if self.txn_consistent:
-                            metrics["near_dup_heal_skipped"] = True
-                        else:
-                            self._near_dup_step(
-                                self._flag_batch(batch_df), batch_id, metrics
-                            )
+                self._replay_heal(batch_df, batch_id, metrics)
                 return metrics
         flagged = self._flag_batch(batch_df)
         gate_cache = None
@@ -710,6 +686,7 @@ class CdcPipeline:
             # disappears instead of adding a full serial job per batch
             gate_thread = threading.Thread(target=_run_persist, daemon=True)
             gate_thread.start()
+        merge = self.sink_mode == "merge"
         try:
             # quality gate FIRST (inside the try so a halt still joins the
             # overlapped pending write and releases the batch cache):
@@ -722,17 +699,22 @@ class CdcPipeline:
                 # two commits heals through the NORMAL replay path: a
                 # crash after the index add replays the whole batch, the
                 # index add is idempotent by batch id, and the sink then
-                # commits — no divergent heal branch. The transient state
-                # (index committed, sink pending) lasts exactly one
-                # replay; the quality gate runs first, so a halted batch
+                # commits. Index compaction waits for the post-commit
+                # cadence: it would refuse the replay of any batch it
+                # folded. The quality gate runs first, so a halted batch
                 # never reaches the index.
                 self._near_dup_step(flagged, batch_id, metrics)
-            if self.sink_mode == "append":
-                metrics = self._apply_batch_fused(flagged, batch_id, metrics)
-            else:
-                metrics = self._apply_batch_merge(flagged, batch_id, metrics)
+            if merge:
+                # the accounting pass, the merge, and the DDL/DLQ reads
+                # share one batch scan
+                flagged = flagged.cache()
+            version, per_file = self._sink(flagged, batch_id)
+            metrics.update(self._counts(per_file), version=version)
+            self._post_commit(flagged, batch_id, version, per_file, metrics)
             return metrics
         finally:
+            if merge:
+                flagged.unpersist()
             if gate_thread is not None:
                 gate_thread.join()
                 if gate_err and sys.exc_info()[0] is None:
@@ -744,129 +726,153 @@ class CdcPipeline:
             if gate_cache is not None:
                 gate_cache.unpersist()
 
-    def _apply_batch_merge(self, flagged, batch_id: int, metrics: dict) -> dict:
-        flagged = flagged.cache()
-        try:
-            good = self._good
+    def _replay_heal(self, batch_df: DataFrame, batch_id: int, metrics: dict) -> None:
+        """Replay of a batch the sink already committed: redo the writes
+        that follow the sink commit and may have been lost to a crash.
+        The batch's DDL re-applies (``LakeTable.evolve`` is idempotent).
+        The near-dup index partition is rebuilt when missing — state from
+        runs that committed the sink before the index; the current order
+        indexes first. The txn-admitted set of the original run cannot be
+        rebuilt (the pending store has moved on), so txn mode records the
+        index skip instead of freezing a wrong doc set.
 
-            def gw(col):  # aggregate over good rows only (nulls are skipped)
-                return F.when(good, col)
+        The heal frame is the PARSED batch — never the raw one, whose
+        text column is NULL under from_json_payload — flagged for ``_bad``
+        only: the watermark has advanced past this batch, so a fresh
+        ``_late`` would drop rows the sink committed as on time."""
+        healed = self._flag_batch(batch_df, late=False)
+        self._evolve_ddl(healed)
+        if self._ndx is None or batch_id in self._ndx.committed_batches():
+            return
+        wm = self._ndx._compacted_upto()
+        if wm is not None and batch_id <= wm:
+            return
+        if self.txn_consistent:
+            metrics["near_dup_heal_skipped"] = True
+        else:
+            self._near_dup_step(healed, batch_id, metrics)
 
-            per_file = flagged.groupBy("source_file").agg(
-                F.count("*").alias("total"),
-                F.sum(F.col("_bad").cast("long")).alias("n_bad"),
-                F.sum(F.col("_late").cast("long")).alias("n_late"),
-                F.sum((self._is_ddl & ~F.col("_bad")).cast("long")).alias("n_ddl"),
-                F.sum((self._is_marker & ~F.col("_bad")).cast("long")).alias("n_marker"),
-                F.max(gw(F.unix_timestamp("ts"))).alias("mx"),
-                F.min(gw(F.col("source_pos"))).alias("min_pos"),
-                F.max(gw(F.col("source_pos"))).alias("max_pos"),
-                F.min(gw(F.col("seq"))).alias("min_seq"),
-                F.max(gw(F.col("seq"))).alias("max_seq"),
-                F.collect_set(gw(self.table._bucket_col(KEY_COLS[0]))).alias("buckets"),
-            ).collect()
-            n_dlq = sum(int(r["n_bad"] or 0) for r in per_file)
-            n_late = sum(int(r["n_late"] or 0) for r in per_file)
-            n_ddl = sum(int(r["n_ddl"] or 0) for r in per_file)
-            n_marker = sum(int(r["n_marker"] or 0) for r in per_file)
-            n_events = (
-                sum(int(r["total"] or 0) for r in per_file)
-                - n_dlq - n_late - n_ddl - n_marker
+    def _sink(self, flagged: DataFrame, batch_id: int) -> tuple[int | None, list]:
+        """Accounting + the one sink call. Returns ``(version, per_file)``:
+        the committed version (None when nothing committed) and the
+        ``self._obs_aggs`` rows, one per source file."""
+        kw = dict(
+            seq_col="seq", op_col="op", batch_id=batch_id,
+            pre_folded=self.salt_buckets > 1,
+        )
+        if self.sink_mode == "merge":
+            per_file = self._per_file(flagged)
+            counts = self._counts(per_file)
+            if not counts["n_events"]:
+                return None, per_file
+            version = self.table.merge_events(
+                self._payload(flagged), KEY_COLS,
+                extra_summary={k: counts[k] for k in ("n_events", "n_late")},
+                touched=sorted({int(b) for r in per_file for b in r["buckets"] or []}),
+                **kw,
             )
-            metrics.update(n_events=n_events, n_late=n_late, n_dlq=n_dlq, n_ddl=n_ddl)
-            ddl_cols = self._collect_ddl(flagged) if n_ddl else {}
-            if ddl_cols and self.table.exists():
-                # schema change lands BEFORE the batch's data (binlog order)
-                self.table.evolve(ddl_cols)
-                ddl_cols = {}
-            if n_dlq:
-                (
-                    flagged.filter(F.col("_bad"))
-                    .select(
-                        F.lit(batch_id).cast("long").alias("batch_id"),
-                        "payload_json",
-                        "source_file",
-                        "source_pos",
-                        F.lit("unparseable-or-missing-key").alias("reason"),
-                    )
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(fsio_join(self.table_path, "_dlq"))
-                )
-            if n_events == 0:
-                if ddl_cols and self.table.exists():  # pure-DDL batch
-                    self.table.evolve(ddl_cols)
-                return metrics
-            touched = sorted({b for r in per_file for b in (r["buckets"] or [])})
-            mxs = [r["mx"] for r in per_file if r["mx"] is not None]
+            return version, per_file
+        # the aggregates ride the delta write (a CollectMetrics node in its
+        # plan); the touched set is read after that job ran. Raw delta
+        # append: no batch-local fold — the read-side LWW fold / compaction
+        # reconciles duplicates, so the write is one narrow stage
+        obs = Observation()
+        row = functools.cache(lambda: obs.get)
+        version = self.table.append_events(
+            self._payload(flagged.observe(obs, *self._obs_aggs)), KEY_COLS,
+            fold_mode="raw",
+            touched=lambda: [int(b) for b in row()["buckets"] or []],
+            **kw,
+        )
+        files = sorted(row()["files"] or [])
+        if version is not None and len(files) > 1:
+            # multi-file batch (e.g. full-backlog availableNow drain):
+            # per-source-file lineage ranges need one extra aggregation
+            return version, self._per_file(flagged)
+        return version, [{**row(), "source_file": files[0] if files else None}]
 
-            events = flagged.filter(good)
+    def _per_file(self, flagged: DataFrame) -> list:
+        return flagged.groupBy("source_file").agg(*self._obs_aggs).collect()
+
+    def _payload(self, flagged: DataFrame) -> DataFrame:
+        """The admitted events in sink column order, salted-folded when
+        ``salt_buckets > 1`` (the hot-key defence; the sink is then told
+        ``pre_folded``)."""
+        events = flagged.filter(self._good)
+        if self.from_json_payload:
+            payload = events.select(*self._payload_cols)
+        else:
+            meta = ("source_file", "source_pos", "payload_json", "txn_id", "_bad", "_late")
+            head = ["seq", "op", "ts", *KEY_COLS]
             payload = events.select(
-                "seq", "op", "ts", *KEY_COLS,
-                *[c for c in events.columns if c not in ("seq", "op", "ts", *KEY_COLS, "source_file", "source_pos", "payload_json", "txn_id", "_bad", "_late")],
+                *head, *[c for c in events.columns if c not in (*head, *meta)]
             )
-            summary = {"n_events": n_events, "n_late": n_late}
-            # Fold strategy (see laketable.merge_events + operators/ordering):
-            # "salted" = explicit two-phase salted fold for extreme hot keys;
-            # "prefold" = map-side partial LWW fold (shuffle O(keys));
-            # "bucket" (default) = fold inside the single bucket shuffle.
-            if self.salt_buckets and self.salt_buckets > 1:
-                folded = lww_fold_salted(
-                    payload, key_cols=KEY_COLS,
-                    salt_buckets=self.salt_buckets, keep_deletes=True,
-                )
-                version = self.table.merge_events(
-                    folded, KEY_COLS, seq_col="seq", op_col="op",
-                    batch_id=batch_id, extra_summary=summary,
-                    pre_folded=True, touched=touched,
-                )
-            else:
-                version = self.table.merge_events(
-                    payload, KEY_COLS, seq_col="seq", op_col="op",
-                    batch_id=batch_id, extra_summary=summary,
-                    fold_mode=self.fold_mode, touched=touched,
-                )
-            metrics["version"] = version
-            if ddl_cols and self.table.exists():
-                # table was created by THIS batch's merge — apply the
-                # deferred DDL now (additive, so order vs data is benign)
-                self.table.evolve(ddl_cols)
-            if version is not None:
-                committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-                write_lineage_rows(
-                    self.spark,
-                    [
-                        {
-                            "batch_id": int(batch_id),
-                            "snapshot_id": int(version),
-                            "source_file": r["source_file"],
-                            "min_pos": r["min_pos"],
-                            "max_pos": r["max_pos"],
-                            "min_seq": r["min_seq"],
-                            "max_seq": r["max_seq"],
-                            "n_events": int(r["total"]) - int(r["n_bad"] or 0) - int(r["n_late"] or 0) - int(r["n_ddl"] or 0) - int(r["n_marker"] or 0),
-                            "n_late": int(n_late),
-                            "committed_at": committed_at,
-                        }
-                        for r in per_file
-                        if int(r["total"]) - int(r["n_bad"] or 0) - int(r["n_late"] or 0) - int(r["n_ddl"] or 0) - int(r["n_marker"] or 0) > 0
-                    ],
-                    self.table_path,
-                )
-                if mxs:
-                    self._store_watermark(int(max(mxs)))
-                self._maybe_expire(metrics)
-                self._maybe_refresh_mv(metrics)
-        finally:
-            flagged.unpersist()
-        return metrics
+        if self.salt_buckets > 1:
+            payload = lww_fold_salted(
+                payload, key_cols=KEY_COLS,
+                salt_buckets=self.salt_buckets, keep_deletes=True,
+            )
+        return payload
 
-    def _collect_ddl(self, flagged) -> dict:
-        """Gather the batch's DDL statements (op='ddl', statement in
-        ``text``) in seq order and parse them into one add-columns map.
-        Driver-side collect is bounded by the number of DDL events in the
-        batch — schema changes, not data. Unsupported/destructive DDL
-        raises (the statement lands in the error with the batch id)."""
+    @staticmethod
+    def _counts(rows: list) -> dict:
+        """Batch metrics from ``_obs_aggs`` rows: admitted events are the
+        rows that are not bad, late, DDL or transaction markers."""
+        tot = {
+            k: sum(int(r[k] or 0) for r in rows)
+            for k in ("total", "n_bad", "n_late", "n_ddl", "n_marker")
+        }
+        return {
+            "n_events": tot["total"] - tot["n_bad"] - tot["n_late"]
+            - tot["n_ddl"] - tot["n_marker"],
+            "n_late": tot["n_late"],
+            "n_dlq": tot["n_bad"],
+            "n_ddl": tot["n_ddl"],
+        }
+
+    def _post_commit(
+        self, flagged: DataFrame, batch_id: int, version: int | None,
+        per_file: list, metrics: dict,
+    ) -> None:
+        """Everything after the sink commit, in one order for both sink
+        modes: DDL evolve (metadata-only and additive — this batch's files
+        null-fill through the schema reader; a replay re-applies it), the
+        DLQ write, then — only when the sink committed — lineage rows, the
+        watermark and the maintenance cadence."""
+        if metrics["n_ddl"]:
+            self._evolve_ddl(flagged)
+        if metrics["n_dlq"]:
+            self._write_dlq(
+                flagged.filter(F.col("_bad")), batch_id, "unparseable-or-missing-key"
+            )
+        if version is None:
+            return
+        committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        lineage = []
+        for r in per_file:
+            n_events = self._counts([r])["n_events"]
+            if n_events > 0:
+                lineage.append({
+                    "batch_id": int(batch_id), "snapshot_id": int(version),
+                    "source_file": r["source_file"],
+                    "min_pos": r["min_pos"], "max_pos": r["max_pos"],
+                    "min_seq": r["min_seq"], "max_seq": r["max_seq"],
+                    "n_events": n_events, "n_late": metrics["n_late"],
+                    "committed_at": committed_at,
+                })
+        write_lineage_rows(self.spark, lineage, self.table_path)
+        mxs = [r["mx"] for r in per_file if r["mx"] is not None]
+        if mxs:
+            self._store_watermark(int(max(mxs)))
+        self._run_cadence(metrics)
+
+    def _evolve_ddl(self, flagged: DataFrame) -> None:
+        """Apply the batch's DDL statements (op='ddl', statement in
+        ``text``) in seq order as one additive evolve — idempotent, so a
+        replay may re-run it. Driver-side collect is bounded by the
+        number of DDL events in the batch — schema changes, not data.
+        Unsupported/destructive DDL raises (the statement lands in the
+        error). A DDL-only first batch has no table to evolve."""
         from ..sinks.laketable import parse_ddl_add_columns
 
         rows = (
@@ -878,155 +884,72 @@ class CdcPipeline:
         for r in sorted(rows, key=lambda r: int(r["seq"])):
             if r["text"]:
                 add.update(parse_ddl_add_columns(r["text"]))
-        return add
+        if add and self.table.exists():
+            self.table.evolve(add)
 
-    def _apply_batch_fused(self, flagged, batch_id: int, metrics: dict) -> dict:
-        """Merge-on-read micro-batch with ONE Spark job: the delta-file
-        write. Batch metrics, lineage offset ranges, the touched-bucket
-        set, and the watermark all ride that job via ``observe()`` (a
-        CollectMetrics node in the same physical plan), so the per-batch
-        fixed cost is one job + one manifest commit — the shape that
-        bounds a thousand-batch stream. Multi-file batches pay one extra
-        tiny aggregation for exact per-source-file lineage; the DLQ write
-        runs only when bad rows exist."""
-        from pyspark.sql import Observation
-
-        good = self._good
-
-        obs = Observation()
-        pre_obs = flagged
-        flagged = flagged.observe(obs, *self._obs_aggs)
-        # evaluated by append_events AFTER its write job populates obs —
-        # the touched-bucket set costs nothing extra. Fallback: a
-        # driver-local batch (a LocalRelation fed straight to apply_batch
-        # — tests, backfill scripts; stream sources never produce one)
-        # can be constant-folded so the CollectMetrics node never emits,
-        # leaving the observation EMPTY (obs.get then throws); recompute
-        # the same aggs with one explicit job in that case only.
-        obs_state: dict = {}
-
-        def _obs_row():
-            if "row" not in obs_state:
-                try:
-                    obs_state["row"] = obs.get
-                except Exception:
-                    obs_state["row"] = pre_obs.agg(*self._obs_aggs).collect()[0]
-            return obs_state["row"]
-
-        touched_fn = lambda: [int(b) for b in (_obs_row()["buckets"] or [])]  # noqa: E731
-        events = flagged.filter(good)
-        if self.from_json_payload:
-            payload = events.select(*self._payload_cols)
-        else:
-            payload = events.select(
-                "seq", "op", "ts", *KEY_COLS,
-                *[c for c in events.columns if c not in ("seq", "op", "ts", *KEY_COLS, "source_file", "source_pos", "payload_json", "txn_id", "_bad", "_late")],
+    def _write_dlq(self, rows: DataFrame, batch_id: int, reason: str) -> None:
+        """Append ``rows`` to the dead-letter table ``{table}/_dlq``."""
+        (
+            rows.select(
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                "payload_json",
+                "source_file",
+                "source_pos",
+                F.lit(reason).alias("reason"),
             )
-        if self.salt_buckets and self.salt_buckets > 1:
-            payload = lww_fold_salted(
-                payload, key_cols=KEY_COLS,
-                salt_buckets=self.salt_buckets, keep_deletes=True,
-            )
-            version = self.table.append_events(
-                payload, KEY_COLS, seq_col="seq", op_col="op",
-                batch_id=batch_id, pre_folded=True, touched=touched_fn,
-            )
-        else:
-            # raw delta append: no batch-local fold — the read-side LWW
-            # fold / compaction reconciles duplicates, so the write is a
-            # single narrow stage (no shuffle at all per micro-batch)
-            version = self.table.append_events(
-                payload, KEY_COLS, seq_col="seq", op_col="op",
-                batch_id=batch_id, fold_mode="raw", touched=touched_fn,
-            )
-        # append_events always ran its write job (the replay short-circuit
-        # was pre-checked in apply_batch), so the observation is populated
-        # — or the LocalRelation fallback above recomputes it.
-        row = _obs_row()
-        n_dlq = int(row["n_bad"] or 0)
-        n_late = int(row["n_late"] or 0)
-        n_ddl = int(row["n_ddl"] or 0)
-        n_marker = int(row["n_marker"] or 0)
-        n_events = int(row["total"] or 0) - n_dlq - n_late - n_ddl - n_marker
-        metrics.update(
-            n_events=n_events, n_late=n_late, n_dlq=n_dlq, n_ddl=n_ddl,
-            version=version,
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(fsio_join(self.table_path, "_dlq"))
         )
-        if n_ddl and self.table.exists():
-            # metadata-only evolve AFTER the append (additive columns:
-            # this batch's delta files null-fill through the schema reader)
-            ddl_cols = self._collect_ddl(flagged)
-            if ddl_cols:
-                self.table.evolve(ddl_cols)
-        if n_dlq:
-            (
-                flagged.filter(F.col("_bad"))
-                .select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "payload_json",
-                    "source_file",
-                    "source_pos",
-                    F.lit("unparseable-or-missing-key").alias("reason"),
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(fsio_join(self.table_path, "_dlq"))
-            )
-        if version is None:
-            return metrics
-        committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        files = sorted(row["files"] or [])
-        if len(files) == 1:
-            lineage = [{
-                "batch_id": int(batch_id), "snapshot_id": int(version),
-                "source_file": files[0],
-                "min_pos": int(row["min_pos"]), "max_pos": int(row["max_pos"]),
-                "min_seq": int(row["min_seq"]), "max_seq": int(row["max_seq"]),
-                "n_events": n_events, "n_late": n_late,
-                "committed_at": committed_at,
-            }]
-        else:
-            # multi-file batch (e.g. full-backlog availableNow drain):
-            # per-source-file ranges need one extra aggregation
-            lineage = [
-                {
-                    "batch_id": int(batch_id), "snapshot_id": int(version),
-                    "source_file": r["source_file"],
-                    "min_pos": r["min_pos"], "max_pos": r["max_pos"],
-                    "min_seq": r["min_seq"], "max_seq": r["max_seq"],
-                    "n_events": int(r["n_events"]), "n_late": n_late,
-                    "committed_at": committed_at,
-                }
-                for r in events.groupBy("source_file").agg(
-                    F.count("*").alias("n_events"),
-                    F.min("source_pos").alias("min_pos"),
-                    F.max("source_pos").alias("max_pos"),
-                    F.min("seq").alias("min_seq"),
-                    F.max("seq").alias("max_seq"),
-                ).collect()
-            ]
-        write_lineage_rows(self.spark, lineage, self.table_path)
-        if row["mx"] is not None:
-            self._store_watermark(int(row["mx"]))
-        if self.compact_every:
-            # amortized MOR-debt repayment: rewrite the unfolded buckets
-            # every compact_every batches (single-writer loop, no race)
-            self._since_compact += 1
-            if self._since_compact >= self.compact_every:
-                mor = (self.table._manifest() or {}).get("mor_buckets", [])
-                if mor:
-                    self.table.compact_buckets([int(b) for b in mor])
-                    metrics["compacted"] = len(mor)
-                self._since_compact = 0
-        self._maybe_expire(metrics)
-        self._maybe_refresh_mv(metrics)
-        return metrics
 
-    def _flag_batch(self, batch_df: DataFrame) -> DataFrame:
+    def _run_cadence(self, metrics: dict) -> None:
+        """Maintenance on the committed-batch clock (single-writer loop):
+        each task runs every N committed batches of this instance. It all
+        follows the sink commit, so it only ever folds committed batches —
+        a crash here replays as an already-committed batch.
+
+        - MOR bucket compaction (append mode, ``compact_every``): the
+          amortized read-debt repayment, a rewrite of the unfolded buckets;
+        - LSH index compaction (``index_compact_every``);
+        - snapshot expiry (``expire_every``): keep the newest
+          ``expire_keep_n`` snapshots + their base closure, on the table
+          and on the downstream view (which commits one snapshot per
+          refresh; its cursor rides the HEAD manifest, which expiry keeps);
+        - MV refresh (``mv_refresh_every``): cursor = the view's last
+          committed batch_id, so a crash between table commit and refresh
+          heals by the next refresh spanning the missed range."""
+        self._n_commits += 1
+
+        def due(every: int) -> bool:
+            return bool(every) and self._n_commits % every == 0
+
+        if self.sink_mode == "append" and due(self.compact_every):
+            mor = (self.table._manifest() or {}).get("mor_buckets", [])
+            if mor:
+                self.table.compact_buckets([int(b) for b in mor])
+                metrics["compacted"] = len(mor)
+        if self._ndx is not None and due(self.index_compact_every):
+            self._ndx.compact()
+        if due(self.expire_every):
+            out = self.table.expire_snapshots(keep_n=self.expire_keep_n)
+            if out["manifests_deleted"]:
+                metrics["expired"] = out["manifests_deleted"]
+            if self._mv is not None and self._mv.exists():
+                mout = self._mv.expire_snapshots(keep_n=self.expire_keep_n)
+                if mout["manifests_deleted"]:
+                    metrics["mv_expired"] = mout["manifests_deleted"]
+        if self._mv is not None and due(self.mv_refresh_every):
+            from nifi_spark.operators.mv import refresh_agg_mv
+
+            from_v = self._mv.last_batch_id() or 0
+            metrics["mv_synced_to"] = refresh_agg_mv(
+                self.table, self._mv, self.mv_key_cols, self._mv_agg_fn, int(from_v)
+            )
+
+    def _flag_batch(self, batch_df: DataFrame, late: bool = True) -> DataFrame:
         """Parse + flag one micro-batch: payload parse (when not baked
-        into the streaming plan), ``_bad``, and the engine-watermark
-        ``_late`` flag. Shared by the normal apply path and the
-        defensive index heal so both see the SAME frame shape."""
+        into the streaming plan), ``_bad``, and — unless ``late=False``
+        (the replay heal) — the engine-watermark ``_late`` flag."""
         if "_late" in batch_df.columns:
             # fully pre-flagged by the streaming plan (start() bakes parse,
             # _bad, and a constant-false _late into the stream when no
@@ -1045,6 +968,8 @@ class CdcPipeline:
                 parsed = batch_df
                 bad_cond = F.lit(False)
             bad_flagged = parsed.withColumn("_bad", bad_cond)
+        if not late:
+            return bad_flagged
 
         late_cond = F.lit(False)
         if self.watermark_delay_s is not None:
@@ -1091,55 +1016,6 @@ class CdcPipeline:
                     fsio_join(self.table_path, "_near_dups", f"batch={batch_id}")
                 )
             )
-        if self.index_compact_every:
-            self._since_index_compact += 1
-            if self._since_index_compact >= self.index_compact_every:
-                self._ndx.compact()
-                self._since_index_compact = 0
-
-    def _maybe_refresh_mv(self, metrics: dict) -> None:
-        """Refresh the downstream aggregate view every
-        ``mv_refresh_every`` committed batches (single-writer loop, like
-        the inline compaction). Cursor = the view's last committed
-        batch_id; a crash between table commit and view refresh is healed
-        by the next refresh spanning the missed range (idempotent)."""
-        if self._mv is None:
-            return
-        self._since_mv += 1
-        if self._since_mv < self.mv_refresh_every:
-            return
-        self._since_mv = 0
-        from nifi_spark.operators.mv import refresh_agg_mv
-
-        from_v = self._mv.last_batch_id() or 0
-        synced = refresh_agg_mv(
-            self.table, self._mv, self.mv_key_cols, self._mv_agg_fn, int(from_v)
-        )
-        metrics["mv_synced_to"] = synced
-
-    def _maybe_expire(self, metrics: dict) -> None:
-        """Inline commit-log expiry every ``expire_every`` committed
-        batches (keep the newest ``expire_keep_n`` snapshots + their base
-        closure) — bounds manifest count on a long-lived stream without a
-        separate maintenance process. No-op when ``expire_every`` is 0.
-
-        The downstream view (``mv_path``) is expired on the same cadence:
-        it commits one snapshot per refresh, so a thousand-batch stream
-        would otherwise grow its manifest count unbounded even though the
-        main table's is capped. Its cursor (``last_batch_id``) rides the
-        HEAD manifest, which expiry always keeps."""
-        if not self.expire_every:
-            return
-        self._since_expire += 1
-        if self._since_expire >= self.expire_every:
-            out = self.table.expire_snapshots(keep_n=self.expire_keep_n)
-            if out["manifests_deleted"]:
-                metrics["expired"] = out["manifests_deleted"]
-            if self._mv is not None and self._mv.exists():
-                mout = self._mv.expire_snapshots(keep_n=self.expire_keep_n)
-                if mout["manifests_deleted"]:
-                    metrics["mv_expired"] = mout["manifests_deleted"]
-            self._since_expire = 0
 
     # ---------- streaming wiring ----------
 

@@ -117,7 +117,8 @@ class MultiTableCdcPipeline:
 
         Driver-action budget: one cached routing aggregate (per-table
         row/marker counts — also the unrouted count), then each ACTIVE
-        table's own two-job apply. Tables with zero data rows this batch
+        table's own apply (one Spark job in append mode, two in merge
+        mode — see CdcPipeline.apply_batch). Tables with zero data rows this batch
         are skipped entirely, except in txn mode when commit markers
         exist — a marker may commit a transaction a table has carried
         pending since an earlier batch, so every table's gate must see

@@ -1,0 +1,164 @@
+"""The micro-batch apply sequence (CdcPipeline.apply_batch), driven on
+driver-local frames: the crash points around the sink commit replay to the
+independent fold, and the salted hot-key fold runs through both sink
+modes."""
+
+import datetime
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
+from nifi_spark.feedgen import generate_change_feed
+from nifi_spark.sinks.laketable import LakeTable
+from nifi_spark.streaming.job import CdcPipeline
+from tests.oracle import assert_final_state_equal, pandas_fold
+
+SINK_MODES = ["merge", "append"]
+TS0 = datetime.datetime(2024, 1, 1)
+COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+SCHEMA = (
+    "seq long, op string, ts timestamp, conv_id string, turn_idx int, "
+    "role string, text string, tool string, source_file string, "
+    "source_pos long, payload_json string"
+)
+BASE = [
+    "please summarize the quarterly revenue report for the emea region",
+    "the emea region grew twelve percent quarter over quarter driven by cloud",
+    "what were the main risks called out in that report",
+    "currency headwinds and a slower enterprise pipeline were the main risks",
+]
+NEAR = BASE[:2] + [BASE[2].replace("main", "key")] + BASE[3:]
+
+
+def _turns(spark, convs, seq0, ts=TS0):
+    """One insert event per turn of each ``(conv_id, texts)``."""
+    rows = []
+    for conv, texts in convs:
+        for i, t in enumerate(texts):
+            seq = seq0 + len(rows)
+            rows.append((seq, "I", ts, conv, i, ["user", "assistant"][i % 2],
+                         t, None, "f", seq, None))
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def _filler(tag):
+    return [f"unrelated filler about {tag} number {i} and nothing else {i}"
+            for i in range(4)]
+
+
+@pytest.mark.parametrize("sink_mode", SINK_MODES)
+def test_index_compaction_waits_for_sink_commit(spark, tmp_path, sink_mode, monkeypatch):
+    """A crash in the sink call of the batch that hits the index cadence
+    must leave that batch replayable: index compaction runs after the sink
+    commit, so it never folds the batch in flight."""
+    paths = (str(tmp_path / "t"), str(tmp_path / "ck"))
+    kw = dict(n_buckets=4, sink_mode=sink_mode,
+              near_dup_index=str(tmp_path / "lsh"), index_compact_every=2)
+    b1 = _turns(spark, [("k0", BASE)], 10)
+    b2 = _turns(spark, [("k1", NEAR), ("k2", _filler("glaciers"))], 20)
+
+    p = CdcPipeline(spark, *paths, **kw)
+    p.apply_batch(b1, batch_id=1)
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the sink commit")
+
+    monkeypatch.setattr(
+        p.table, "append_events" if sink_mode == "append" else "merge_events", crash
+    )
+    with pytest.raises(RuntimeError, match="crash before the sink commit"):
+        p.apply_batch(b2, batch_id=2)
+
+    p2 = CdcPipeline(spark, *paths, **kw)  # restarted driver replays batch 2
+    m = p2.apply_batch(b2, batch_id=2)
+    assert m["n_events"] == 8 and m["n_near_dups"] == 1
+    assert p2.table.last_batch_id() == 2
+    assert_final_state_equal(
+        p2.table.read().select(*COLS).toPandas(),
+        pandas_fold(b1.unionByName(b2).toPandas()),
+    )
+
+
+@pytest.mark.parametrize("sink_mode", SINK_MODES)
+def test_replay_reapplies_ddl_lost_after_data_commit(spark, tmp_path, sink_mode, monkeypatch):
+    """A crash between the data commit and the DDL evolve must not lose
+    the column: the replay short-circuit re-applies the batch's DDL."""
+    def event(**e):
+        return (json.dumps({"timestamp": "2024-01-01T00:00:00.000Z", **e}), "f", e["seq"])
+
+    batch = spark.createDataFrame(
+        [
+            event(type="I", seq=1, conv_id="c0", turn_idx=0, role="user", text="hi"),
+            event(type="ddl", seq=2,
+                  text="ALTER TABLE conversations ADD COLUMN note string"),
+        ],
+        "payload_json string, source_file string, source_pos long",
+    )
+    paths = (str(tmp_path / "t"), str(tmp_path / "ck"))
+    kw = dict(n_buckets=4, sink_mode=sink_mode, from_json_payload=True)
+    real_evolve = LakeTable.evolve
+    calls = []
+
+    def evolve_crashing_once(self, *a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("crash before the evolve commit")
+        return real_evolve(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "evolve", evolve_crashing_once)
+    p = CdcPipeline(spark, *paths, **kw)
+    with pytest.raises(RuntimeError, match="crash before the evolve commit"):
+        p.apply_batch(batch, batch_id=0)
+
+    p2 = CdcPipeline(spark, *paths, **kw)
+    m = p2.apply_batch(batch, batch_id=0)
+    assert m["n_events"] == 0  # data already committed: a replay
+    assert "note" in [f.name for f in p2.table.schema().fields]
+    got = p2.table.read().select("conv_id", "text", "note").collect()
+    assert [tuple(r) for r in got] == [("c0", "hi", None)]
+
+
+def test_replay_heal_indexes_rows_committed_on_time(spark, tmp_path):
+    """The index heal flags only ``_bad``: the watermark has moved past
+    the replayed batch, and re-flagging ``_late`` against it would leave
+    rows the sink committed on time out of the healed index partition."""
+    paths = (str(tmp_path / "t"), str(tmp_path / "ck"))
+    batch = _turns(spark, [("a", BASE), ("b", NEAR)], 10).unionByName(
+        _turns(spark, [("z", _filler("volcanoes"))], 50,
+               ts=TS0 + datetime.timedelta(hours=1))
+    )
+    # a run whose sink committed the batch (and advanced the watermark an
+    # hour past a and b) but whose index never saw it
+    CdcPipeline(spark, *paths, n_buckets=4, watermark_delay_s=60).apply_batch(
+        batch, batch_id=0
+    )
+    p = CdcPipeline(spark, *paths, n_buckets=4, watermark_delay_s=60,
+                    near_dup_index=str(tmp_path / "lsh"))
+    m = p.apply_batch(batch, batch_id=0)
+    assert m["n_events"] == 0 and m["n_near_dups"] == 1
+    assert 0 in p._ndx.committed_batches()
+    pairs = spark.read.parquet(str(tmp_path / "t" / "_near_dups" / "batch=0"))
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [("a", "b")]
+
+
+@pytest.mark.parametrize("sink_mode", SINK_MODES)
+def test_salted_fold_matches_oracle(spark, tmp_path, sink_mode):
+    """``salt_buckets > 1`` folds each batch with the two-phase salted
+    LWW fold before either sink; hot keys with many edits per batch must
+    still land on the independent fold."""
+    feed = generate_change_feed(
+        spark, n_conversations=30, max_turns=4, max_edits=3,
+        hot_keys=3, hot_extra_edits=12,
+    ).cache()
+    mid = feed.agg(F.expr("percentile_approx(seq, 0.5)")).collect()[0][0]
+    p = CdcPipeline(spark, str(tmp_path / "t"), str(tmp_path / "ck"),
+                    n_buckets=4, sink_mode=sink_mode, salt_buckets=4)
+    for bid, part in enumerate([feed.filter(F.col("seq") <= mid),
+                                feed.filter(F.col("seq") > mid)]):
+        m = p.apply_batch(part, batch_id=bid)
+        assert m["version"] is not None
+    assert_final_state_equal(
+        p.table.read().select(*COLS).toPandas(), pandas_fold(feed.toPandas())
+    )
+    feed.unpersist()
