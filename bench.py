@@ -15,7 +15,8 @@ Usage: python bench.py            (the driver's per-round invocation)
        python bench.py --cdc-worker <cores> <feed_dir>   (internal)
 
 Each parallelism level runs in a fresh subprocess because a SparkSession's
-master/parallelism is fixed per JVM (see .claude/skills/verify gotchas).
+master/parallelism is fixed per JVM: a second ``get_spark`` in the same
+process reuses the first session's configuration.
 """
 
 from __future__ import annotations

@@ -19,7 +19,10 @@ the whole job again each trigger. :class:`LshIndex` makes it O(batch):
   files whose buckets the new batch can possibly hit — the scan is
   O(index / n_sub_buckets × buckets-hit), not O(index). Without the
   sub-bucket layout every micro-batch re-listed and re-scanned the whole
-  persisted index (the r4 scale-shape finding);
+  persisted index (the r4 scale-shape finding). The writes repartition by
+  the sub-bucket, so each ``pb=``/``sb=`` directory of a batch holds ONE
+  file, whatever the batch's task count: a probe or a compaction lists
+  and opens one file per sub-bucket and batch;
 - a batch probe joins the NEW band rows (small, broadcast) against the
   pruned index scan on ``(band, bhash)``: the corpus is never re-shingled
   and never shuffled — per-batch cost is O(batch + matched buckets). Both
@@ -28,8 +31,9 @@ the whole job again each trigger. :class:`LshIndex` makes it O(batch):
   collect) are pushed as partition ``IN`` filters;
 - the sb prune requires materializing the candidate set inside
   ``add_batch`` (one eager Spark job per batch — its sub-bucket values
-  cannot be known before the probe join runs). That fixed job cost is
-  the price of reading O(candidates / n_sub_buckets) verify files
+  cannot be known before the probe join runs; the checkpointed candidates
+  and verify arrays are held until :meth:`LshIndex.release`). That fixed
+  job cost is the price of reading O(candidates / n_sub_buckets) verify files
   instead of the whole shingle side: at toy scale it ADDS a couple of
   seconds per batch versus a fully-lazy unpruned probe; at 10^10 docs
   the unpruned verify scan IS the job, so the trade inverts by orders
@@ -67,6 +71,7 @@ from pyspark.sql import functions as F
 
 from ..fsio import FsIO
 from ..fsio import join as fsio_join
+from ..session import release_checkpoint
 from .dedup_fuzzy import (
     _guard_internal,
     band_rows,
@@ -120,6 +125,7 @@ class LshIndex:
         self._io = FsIO(spark, path)
         self.bands_dir = fsio_join(path, "bands")
         self.sh_dir = fsio_join(path, "shingles")
+        self._held: list[DataFrame] = []
 
     # -- state ------------------------------------------------------------
 
@@ -156,6 +162,21 @@ class LshIndex:
     def _pb(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.n_sub_buckets)).cast("int")
 
+    def _hold(self, df: DataFrame) -> DataFrame:
+        """Lazy local checkpoint of ``df``, kept until :meth:`release`."""
+        df = df.localCheckpoint(eager=False)
+        self._held.append(df)
+        return df
+
+    def release(self) -> None:
+        """Drop the probe intermediates the last :meth:`add_batch` keeps
+        for its lazily returned pairs; call once the pairs are consumed.
+        Unreleased ones (a later ``add_batch`` forgets them, as the pairs
+        of an earlier batch may still be read) last until the JVM
+        collects them."""
+        while self._held:
+            release_checkpoint(self._held.pop())
+
     # -- ingest -----------------------------------------------------------
 
     def add_batch(
@@ -178,6 +199,7 @@ class LshIndex:
         # so the watermark/partition state the guards read is consistent (a
         # crash after the bands pass but before the watermark write must
         # not open a replay window — the marker is the single commit point)
+        self._held = []
         self._recover_compact()
         upto = self._compacted_upto()
         if upto is not None and batch_id <= upto:
@@ -234,14 +256,19 @@ class LshIndex:
                 # must land last — a crash between the writes then replays
                 # both (overwrite mode), never leaving a committed batch
                 # whose verify side is missing
+                # repartition by the sub-bucket so each sb=/pb= directory
+                # gets ONE file (not one per upstream task); no fixed
+                # count — AQE sizes the writer stage
                 with_sig.select(
                     self.id_col, "_sh", self._pb(F.col(self.id_col)).alias("sb")
-                ).write.partitionBy("sb").mode("overwrite").parquet(sh_part)
+                ).repartition("sb").write.partitionBy("sb").mode(
+                    "overwrite"
+                ).parquet(sh_part)
                 band_rows(
                     with_sig, self.id_col, "sig", self.n_bands, self.rows_per_band
-                ).withColumn("pb", self._pb(F.col("bhash"))).write.partitionBy(
+                ).withColumn("pb", self._pb(F.col("bhash"))).repartition(
                     "pb"
-                ).mode("overwrite").parquet(band_part)
+                ).write.partitionBy("pb").mode("overwrite").parquet(band_part)
             finally:
                 with_sig.unpersist()
         if not return_pairs:
@@ -330,7 +357,7 @@ class LshIndex:
         # both RUNS the probe join and persists its result -- bounded by
         # batch x n_bands x max_bucket -- in a single job; the verify
         # join then reuses the checkpointed blocks without recomputation.
-        cand = cand_plan.localCheckpoint(eager=False)
+        cand = self._hold(cand_plan)
         # which shingle sub-buckets can the verify possibly touch? sb is a
         # pure function of the id, so the candidate ids' distinct sb set
         # (<= n_sub_buckets values, one bounded collect) prunes the
@@ -359,12 +386,11 @@ class LshIndex:
             .union(cand.select(F.col("id_b").alias(self.id_col)))
             .distinct()
         )
-        sh_small = (
+        sh_small = self._hold(
             self._read_part(self.sh_dir, batch_id)
             .filter(F.col("sb").isin(sbs))
             .select(self.id_col, "_sh")
             .join(F.broadcast(cand_ids), self.id_col, "left_semi")
-            .localCheckpoint(eager=False)
         )
         return verify_jaccard_pairs(cand, sh_small, self.id_col, self.threshold)
 

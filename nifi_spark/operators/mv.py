@@ -34,6 +34,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nifi_spark.session import release_checkpoint
 from nifi_spark.sinks.laketable import LakeTable
 
 
@@ -64,49 +65,59 @@ def refresh_agg_mv(
     if to_version <= from_version:
         return from_version  # nothing committed in the range
 
-    ch = src.changes(from_version, to_version)
-    touched = ch.select(*key_cols).distinct()
-    # Bucket-prune the live scan: when the view key is the table's
-    # bucketing key, the touched keys' bucket ids (a bounded driver
-    # collect, <= n_buckets values) skip every untouched bucket's files
-    # — the refresh reads O(touched buckets), never O(table).
-    buckets = None
-    table_keys = (src._manifest() or {}).get("key_cols") or []
-    if table_keys and key_cols[0] == table_keys[0]:
-        buckets = [
-            int(r["_b"])
-            for r in touched.select(
-                F.pmod(
-                    F.xxhash64(F.col(key_cols[0])), F.lit(src.n_buckets)
-                ).cast("int").alias("_b")
-            ).distinct().collect()
-        ]
-    live = src.read(version=to_version, buckets=buckets).join(
-        touched, key_cols, "left_semi"
+    # The changed keys, materialized once: the bucket collect, the live
+    # semi join and the view-delete anti join all read them, and each
+    # would otherwise re-run the changelog's snapshot diff.
+    touched = (
+        src.changes(from_version, to_version).select(*key_cols).distinct()
+        .localCheckpoint(eager=False)
     )
-    fresh = agg_fn(live)
-    missing = [c for c in key_cols if c not in fresh.columns]
-    if missing:
-        raise ValueError(f"agg_fn output must keep key columns; missing {missing}")
+    try:
+        # One bounded collect (<= src x view bucket pairs) of the touched
+        # keys' buckets on both tables. The source buckets prune the live
+        # scan when the view key is the table's bucketing key — the
+        # refresh reads O(touched buckets), never O(table); the view
+        # buckets are the view merge's touched set, so the merge runs no
+        # probe of its own.
+        k = key_cols[0]
+        hit = touched.select(
+            src._bucket_col(k).alias("s"), mv._bucket_col(k).alias("v")
+        ).distinct().collect()
+        table_keys = (src._manifest() or {}).get("key_cols") or []
+        buckets = (
+            sorted({r.s for r in hit})
+            if table_keys and k == table_keys[0] else None
+        )
+        live = src.read(version=to_version, buckets=buckets).join(
+            touched, key_cols, "left_semi"
+        )
+        fresh = agg_fn(live)
+        missing = [c for c in key_cols if c not in fresh.columns]
+        if missing:
+            raise ValueError(
+                f"agg_fn output must keep key columns; missing {missing}"
+            )
 
-    val_cols = [c for c in fresh.columns if c not in key_cols]
-    upserts = fresh.select(
-        *key_cols,
-        *[F.col(c) for c in val_cols],
-        F.lit("U").alias("op"),
-        F.lit(to_version).cast("long").alias("seq"),
-    )
-    # keys touched in the range but with no live rows left -> view delete
-    gone = touched.join(fresh.select(*key_cols), key_cols, "left_anti").select(
-        *key_cols,
-        *[F.lit(None).cast(upserts.schema[c].dataType).alias(c) for c in val_cols],
-        F.lit("D").alias("op"),
-        F.lit(to_version).cast("long").alias("seq"),
-    )
-    mv.merge_events(
-        upserts.unionByName(gone), key_cols, seq_col="seq", op_col="op",
-        batch_id=to_version,
-    )
+        val_cols = [c for c in fresh.columns if c not in key_cols]
+        upserts = fresh.select(
+            *key_cols,
+            *[F.col(c) for c in val_cols],
+            F.lit("U").alias("op"),
+            F.lit(to_version).cast("long").alias("seq"),
+        )
+        # keys touched in the range but with no live rows left -> view delete
+        gone = touched.join(fresh.select(*key_cols), key_cols, "left_anti").select(
+            *key_cols,
+            *[F.lit(None).cast(upserts.schema[c].dataType).alias(c) for c in val_cols],
+            F.lit("D").alias("op"),
+            F.lit(to_version).cast("long").alias("seq"),
+        )
+        mv.merge_events(
+            upserts.unionByName(gone), key_cols, seq_col="seq", op_col="op",
+            batch_id=to_version, touched=sorted({r.v for r in hit}),
+        )
+    finally:
+        release_checkpoint(touched)
     return to_version
 
 

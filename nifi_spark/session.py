@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -74,3 +74,11 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a frame made by ``localCheckpoint``. They belong
+    to the RDD under the frame's LogicalRDD plan node; Spark has no public
+    call for them, and without one they stay until the JVM collects that
+    RDD."""
+    df._jdf.logicalPlan().rdd().unpersist(False)

@@ -686,6 +686,30 @@ def write_avro(
     return int(counts["n"].sum())
 
 
+def _default_value(name, node, value):
+    """A reader field's JSON ``default`` as the value its decoded rows
+    carry. A union's default belongs to its first branch (Avro spec);
+    bytes and fixed defaults are JSON strings whose code points are the
+    bytes (ISO-8859-1). Defaults this reader cannot convert — logical
+    types, records, arrays, maps — raise instead of landing raw JSON in
+    a typed column."""
+    if isinstance(node, list):
+        node = node[0]
+    t = node
+    if isinstance(node, dict):
+        t = None if "logicalType" in node else node["type"]
+    if t == "null" and value is None:
+        return None
+    if t in ("bytes", "fixed") and isinstance(value, str):
+        return value.encode("iso-8859-1")
+    if t in ("boolean", "int", "long", "float", "double", "string", "enum"):
+        return value
+    raise ValueError(
+        f"avro: cannot convert the default of reader field {name!r} "
+        f"(type {json.dumps(node)})"
+    )
+
+
 def _reader_projection(reader_node, writer_node):
     """Avro schema resolution, the additive subset: map a file's rows
     (decoded with ITS writer schema) onto the reader schema's fields.
@@ -719,7 +743,7 @@ def _reader_projection(reader_node, writer_node):
             check(name)
             continue
         if "default" in f:
-            fills[name] = f["default"]
+            fills[name] = _default_value(name, f["type"], f["default"])
         elif isinstance(f["type"], list) and "null" in f["type"]:
             fills[name] = None
         else:

@@ -30,10 +30,11 @@ optional Arrow normalization for raw-JSON feeds.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
-import sys
+import threading
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -52,6 +53,29 @@ class QualityGateError(RuntimeError):
     """A micro-batch failed its declared data-quality checks under
     ``quality_action="halt"`` — raised BEFORE the sink commit, so the
     batch applies nothing and a replay re-evaluates the gate."""
+
+
+@contextlib.contextmanager
+def _in_background(fn):
+    """Run ``fn()`` on a daemon thread while the ``with`` body runs; on
+    exit, wait for it and raise its error — unless the body raised, whose
+    error is the one to keep."""
+    err: list[BaseException] = []
+
+    def run() -> None:
+        try:
+            fn()
+        except BaseException as e:  # re-raised in the caller's thread
+            err.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    try:
+        yield
+    finally:
+        t.join()
+    if err:
+        raise err[0]
 
 
 def build_parse_exprs(keep: list[str]) -> tuple[list, list]:
@@ -649,7 +673,15 @@ class CdcPipeline:
         per-file lineage), TWO in merge mode (the accounting pass and the
         merge). Lineage rows are already on the driver and append without
         a job; the DDL collect and the DLQ write run only when the batch
-        carries DDL or bad rows.
+        carries DDL or bad rows. The opt-in stages add their own: one
+        aggregate for the quality gate, the index probe and writes plus
+        one pair write (its count observed on it) for the near-dup index,
+        the pending-store write (overlapped with the sink) for the txn
+        gate. When more than one of these consumers reads the admitted
+        batch (merge mode, quality checks, near-dup index), it is cached
+        once, so none of them re-runs parse or the txn-gate join; the
+        plain append path stays one uncached job. The maintenance cadence
+        runs index compaction beside the other tasks (:meth:`_run_cadence`).
         """
         metrics = {"batch_id": batch_id, "n_events": 0, "n_late": 0, "n_dlq": 0, "n_ddl": 0, "version": None}
         # Replay pre-check, driver-only (manifest head read): append mode
@@ -662,36 +694,35 @@ class CdcPipeline:
                 self._replay_heal(batch_df, batch_id, metrics)
                 return metrics
         flagged = self._flag_batch(batch_df)
-        gate_cache = None
-        gate_thread = None
-        gate_err: list[BaseException] = []
-        if self.txn_consistent and not self.txn_via_state:
-            import threading
-
-            # cache the flagged batch across the gate's TWO consumers (the
-            # pending-store write and the admitted side feeding the sink):
-            # without it every gate job re-runs the batch scan + parse
-            gate_cache = flagged.cache()
-            flagged, persist_pending = self._txn_gate(gate_cache, batch_id)
-
-            def _run_persist() -> None:
-                try:
-                    persist_pending()
-                except BaseException as e:  # surfaced after join below
-                    gate_err.append(e)
-
-            # overlap the pending-store write with the sink job: the two
-            # actions are independent given the shared cache, so the
-            # scheduler runs them side by side and the smaller job's wall
-            # disappears instead of adding a full serial job per batch
-            gate_thread = threading.Thread(target=_run_persist, daemon=True)
-            gate_thread.start()
-        merge = self.sink_mode == "merge"
-        try:
-            # quality gate FIRST (inside the try so a halt still joins the
-            # overlapped pending write and releases the batch cache):
-            # verdicts must precede the sink commit for halt to mean
-            # "nothing applied"
+        # exits unwind in reverse, so the gate cache is released only after
+        # the pending-store write that reads it has joined
+        with contextlib.ExitStack() as stack:
+            if self.txn_consistent and not self.txn_via_state:
+                # cache the flagged batch across the gate's TWO consumers
+                # (the pending-store write and the admitted side feeding
+                # the sink): without it every gate job re-runs the batch
+                # scan + parse
+                gate_cache = flagged.cache()
+                stack.callback(gate_cache.unpersist)
+                flagged, persist_pending = self._txn_gate(gate_cache, batch_id)
+                # overlap the pending-store write with the sink job: the
+                # two actions are independent given the shared cache, so
+                # the scheduler runs them side by side and the smaller
+                # job's wall disappears instead of adding a full serial job
+                # per batch. A lost pending generation is a correctness gap
+                # on the NEXT batch, so its error fails the micro-batch;
+                # replay re-derives both sides (the sink dedups by batch id)
+                stack.enter_context(_in_background(persist_pending))
+            # Materialize the admitted batch once when more than one
+            # consumer reads it (quality gate, near-dup index, merge
+            # accounting + merge, DDL/DLQ reads); otherwise each re-runs
+            # parse and the txn-gate join. The plain append path has one
+            # consumer, its observed write, and stays uncached.
+            if self.sink_mode == "merge" or self.quality_checks or self._ndx is not None:
+                flagged = flagged.cache()
+                stack.callback(flagged.unpersist)
+            # quality gate FIRST: verdicts must precede the sink commit for
+            # halt to mean "nothing applied"
             if self.quality_checks:
                 self._quality_gate(flagged, batch_id, metrics)
             if self._ndx is not None:
@@ -704,27 +735,10 @@ class CdcPipeline:
                 # folded. The quality gate runs first, so a halted batch
                 # never reaches the index.
                 self._near_dup_step(flagged, batch_id, metrics)
-            if merge:
-                # the accounting pass, the merge, and the DDL/DLQ reads
-                # share one batch scan
-                flagged = flagged.cache()
             version, per_file = self._sink(flagged, batch_id)
             metrics.update(self._counts(per_file), version=version)
             self._post_commit(flagged, batch_id, version, per_file, metrics)
-            return metrics
-        finally:
-            if merge:
-                flagged.unpersist()
-            if gate_thread is not None:
-                gate_thread.join()
-                if gate_err and sys.exc_info()[0] is None:
-                    # a lost pending generation is a correctness gap on
-                    # the NEXT batch — fail the micro-batch; replay
-                    # re-derives both sides (sink dedups by batch id).
-                    # (if the sink job itself raised, keep THAT error)
-                    raise gate_err[0]
-            if gate_cache is not None:
-                gate_cache.unpersist()
+        return metrics
 
     def _replay_heal(self, batch_df: DataFrame, batch_id: int, metrics: dict) -> None:
         """Replay of a batch the sink already committed: redo the writes
@@ -908,9 +922,15 @@ class CdcPipeline:
         follows the sink commit, so it only ever folds committed batches —
         a crash here replays as an already-committed batch.
 
+        - LSH index compaction (``index_compact_every``) runs on a thread
+          of its own, side by side with the tasks below: it reads and
+          writes only the index directory and commits through its own
+          marker, so it shares no state with them. The batch waits for it
+          before returning, and its error fails the batch after the
+          others ran (the view refresh still commits); the next due
+          compaction folds what this one left;
         - MOR bucket compaction (append mode, ``compact_every``): the
           amortized read-debt repayment, a rewrite of the unfolded buckets;
-        - LSH index compaction (``index_compact_every``);
         - snapshot expiry (``expire_every``): keep the newest
           ``expire_keep_n`` snapshots + their base closure, on the table
           and on the downstream view (which commits one snapshot per
@@ -923,28 +943,30 @@ class CdcPipeline:
         def due(every: int) -> bool:
             return bool(every) and self._n_commits % every == 0
 
-        if self.sink_mode == "append" and due(self.compact_every):
-            mor = (self.table._manifest() or {}).get("mor_buckets", [])
-            if mor:
-                self.table.compact_buckets([int(b) for b in mor])
-                metrics["compacted"] = len(mor)
-        if self._ndx is not None and due(self.index_compact_every):
-            self._ndx.compact()
-        if due(self.expire_every):
-            out = self.table.expire_snapshots(keep_n=self.expire_keep_n)
-            if out["manifests_deleted"]:
-                metrics["expired"] = out["manifests_deleted"]
-            if self._mv is not None and self._mv.exists():
-                mout = self._mv.expire_snapshots(keep_n=self.expire_keep_n)
-                if mout["manifests_deleted"]:
-                    metrics["mv_expired"] = mout["manifests_deleted"]
-        if self._mv is not None and due(self.mv_refresh_every):
-            from nifi_spark.operators.mv import refresh_agg_mv
+        with contextlib.ExitStack() as stack:
+            if self._ndx is not None and due(self.index_compact_every):
+                stack.enter_context(_in_background(self._ndx.compact))
+            if self.sink_mode == "append" and due(self.compact_every):
+                mor = (self.table._manifest() or {}).get("mor_buckets", [])
+                if mor:
+                    self.table.compact_buckets([int(b) for b in mor])
+                    metrics["compacted"] = len(mor)
+            if due(self.expire_every):
+                out = self.table.expire_snapshots(keep_n=self.expire_keep_n)
+                if out["manifests_deleted"]:
+                    metrics["expired"] = out["manifests_deleted"]
+                if self._mv is not None and self._mv.exists():
+                    mout = self._mv.expire_snapshots(keep_n=self.expire_keep_n)
+                    if mout["manifests_deleted"]:
+                        metrics["mv_expired"] = mout["manifests_deleted"]
+            if self._mv is not None and due(self.mv_refresh_every):
+                from nifi_spark.operators.mv import refresh_agg_mv
 
-            from_v = self._mv.last_batch_id() or 0
-            metrics["mv_synced_to"] = refresh_agg_mv(
-                self.table, self._mv, self.mv_key_cols, self._mv_agg_fn, int(from_v)
-            )
+                from_v = self._mv.last_batch_id() or 0
+                metrics["mv_synced_to"] = refresh_agg_mv(
+                    self.table, self._mv, self.mv_key_cols, self._mv_agg_fn,
+                    int(from_v),
+                )
 
     def _flag_batch(self, batch_df: DataFrame, late: bool = True) -> DataFrame:
         """Parse + flag one micro-batch: payload parse (when not baked
@@ -984,12 +1006,10 @@ class CdcPipeline:
         admitted INSERT conversations; land flagged pairs under
         ``{table}/_near_dups/batch=N`` (overwrite — replay-idempotent).
 
-        The pair set is micro-batch-bounded (new docs × matched buckets),
-        so collecting it to route through one deterministic write is the
-        same bounded-driver-collect class as DDL statements. The index
-        add itself is idempotent by batch id (LshIndex contract), so a
+        The index add is idempotent by batch id (LshIndex contract), so a
         replayed batch re-derives identical pairs and overwrites the same
-        partition."""
+        partition. The index's materialized probe intermediates are
+        released once the pairs are written."""
         from ..operators.transcript import assemble_transcripts
 
         ev = df
@@ -1003,19 +1023,25 @@ class CdcPipeline:
         docs = assemble_transcripts(
             inserts, tool_col="tool" if "tool" in ev.columns else None
         ).select("conv_id", "transcript")
-        pairs = self._ndx.add_batch(docs, batch_id)
-        rows = pairs.collect()
-        metrics["n_near_dups"] = len(rows)
-        if rows:
+        obs = Observation()
+        try:
+            pairs = self._ndx.add_batch(docs, batch_id)
+            # written straight from the executors with the count observed
+            # on the write job; the pair set is micro-batch bounded (new
+            # docs x matched buckets), so one writer suffices. A batch
+            # with no pairs writes one empty file that carries the schema.
             (
-                self.spark.createDataFrame(rows, pairs.schema)
-                .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+                pairs.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+                .observe(obs, F.count(F.lit(1)).alias("n"))
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(
                     fsio_join(self.table_path, "_near_dups", f"batch={batch_id}")
                 )
             )
+            metrics["n_near_dups"] = int(obs.get["n"])
+        finally:
+            self._ndx.release()
 
     # ---------- streaming wiring ----------
 

@@ -162,3 +162,86 @@ def test_salted_fold_matches_oracle(spark, tmp_path, sink_mode):
         p.table.read().select(*COLS).toPandas(), pandas_fold(feed.toPandas())
     )
     feed.unpersist()
+
+
+def _stats(table):
+    from nifi_spark.operators.mv import transcript_stats_agg
+
+    return sorted(tuple(r) for r in transcript_stats_agg()(table.read()).collect())
+
+
+def _view(mv):
+    return sorted(
+        tuple(r) for r in mv.read().select("conv_id", "n_turns", "max_turn", "sum_chars").collect()
+    )
+
+
+def test_view_merge_gets_touched_buckets(spark, tmp_path, monkeypatch):
+    """The pipeline's view refresh hands the view merge its touched
+    buckets, so the merge never takes its probe path (a cache plus a
+    distinct collect over the refreshed rows)."""
+    p = CdcPipeline(spark, str(tmp_path / "t"), str(tmp_path / "ck"),
+                    n_buckets=4, mv_path=str(tmp_path / "mv"))
+    real = p._mv._merge_incremental
+    touched = []
+
+    def spy(*a, **k):
+        touched.append(k.get("touched"))
+        return real(*a, **k)
+
+    monkeypatch.setattr(p._mv, "_merge_incremental", spy)
+    p.apply_batch(_turns(spark, [("k0", BASE), ("k1", _filler("glaciers"))], 10), batch_id=1)
+    edit = spark.createDataFrame(
+        [(40, "U", TS0, "k0", 1, "assistant", "edited", None, "f", 40, None)], SCHEMA
+    )
+    p.apply_batch(_turns(spark, [("k2", NEAR)], 30).unionByName(edit), batch_id=2)
+    assert len(touched) == 1 and touched[0], touched  # the first refresh creates the view
+    assert _view(p._mv) == _stats(p.table)
+
+
+def test_index_compaction_error_fails_batch_after_view_refresh(spark, tmp_path, monkeypatch):
+    """Index compaction runs beside the view refresh. Its error fails the
+    batch, but the refresh of that batch still commits; the next due
+    compaction folds what the failed one left, and the flagged pairs equal
+    the one-shot operator's."""
+    from nifi_spark.operators.dedup_fuzzy import minhash_dedup_pairs
+    from nifi_spark.operators.dedup_incremental import LshIndex
+    from nifi_spark.operators.transcript import assemble_transcripts
+
+    p = CdcPipeline(spark, str(tmp_path / "t"), str(tmp_path / "ck"), n_buckets=4,
+                    near_dup_index=str(tmp_path / "lsh"), index_compact_every=1,
+                    mv_path=str(tmp_path / "mv"))
+    batches = [
+        _turns(spark, [("k0", BASE)], 10),
+        _turns(spark, [("k1", NEAR), ("k2", _filler("glaciers"))], 20),
+        _turns(spark, [("k3", [t.replace("quarterly", "annual") for t in BASE])], 40),
+    ]
+    p.apply_batch(batches[0], batch_id=1)
+    real_compact = LshIndex.compact
+    calls = []
+
+    def compact_failing_once(self, *a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("index compaction failed")
+        return real_compact(self, *a, **k)
+
+    monkeypatch.setattr(LshIndex, "compact", compact_failing_once)
+    with pytest.raises(RuntimeError, match="index compaction failed"):
+        p.apply_batch(batches[1], batch_id=2)
+    assert p._mv.last_batch_id() == p.table.current_version()
+    assert _view(p._mv) == _stats(p.table)
+    assert p._ndx.committed_batches() == [1, 2]
+
+    p.apply_batch(batches[2], batch_id=3)
+    assert p._ndx.committed_batches() == [3] and p._ndx._compacted_upto() == 3
+    got = sorted(
+        tuple(r) for r in spark.read.parquet(str(tmp_path / "t" / "_near_dups"))
+        .select("id_a", "id_b", "jaccard").collect()
+    )
+    events = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    docs = assemble_transcripts(events, tool_col="tool").select("conv_id", "transcript")
+    want = sorted(
+        tuple(r) for r in minhash_dedup_pairs(docs, "conv_id", "transcript").collect()
+    )
+    assert want and got == want

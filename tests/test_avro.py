@@ -394,6 +394,56 @@ def test_reader_schema_additive_evolution(spark, tmp_path):
         read_avro(spark, path, avro_schema=bad).collect()
 
 
+@pytest.mark.parametrize(
+    "ftype, default, want",
+    [
+        ("bytes", "\u00ff\u0000a", b"\xff\x00a"),
+        ({"type": "fixed", "name": "F3", "size": 3}, "z\u00e9\u0001", b"z\xe9\x01"),
+    ],
+    ids=["bytes", "fixed"],
+)
+def test_reader_default_bytes_and_fixed(spark, tmp_path, ftype, default, want):
+    """A bytes/fixed default is a JSON string whose code points are the
+    bytes (ISO-8859-1); the reader fills the column with those bytes."""
+    path = str(tmp_path / "def_avro")
+    write_avro(spark.createDataFrame([(1,), (2,)], "id long"), path)
+    reader = {
+        "type": "record", "name": "topLevelRecord",
+        "fields": [
+            {"name": "id", "type": ["null", "long"]},
+            {"name": "blob", "type": ftype, "default": default},
+        ],
+    }
+    got = read_avro(spark, path, avro_schema=reader).collect()
+    assert sorted((r.id, bytes(r.blob)) for r in got) == [(1, want), (2, want)]
+
+
+@pytest.mark.parametrize(
+    "ftype, default",
+    [
+        ({"type": "int", "logicalType": "date"}, 0),
+        ({"type": "record", "name": "R", "fields": [{"name": "x", "type": "int"}]},
+         {"x": 1}),
+    ],
+    ids=["logical", "record"],
+)
+def test_reader_default_unconvertible_raises(ftype, default):
+    """Defaults the reader cannot convert raise instead of landing raw
+    JSON in a typed column."""
+    from nifi_spark.sources.avro import _reader_projection
+
+    writer = {"type": "record", "name": "r", "fields": [{"name": "id", "type": "long"}]}
+    reader = {
+        "type": "record", "name": "r",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "extra", "type": ftype, "default": default},
+        ],
+    }
+    with pytest.raises(ValueError, match="cannot convert the default of reader field 'extra'"):
+        _reader_projection(reader, writer)
+
+
 def test_remote_path_rejected(spark):
     df = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(NotImplementedError, match="local paths"):

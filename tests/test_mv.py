@@ -118,6 +118,47 @@ def test_mv_agg_must_keep_keys(spark, tmp_path):
                        lambda d: d.groupBy().count(), 0)
 
 
+def test_view_with_fewer_buckets_than_source(spark, tmp_path):
+    """The view merge's touched set is the changed keys' buckets in the
+    VIEW's layout. A 4-bucket view of a 16-bucket source must equal a
+    pandas recompute after inserts, updates and deletes of a key whose
+    source bucket (>= 4) names no bucket of the view."""
+    import pandas as pd
+
+    from tests.oracle import pandas_fold
+
+    src = LakeTable(spark, str(tmp_path / "src"), n_buckets=16)
+    mv = LakeTable(spark, str(tmp_path / "mv"), n_buckets=4)
+    convs = [f"c{i}" for i in range(40)]
+    src_bucket = {
+        r.conv_id: r.b
+        for r in spark.createDataFrame([(c,) for c in convs], "conv_id string")
+        .select("conv_id", src._bucket_col("conv_id").alias("b"))
+        .collect()
+    }
+    hot = next(c for c in convs if src_bucket[c] >= 4)
+    batches = [
+        [(i * 2 + t, "I", c, t, f"{c} turn {t}") for i, c in enumerate(convs) for t in (0, 1)],
+        [(100, "U", hot, 0, "edited"), (101, "D", hot, 1, None)],
+        [(200 + i, "U", c, 1, "x" * i) for i, c in enumerate(convs[:9]) if c != hot]
+        + [(300, "D", hot, 0, None), (301, "I", convs[-1], 2, "new turn")],
+    ]
+    cursor, seen = 0, []
+    for bid, rows in enumerate(batches, 1):
+        seen += rows
+        src.merge(_batch(spark, rows), KEYS, batch_id=bid)
+        cursor = refresh_agg_mv(src, mv, ["conv_id"], _agg, cursor)
+        live = pandas_fold(
+            pd.DataFrame(seen, columns=["seq", "op", "conv_id", "turn_idx", "text"])
+        )
+        want = {
+            c: (len(g), int(g.turn_idx.max()), int(g.text.str.len().sum()))
+            for c, g in live.groupby("conv_id")
+        }
+        assert _got(mv) == want, f"view differs after batch {bid}"
+    assert hot not in _got(mv)
+
+
 # --------------------------------------------------------------------------
 # Streaming integration: CdcPipeline(mv_path=...) keeps the view live
 # --------------------------------------------------------------------------
