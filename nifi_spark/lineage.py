@@ -15,50 +15,11 @@ one small file (a handful of rows — one per source file seen in the batch).
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def lineage_records(
-    events: DataFrame,
-    batch_id: int,
-    snapshot_id: int,
-    n_late: int = 0,
-) -> DataFrame:
-    """Aggregate a batch's events into per-source_file range records."""
-    src = events if "source_file" in events.columns else events.withColumn(
-        "source_file", F.lit(None).cast("string")
-    ).withColumn("source_pos", F.lit(None).cast("long"))
-    return (
-        src.groupBy("source_file")
-        .agg(
-            F.min("source_pos").alias("min_pos"),
-            F.max("source_pos").alias("max_pos"),
-            F.min("seq").alias("min_seq"),
-            F.max("seq").alias("max_seq"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            "source_file",
-            "min_pos",
-            "max_pos",
-            "min_seq",
-            "max_seq",
-            "n_events",
-            F.lit(n_late).cast("long").alias("n_late"),
-            F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())).alias("committed_at"),
-        )
-    )
-
-
-def write_lineage(records: DataFrame, table_path: str) -> None:
-    from .fsio import join
-
-    records.coalesce(1).write.mode("append").parquet(join(table_path, "_lineage"))
+from .schema import LINEAGE
 
 
 def write_lineage_rows(spark: SparkSession, rows: list[dict], table_path: str) -> None:
@@ -74,7 +35,6 @@ def write_lineage_rows(spark: SparkSession, rows: list[dict], table_path: str) -
     if not rows:
         return
     from .fsio import join
-    from .schema import LINEAGE
 
     out_dir = join(table_path, "_lineage")
     if "://" not in table_path:
@@ -108,9 +68,7 @@ def read_lineage(spark: SparkSession, table_path: str) -> DataFrame:
     # never a local dir, and `lineage_audit` over a remote table would
     # otherwise silently report "clean" on an empty frame.
     if not FsIO(spark, table_path).exists(p):
-        return spark.createDataFrame([], "batch_id long, snapshot_id long, source_file string, "
-                                         "min_pos long, max_pos long, min_seq long, max_seq long, "
-                                         "n_events long, n_late long, committed_at string")
+        return spark.createDataFrame([], LINEAGE)
     return spark.read.parquet(p)
 
 

@@ -54,16 +54,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-# Partial-top-k implementation: "jvm" (row_number over (query, input
-# partition) — whole-stage-codegen, one BALANCED exchange, no Python) or
-# "arrow" (mapInPandas accumulator — zero exchange, Arrow round-trip of
-# every scored candidate through Python workers). Measured at sf0.1
-# (BENCH/BASELINE.md r5): jvm wins on every ANN entry, so it is the
-# default; the flag stays for environments where Python workers are
-# co-located and shuffle is the scarcer resource.
-PARTIAL_TOPK_IMPL = "jvm"
-
-
 def _partial_topk(
     scored: DataFrame,
     k: int,
@@ -71,7 +61,6 @@ def _partial_topk(
     ascending: bool,
     tie_col: str = "neighbor_id",
     group_col: str = "query_id",
-    impl: str | None = None,
 ) -> DataFrame:
     """Per-query partial top-k — phase one of two-phase ranking.
 
@@ -79,61 +68,30 @@ def _partial_topk(
     scored candidate through one keyed exchange and lands each query's
     full candidate set on ONE reducer task — at 10^9 corpus × 10^3
     queries that shuffle is the job. This stage cuts the candidate set to
-    ≤k rows per (query, input partition) first, so the global window's
-    input is O(k · partitions) rows per query and no single-reducer
-    hotspot exists. The kept rows are a superset of the true global top-k
-    (any global winner is a winner within its own partition under the
-    same total order), so the downstream window produces identical
-    rows/ranks regardless of input partitioning or implementation:
-
-    - ``impl="jvm"``: ``row_number() OVER (PARTITION BY query,
-      spark_partition_id())`` filtered ≤ k. The exchange moves all scored
-      rows, but across query × partition keys — balanced, no hotspot —
-      and the whole pipeline stays inside whole-stage codegen.
-    - ``impl="arrow"``: mapInPandas with a bounded accumulator (running
-      state ≤ queries × k rows per partition) — NO exchange at all, but
-      every candidate crosses the JVM↔Python Arrow boundary.
-
-    No arithmetic happens in either path — scores computed JVM-side pass
-    through unchanged, so value hashes are unaffected.
-
-    Precondition: ``order_col`` values are non-null. (pandas sorts NaN
-    last in both directions while Spark's ascending window sorts nulls
-    first, so a null score could survive one phase and not the other.
-    Every caller scores with non-null arithmetic over non-null vectors.)
+    ≤k rows per (query, input partition) first — ``row_number() OVER
+    (PARTITION BY query, spark_partition_id())`` filtered ≤ k — so the
+    global window's input is O(k · partitions) rows per query and no
+    single-reducer hotspot exists. The exchange moves all scored rows,
+    but across query × partition keys (balanced), and the whole pipeline
+    stays inside whole-stage codegen with no Python. The kept rows are a
+    superset of the true global top-k (any global winner is a winner
+    within its own partition under the same total order), so the
+    downstream window produces identical rows/ranks regardless of input
+    partitioning. No arithmetic happens here — scores computed upstream
+    pass through unchanged, so value hashes are unaffected.
     """
-    impl = impl or PARTIAL_TOPK_IMPL
     cols = scored.columns
-    if impl == "jvm":
-        order = [
-            F.col(order_col).asc() if ascending else F.col(order_col).desc(),
-            F.col(tie_col).asc(),
-        ]
-        w = W.partitionBy(F.col(group_col), F.col("_ptk_pid")).orderBy(*order)
-        return (
-            scored.withColumn("_ptk_pid", F.spark_partition_id())
-            .withColumn("_ptk_rn", F.row_number().over(w))
-            .filter(F.col("_ptk_rn") <= k)
-            .select(*cols)
-        )
-    if impl != "arrow":
-        raise ValueError(f"impl must be jvm|arrow, got {impl!r}")
-    by = [group_col, order_col, tie_col]
-    asc = [True, ascending, True]
-
-    def fn(batches):
-        import pandas as pd
-
-        run = None
-        for pdf in batches:
-            cur = pdf if run is None else pd.concat([run, pdf], ignore_index=True)
-            # mergesort = stable; tie_col makes the order total anyway
-            cur = cur.sort_values(by, ascending=asc, kind="mergesort")
-            run = cur.groupby(group_col, sort=False).head(k)
-        if run is not None and len(run):
-            yield run[cols]
-
-    return scored.mapInPandas(fn, scored.schema)
+    order = [
+        F.col(order_col).asc() if ascending else F.col(order_col).desc(),
+        F.col(tie_col).asc(),
+    ]
+    w = W.partitionBy(F.col(group_col), F.col("_ptk_pid")).orderBy(*order)
+    return (
+        scored.withColumn("_ptk_pid", F.spark_partition_id())
+        .withColumn("_ptk_rn", F.row_number().over(w))
+        .filter(F.col("_ptk_rn") <= k)
+        .select(*cols)
+    )
 
 
 def cosine_topk(

@@ -29,8 +29,9 @@ on ``txn_col`` once and AQE may broadcast the commit side when small.
 transactions are small — bounded by the writer's batch, not the feed),
 and the sort happens inside ``array_sort``, JVM-side, no Python.
 
-The streaming counterpart (state carried across micro-batches) is
-``streaming/stateful.py:stateful_txn_buffer``.
+The streaming counterpart (open transactions carried across micro-batches
+in a checkpoint-adjacent pending store) is ``CdcPipeline._txn_gate`` in
+``streaming/job.py``, which runs :func:`txn_complete_filter` per batch.
 """
 
 from __future__ import annotations

@@ -906,7 +906,7 @@ class LakeTable:
             )
         )
 
-    def sync_from(self, src: "LakeTable", cursor: int = 0, mode: str = "auto") -> int:
+    def sync_from(self, src: "LakeTable", cursor: int = 0) -> int:
         """Changelog-as-source chaining: apply ``src``'s changelog
         ``(cursor, head]`` to THIS table and return the new cursor
         (src's head version) — ≙ chaining one NiFi flow's output
@@ -930,7 +930,7 @@ class LakeTable:
         head = src.current_version()
         if head <= cursor:
             return cursor
-        ch = src.changes(cursor, head, mode=mode)
+        ch = src.changes(cursor, head)
         key_cols = src._manifest(head)["key_cols"]
         self.merge_events(
             ch, key_cols, seq_col="change_seq", op_col="op", batch_id=head

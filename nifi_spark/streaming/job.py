@@ -117,8 +117,6 @@ class CdcPipeline:
         sink_mode: str = "merge",
         compact_every: int = 16,
         txn_consistent: bool = False,
-        txn_abandoned_ttl_ms: int | None = None,
-        txn_via_state: bool = False,
         txn_marker_keep: int = 8,
         txn_abandon_after_batches: int | None = None,
         expire_every: int = 0,
@@ -138,25 +136,19 @@ class CdcPipeline:
         (schema.CHANGE_EVENTS_TXN — every event carries ``txn_id``, the
         log contains op='C' commit markers). Only committed transactions'
         events reach the merge — CaptureChangeMySQL's BEGIN→COMMIT
-        atomicity (reference CaptureChangeMySQL.java:947-1024). Two
-        implementations:
-
-        - default (``txn_via_state=False``): JVM pending-store gate in
-          ``apply_batch`` — the batch unions the (tiny) carryover of
-          still-open transactions from the checkpoint-adjacent pending
-          store, one broadcast join against the commit set splits
-          committed from pending, and the new pending set (O(open
-          transactions), normally ≈ the last partial transaction of the
-          batch) is rewritten. Steady-state cost: one small extra write
-          per batch; NO per-event Python and NO full-stream stateful
-          shuffle. Replay-safe: pending generations are keyed by the
-          producing batch id and re-derived identically on replay.
-        - ``txn_via_state=True``: keyed stateful buffer in the streaming
-          plan (stateful.stateful_txn_buffer) — the applyInPandasWithState
-          formulation; supports ``txn_abandoned_ttl_ms`` (drop a
-          transaction with no commit after that much processing time).
-          Pays a full keyed shuffle + Arrow round-trip per batch; use
-          when per-key TTL semantics matter more than throughput.
+        atomicity (reference CaptureChangeMySQL.java:947-1024), enforced
+        by the pending-store gate in ``apply_batch`` (:meth:`_txn_gate`):
+        the batch unions the (tiny) carryover of still-open transactions
+        from the checkpoint-adjacent pending store, one broadcast join
+        against the commit set splits committed from pending, and the new
+        pending set (O(open transactions), normally ≈ the last partial
+        transaction of the batch) is rewritten before the sink commits.
+        Steady-state cost: one small extra write per batch; NO per-event
+        Python and NO full-stream stateful shuffle. Replay-safe: pending
+        generations are keyed by the producing batch id and re-derived
+        identically on replay. ``txn_abandon_after_batches`` routes a
+        transaction still open after N carried batches to the DLQ, and
+        :meth:`pending_report` lists what the gate holds.
 
         ``sink_mode``:
 
@@ -256,11 +248,8 @@ class CdcPipeline:
         self.watermark_delay_s = watermark_delay_s
         self.from_json_payload = from_json_payload
         self.txn_consistent = txn_consistent
-        self.txn_abandoned_ttl_ms = txn_abandoned_ttl_ms
-        self.txn_via_state = txn_via_state
         self.txn_marker_keep = txn_marker_keep
-        # JVM-gate analog of the stateful buffer's txn_abandoned_ttl_ms:
-        # a transaction still open after N carried batches routes to the
+        # A transaction still open after N carried batches routes to the
         # DLQ with reason 'txn-abandoned' instead of being held forever
         # (by default open txns hold until commit or end-of-log — correct,
         # but an end-of-log replay leaves them invisible; see
@@ -445,11 +434,10 @@ class CdcPipeline:
         - recently seen COMMIT markers, kept ``txn_marker_keep`` more
           generations so a member event arriving a batch or two AFTER its
           commit marker (bounded arrival disorder at a segment boundary)
-          still matches — the pending-store analog of the stateful
-          buffer's committed-flag straggler pass-through. Markers retire
-          after the TTL, bounding the store; a straggler later than that
-          is treated as abandoned, the same contract the buffer's
-          processing-time TTL gives.
+          still matches. Markers retire after ``txn_marker_keep``
+          generations, bounding the store; a straggler later than that
+          is held as an open transaction (and, with
+          ``txn_abandon_after_batches``, routed to the DLQ).
 
         Exactly-once under replay: the gate always consumes the newest
         generation BELOW this batch id and rewriting generation
@@ -458,14 +446,13 @@ class CdcPipeline:
         Generations older than the consumed one are retired inline.
 
         Returns ``(admitted, persist_thunk)``: the caller runs
-        ``persist_thunk()`` (the pending-store write job) CONCURRENTLY
-        with the admitted side's sink job — the two actions are
-        independent once the shared cached batch materializes, so on a
-        multi-core executor pool the smaller job hides inside the larger
-        one instead of serializing after it. Replay order-independence
-        makes the overlap safe: whichever job survives a crash, the
-        replayed batch re-derives both sides deterministically and the
-        sink dedups by batch id.
+        ``persist_thunk()`` (the pending-store write job and its
+        ``txn-abandoned`` DLQ rows) beside the pre-sink steps (quality
+        gate, near-dup index) and joins it BEFORE the sink commits: a
+        batch whose manifest is committed replays as a no-op, so a
+        generation still unwritten at that commit could never be
+        re-derived and the next batch would read an older one, losing
+        the open transactions this batch carried.
         """
         from ..operators.txn import txn_complete_filter
 
@@ -512,9 +499,8 @@ class CdcPipeline:
             self._mark_pending_rows(out_dir, obs.get["n"])
             if abandoned is not None:
                 # expired open txns land in the DLQ instead of vanishing
-                # (one small append per batch when the option is on; runs
-                # inside the overlapped persist job — the apply_batch
-                # pre-check guards the committed-replay path)
+                # (one small write per batch when the option is on,
+                # overwritten by a replay of the uncommitted batch)
                 self._write_dlq(abandoned, batch_id, "txn-abandoned")
             if prev_path is not None:
                 consumed = int(prev_path.rsplit("b_", 1)[1])
@@ -676,11 +662,12 @@ class CdcPipeline:
         carries DDL or bad rows. The opt-in stages add their own: one
         aggregate for the quality gate, the index probe and writes plus
         one pair write (its count observed on it) for the near-dup index,
-        the pending-store write (overlapped with the sink) for the txn
-        gate. When more than one of these consumers reads the admitted
-        batch (merge mode, quality checks, near-dup index), it is cached
-        once, so none of them re-runs parse or the txn-gate join; the
-        plain append path stays one uncached job. The maintenance cadence
+        the pending-store write for the txn gate (beside the quality gate
+        and the near-dup step, joined before the sink call). When more
+        than one of these consumers reads the admitted batch (merge mode,
+        quality checks, near-dup index), it is cached once, so none of
+        them re-runs parse or the txn-gate join; the plain append path
+        stays one uncached job. The maintenance cadence
         runs index compaction beside the other tasks (:meth:`_run_cadence`).
         """
         metrics = {"batch_id": batch_id, "n_events": 0, "n_late": 0, "n_dlq": 0, "n_ddl": 0, "version": None}
@@ -694,10 +681,9 @@ class CdcPipeline:
                 self._replay_heal(batch_df, batch_id, metrics)
                 return metrics
         flagged = self._flag_batch(batch_df)
-        # exits unwind in reverse, so the gate cache is released only after
-        # the pending-store write that reads it has joined
+        pre_sink = contextlib.nullcontext()
         with contextlib.ExitStack() as stack:
-            if self.txn_consistent and not self.txn_via_state:
+            if self.txn_consistent:
                 # cache the flagged batch across the gate's TWO consumers
                 # (the pending-store write and the admitted side feeding
                 # the sink): without it every gate job re-runs the batch
@@ -705,14 +691,7 @@ class CdcPipeline:
                 gate_cache = flagged.cache()
                 stack.callback(gate_cache.unpersist)
                 flagged, persist_pending = self._txn_gate(gate_cache, batch_id)
-                # overlap the pending-store write with the sink job: the
-                # two actions are independent given the shared cache, so
-                # the scheduler runs them side by side and the smaller
-                # job's wall disappears instead of adding a full serial job
-                # per batch. A lost pending generation is a correctness gap
-                # on the NEXT batch, so its error fails the micro-batch;
-                # replay re-derives both sides (the sink dedups by batch id)
-                stack.enter_context(_in_background(persist_pending))
+                pre_sink = _in_background(persist_pending)
             # Materialize the admitted batch once when more than one
             # consumer reads it (quality gate, near-dup index, merge
             # accounting + merge, DDL/DLQ reads); otherwise each re-runs
@@ -721,20 +700,26 @@ class CdcPipeline:
             if self.sink_mode == "merge" or self.quality_checks or self._ndx is not None:
                 flagged = flagged.cache()
                 stack.callback(flagged.unpersist)
-            # quality gate FIRST: verdicts must precede the sink commit for
-            # halt to mean "nothing applied"
-            if self.quality_checks:
-                self._quality_gate(flagged, batch_id, metrics)
-            if self._ndx is not None:
-                # BEFORE the sink commit, so the crash window between the
-                # two commits heals through the NORMAL replay path: a
-                # crash after the index add replays the whole batch, the
-                # index add is idempotent by batch id, and the sink then
-                # commits. Index compaction waits for the post-commit
-                # cadence: it would refuse the replay of any batch it
-                # folded. The quality gate runs first, so a halted batch
-                # never reaches the index.
-                self._near_dup_step(flagged, batch_id, metrics)
+            # The pending-store write runs beside the pre-sink steps and
+            # joins before the sink call: once the manifest commits, a
+            # replay of this batch is a no-op, so the generation must be
+            # durable first. Its error fails the batch before anything
+            # commits, and the replay re-derives it.
+            with pre_sink:
+                # quality gate FIRST: verdicts must precede the sink commit
+                # for halt to mean "nothing applied"
+                if self.quality_checks:
+                    self._quality_gate(flagged, batch_id, metrics)
+                if self._ndx is not None:
+                    # BEFORE the sink commit, so the crash window between
+                    # the two commits heals through the NORMAL replay path:
+                    # a crash after the index add replays the whole batch,
+                    # the index add is idempotent by batch id, and the sink
+                    # then commits. Index compaction waits for the
+                    # post-commit cadence: it would refuse the replay of any
+                    # batch it folded. The quality gate runs first, so a
+                    # halted batch never reaches the index.
+                    self._near_dup_step(flagged, batch_id, metrics)
             version, per_file = self._sink(flagged, batch_id)
             metrics.update(self._counts(per_file), version=version)
             self._post_commit(flagged, batch_id, version, per_file, metrics)
@@ -743,8 +728,9 @@ class CdcPipeline:
     def _replay_heal(self, batch_df: DataFrame, batch_id: int, metrics: dict) -> None:
         """Replay of a batch the sink already committed: redo the writes
         that follow the sink commit and may have been lost to a crash.
-        The batch's DDL re-applies (``LakeTable.evolve`` is idempotent).
-        The near-dup index partition is rebuilt when missing — state from
+        The batch's DDL re-applies (``LakeTable.evolve`` is idempotent)
+        and its bad rows re-write their DLQ directory (an overwrite). The
+        near-dup index partition is rebuilt when missing — state from
         runs that committed the sink before the index; the current order
         indexes first. The txn-admitted set of the original run cannot be
         rebuilt (the pending store has moved on), so txn mode records the
@@ -756,6 +742,9 @@ class CdcPipeline:
         ``_late`` would drop rows the sink committed as on time."""
         healed = self._flag_batch(batch_df, late=False)
         self._evolve_ddl(healed)
+        bad = healed.filter(F.col("_bad"))
+        if not bad.isEmpty():
+            self._write_dlq(bad, batch_id, "unparseable-or-missing-key")
         if self._ndx is None or batch_id in self._ndx.committed_batches():
             return
         wm = self._ndx._compacted_upto()
@@ -902,7 +891,13 @@ class CdcPipeline:
             self.table.evolve(add)
 
     def _write_dlq(self, rows: DataFrame, batch_id: int, reason: str) -> None:
-        """Append ``rows`` to the dead-letter table ``{table}/_dlq``."""
+        """Write ``rows`` to the dead-letter table ``{table}/_dlq``: one
+        directory ``batch_id=N/reason=R`` per (batch, reason), overwritten
+        by a replay of the batch, so each row lands once however often the
+        batch re-runs. The files carry the whole record; the directory
+        keys are the same two columns, so reading ``_dlq`` still returns
+        (batch_id, payload_json, source_file, source_pos, reason), with
+        ``batch_id`` typed by partition inference (int while ids fit)."""
         (
             rows.select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
@@ -912,8 +907,10 @@ class CdcPipeline:
                 F.lit(reason).alias("reason"),
             )
             .coalesce(1)
-            .write.mode("append")
-            .parquet(fsio_join(self.table_path, "_dlq"))
+            .write.mode("overwrite")
+            .parquet(fsio_join(
+                self.table_path, "_dlq", f"batch_id={batch_id}", f"reason={reason}"
+            ))
         )
 
     def _run_cadence(self, metrics: dict) -> None:
@@ -1080,21 +1077,6 @@ class CdcPipeline:
             )
         else:
             stream = stream.withColumn("_bad", F.lit(False))
-        if self.txn_consistent and self.txn_via_state:
-            # Commit-gated admission ahead of the sink: hold each
-            # transaction's events in keyed state until its op='C' marker
-            # arrives (markers are consumed here, never emitted), so
-            # apply_batch only ever sees commit-complete data events.
-            # (The default JVM pending-store gate runs inside apply_batch
-            # instead — see _txn_gate.)
-            from .stateful import stateful_txn_buffer
-
-            stream = stateful_txn_buffer(
-                stream,
-                txn_col="txn_id",
-                op_col="op",
-                abandoned_ttl_ms=self.txn_abandoned_ttl_ms,
-            )
         if self.watermark_delay_s is None:
             stream = stream.withColumn("_late", F.lit(False))
 
@@ -1142,10 +1124,6 @@ def _cli(argv: list[str] | None = None) -> None:
     p.add_argument("--txn-consistent", action="store_true",
                    help="feed is transaction-delimited (txn_id + op='C' markers); "
                         "hold events until their transaction commits")
-    p.add_argument("--txn-abandoned-ttl-ms", type=int, default=None)
-    p.add_argument("--txn-via-state", action="store_true",
-                   help="use the keyed stateful buffer instead of the default "
-                        "JVM pending-store gate (enables abandoned-txn TTL)")
     p.add_argument("--bootstrap-from", default=None,
                    help="parquet path of a consistent snapshot image to load "
                         "before streaming (initial load -> incremental handoff)")
@@ -1245,8 +1223,6 @@ def _cli(argv: list[str] | None = None) -> None:
         sink_mode=args.sink_mode,
         compact_every=args.compact_every,
         txn_consistent=args.txn_consistent,
-        txn_abandoned_ttl_ms=args.txn_abandoned_ttl_ms,
-        txn_via_state=args.txn_via_state,
         txn_abandon_after_batches=args.txn_abandon_after_batches,
         expire_every=args.expire_every,
         expire_keep_n=args.expire_keep_n,

@@ -31,9 +31,7 @@ per table. Design points that matter at scale:
   replicates them to EVERY table's gate: each table admits its own
   slice of the transaction exactly when the shared commit marker
   arrives, and a transaction whose commit never lands is admitted
-  nowhere — per-table atomicity of a cross-table transaction. (The
-  stateful-buffer engine gates pre-route and is not supported here;
-  the JVM pending-store gate is the multi-table engine.)
+  nowhere — per-table atomicity of a cross-table transaction.
 - **Unrouted events** (a table name with no configured sink) land in a
   dead-letter parquet under the checkpoint (≙ RouteOnAttribute's
   unmatched relationship) with their batch id — never silently dropped,
@@ -78,12 +76,6 @@ class MultiTableCdcPipeline:
         txn_consistent, watermark_delay_s, …)."""
         if not tables:
             raise ValueError("tables must map at least one name to a path")
-        if pipeline_kwargs.get("txn_via_state"):
-            raise ValueError(
-                "multi-table fan-out requires the JVM pending-store txn "
-                "gate (txn_via_state=False): the stateful buffer would "
-                "gate before routing"
-            )
         self.spark = spark
         self.table_col = table_col
         self.checkpoint_dir = checkpoint_dir

@@ -218,101 +218,6 @@ def stateful_rate_limit(
     )
 
 
-def stateful_txn_buffer(
-    df: DataFrame,
-    txn_col: str = "txn_id",
-    op_col: str = "op",
-    commit_op: str = "C",
-    begin_op: str | None = "B",
-    abandoned_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Transaction-consistent streaming admission: hold each transaction's
-    data events in keyed state until its COMMIT marker arrives, then emit
-    them all — across micro-batches (reference CaptureChangeMySQL's
-    BEGIN→COMMIT grouping, CaptureChangeMySQL.java:947-1024 +
-    FlowFileEventWriteStrategy ONE_TRANSACTION_PER_FLOWFILE; the batch-mode
-    analog is ``operators/txn.txn_complete_filter``).
-
-    Semantics per transaction key:
-
-    - data events buffer in state until the commit marker is seen (same
-      batch or any later one), then flush in arrival order;
-    - after commit, the state keeps a ``committed`` flag so stragglers of
-      an already-committed transaction pass straight through (binlog
-      transactions are contiguous, so this is a replay-overlap guard, not
-      a steady-state path);
-    - rows with NULL ``txn_col`` are non-transactional and emit
-      immediately (≙ MyISAM statements outside BEGIN/COMMIT, reference
-      CaptureChangeMySQL.java:963-979);
-    - boundary rows (BEGIN/COMMIT markers) are consumed, never emitted;
-    - ``abandoned_ttl_ms``: a transaction with no commit after this much
-      processing-time idles out and its buffer is DROPPED — the rollback
-      analog (a crashed writer's dangling transaction must never reach
-      the sink).
-
-    State = (committed flag, pickled pandas frame of buffered rows):
-    opaque binary to the state store, bounded by OPEN-transaction size
-    (binlog transactions are writer-batch sized), not stream length. On a
-    real cluster the state store is RocksDB; the buffered bytes per key
-    are what a NiFi ONE_TRANSACTION_PER_FLOWFILE writer would hold on
-    heap per in-flight transaction.
-    """
-    import pickle
-
-    out_schema = df.schema
-    state_schema = "committed boolean, buf binary"
-    boundary = [commit_op] + ([begin_op] if begin_op else [])
-
-    def fn(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()  # abandoned transaction: drop its buffer
-            return
-        (txn,) = key
-        if txn is not None and pd.isna(txn):  # null key may surface as NaN
-            txn = None
-        committed, buf = state.get if state.exists else (False, None)
-        saw_commit = bool(committed)
-        parts: list[pd.DataFrame] = []
-        if buf is not None:
-            parts.append(pickle.loads(bytes(buf)))
-        for pdf in pdfs:
-            if txn is None:
-                data = pdf[~pdf[op_col].isin(boundary)]
-                if len(data):
-                    yield data
-                continue
-            if (pdf[op_col] == commit_op).any():
-                saw_commit = True
-            data = pdf[~pdf[op_col].isin(boundary)]
-            if len(data):
-                parts.append(data)
-        if txn is None:
-            return
-        if saw_commit:
-            for p in parts:
-                if len(p):
-                    yield p
-            state.update((True, None))
-        elif parts:
-            state.update((False, pickle.dumps(pd.concat(parts, ignore_index=True))))
-        if abandoned_ttl_ms is not None:
-            state.setTimeoutDuration(abandoned_ttl_ms)
-
-    return df.groupBy(txn_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if abandoned_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
 def stateful_detect_duplicate(
     df: DataFrame,
     key_cols: list[str],

@@ -245,3 +245,135 @@ def test_index_compaction_error_fails_batch_after_view_refresh(spark, tmp_path, 
         tuple(r) for r in minhash_dedup_pairs(docs, "conv_id", "transcript").collect()
     )
     assert want and got == want
+
+
+def _txn_events(spark, rows):
+    """Transactional events from ``(seq, op, txn_id, conv_id, turn_idx,
+    text)``; commit markers (op 'C') carry no key."""
+    return spark.createDataFrame(
+        [(seq, op, TS0, conv, turn, "user", text, None, "f", seq, None, txn)
+         for seq, op, txn, conv, turn, text in rows],
+        SCHEMA + ", txn_id long",
+    )
+
+
+@pytest.mark.parametrize("sink_mode", SINK_MODES)
+def test_txn_pending_store_durable_before_sink_commit(spark, tmp_path, sink_mode, monkeypatch):
+    """A transaction opens in batch 0 and commits in batch 1. The
+    pending-store write of batch 0 fails once: the batch must fail before
+    its sink commits, or the replay of batch 0 would be a no-op, batch 1
+    would never see the carried half of the transaction, and only part
+    of it would apply."""
+    b0 = _txn_events(spark, [
+        (1, "I", 1, "a", 0, "one"), (2, "C", 1, None, None, None),
+        (3, "I", 2, "b", 0, "two, first half"),
+    ])
+    b1 = _txn_events(spark, [
+        (4, "I", 2, "b", 1, "two, second half"), (5, "C", 2, None, None, None),
+        (6, "I", 3, "c", 0, "three"), (7, "C", 3, None, None, None),
+    ])
+    paths = (str(tmp_path / "t"), str(tmp_path / "ck"))
+    kw = dict(n_buckets=4, sink_mode=sink_mode, txn_consistent=True)
+    real_gate = CdcPipeline._txn_gate
+    failed = []
+
+    def gate_failing_once(self, flagged, batch_id):
+        admitted, persist = real_gate(self, flagged, batch_id)
+
+        def persist_failing_once():
+            if not failed:
+                failed.append(batch_id)
+                raise RuntimeError("pending-store write failed")
+            persist()
+
+        return admitted, persist_failing_once
+
+    monkeypatch.setattr(CdcPipeline, "_txn_gate", gate_failing_once)
+    p = CdcPipeline(spark, *paths, **kw)
+    with pytest.raises(RuntimeError, match="pending-store write failed"):
+        p.apply_batch(b0, batch_id=0)
+    assert not p.table.exists()  # nothing committed ahead of the carryover
+
+    p2 = CdcPipeline(spark, *paths, **kw)  # restarted driver replays batch 0
+    p2.apply_batch(b0, batch_id=0)
+    p2.apply_batch(b1, batch_id=1)
+    events = b0.unionByName(b1).filter(F.col("op") != "C").toPandas()
+    assert_final_state_equal(
+        p2.table.read().select(*COLS).toPandas(), pandas_fold(events)
+    )
+    assert p2.pending_report().count() == 0
+
+
+def _dlq_rows(spark, table_path):
+    return sorted(
+        (r.batch_id, r.source_pos, r.reason)
+        for r in spark.read.parquet(f"{table_path}/_dlq").collect()
+    )
+
+
+@pytest.mark.parametrize("sink_mode", SINK_MODES)
+def test_dlq_rows_survive_crash_after_sink_commit(spark, tmp_path, sink_mode, monkeypatch):
+    """A crash between the sink commit and the DLQ write must not lose the
+    batch's bad rows: the replay heal re-writes them, and however often
+    the batch replays each bad row is in the DLQ once."""
+    def event(pos, **e):
+        return (json.dumps({"timestamp": "2024-01-01T00:00:00.000Z", **e}), "f", pos)
+
+    batch = spark.createDataFrame(
+        [
+            event(0, type="I", seq=1, conv_id="c0", turn_idx=0, role="user", text="hi"),
+            ("not json at all}", "f", 1),
+            event(2, type="U", seq=3),  # no key
+        ],
+        "payload_json string, source_file string, source_pos long",
+    )
+    paths = (str(tmp_path / "t"), str(tmp_path / "ck"))
+    kw = dict(n_buckets=4, sink_mode=sink_mode, from_json_payload=True)
+    real_write = CdcPipeline._write_dlq
+    calls = []
+
+    def write_crashing_once(self, *a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("crash before the DLQ write")
+        return real_write(self, *a, **k)
+
+    monkeypatch.setattr(CdcPipeline, "_write_dlq", write_crashing_once)
+    p = CdcPipeline(spark, *paths, **kw)
+    with pytest.raises(RuntimeError, match="crash before the DLQ write"):
+        p.apply_batch(batch, batch_id=0)
+    assert p.table.last_batch_id() == 0  # the sink had committed
+
+    want = [(0, 1, "unparseable-or-missing-key"), (0, 2, "unparseable-or-missing-key")]
+    for _ in range(2):  # restarted driver replays the batch, then again
+        m = CdcPipeline(spark, *paths, **kw).apply_batch(batch, batch_id=0)
+        assert m["n_events"] == 0  # a replay: the data is not re-applied
+        assert _dlq_rows(spark, paths[0]) == want
+    dlq = spark.read.parquet(f"{paths[0]}/_dlq")
+    assert set(dlq.columns) == {"batch_id", "payload_json", "source_file", "source_pos", "reason"}
+
+
+def test_abandoned_txn_dlq_rows_once_after_replay(spark, tmp_path, monkeypatch):
+    """The gate's ``txn-abandoned`` DLQ rows are written before the sink
+    commits; a crash in the sink replays the whole batch, and the replay
+    must not add the abandoned rows a second time."""
+    b0 = _txn_events(spark, [(1, "I", 9, "z", 0, "open"), (2, "I", 9, "z", 1, "open")])
+    b1 = _txn_events(spark, [(3, "I", 1, "a", 0, "one"), (4, "C", 1, None, None, None)])
+    paths = (str(tmp_path / "t"), str(tmp_path / "ck"))
+    kw = dict(n_buckets=4, txn_consistent=True, txn_abandon_after_batches=1)
+    p = CdcPipeline(spark, *paths, **kw)
+    p.apply_batch(b0, batch_id=0)
+
+    def crash(*a, **k):
+        raise RuntimeError("crash in the sink")
+
+    monkeypatch.setattr(p.table, "merge_events", crash)
+    with pytest.raises(RuntimeError, match="crash in the sink"):
+        p.apply_batch(b1, batch_id=1)
+
+    p2 = CdcPipeline(spark, *paths, **kw)
+    p2.apply_batch(b1, batch_id=1)
+    assert _dlq_rows(spark, paths[0]) == [(1, 1, "txn-abandoned"), (1, 2, "txn-abandoned")]
+    assert sorted(tuple(r) for r in p2.table.read().select("conv_id", "text").collect()) == [
+        ("a", "one")
+    ]

@@ -534,29 +534,34 @@ def test_iceberg_evolve_sql_statements_pinned():
         iceberg_evolve_sql("t", current, dict(current, role=T.LongType()), [])
 
 
-def test_partial_topk_impls_identical(spark):
-    """VERDICT r4 #7 — the JVM row_number-over-(query, input-partition)
-    partial top-k and the Arrow accumulator must yield identical final
-    rows/ranks (both keep a superset of the global top-k); the JVM path
-    must stay window+filter (no Python eval) in the plan."""
-    from nifi_spark.operators.similarity import cosine_topk
+def test_two_phase_topk_matches_global_window(spark):
+    """VERDICT r4 #7 — the two-phase ``cosine_topk`` (partial top-k per
+    (query, input partition), then the global window) must yield exactly
+    the rows/ranks of ONE global ``row_number() OVER (PARTITION BY
+    query_id)`` over the same scored input, and its partial stage must
+    stay window+filter in the plan (no Python eval)."""
+    from pyspark.sql import Window as W
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").repartition(8)
-    import nifi_spark.operators.similarity as sim
+    q = emb.filter(F.col("vec_id") < 5)
+    df = cosine_topk(q, emb, k=7)
+    got = sorted(map(tuple, df.collect()))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert "_ptk_pid" in plan
 
-    out = {}
-    for impl in ("jvm", "arrow"):
-        old = sim.PARTIAL_TOPK_IMPL
-        sim.PARTIAL_TOPK_IMPL = impl
-        try:
-            df = cosine_topk(emb.filter(F.col("vec_id") < 5), emb, k=7)
-            out[impl] = sorted(map(tuple, df.collect()))
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            if impl == "jvm":
-                assert "MapInPandas" not in plan
-                assert "_ptk_pid" in plan
-            else:
-                assert "MapInPandas" in plan
-        finally:
-            sim.PARTIAL_TOPK_IMPL = old
-    assert out["jvm"] == out["arrow"] and len(out["jvm"]) == 35
+    scored = (
+        F.broadcast(q.select(F.col("vec_id").alias("query_id"),
+                             F.col("embedding").alias("_qv")))
+        .crossJoin(emb.select(F.col("vec_id").alias("neighbor_id"),
+                              F.col("embedding").alias("_cv")))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos_sim", F.round(cosine(F.col("_qv"), F.col("_cv")), 6))
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
+    want = sorted(
+        map(tuple, scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 7)
+            .select(*df.columns).collect())
+    )
+    assert got == want and len(got) == 35

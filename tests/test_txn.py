@@ -1,4 +1,5 @@
-"""Tests: transaction-boundary semantics (batch operators + streaming buffer).
+"""Tests: transaction-boundary semantics (batch operators + the pipeline's
+pending-store txn gate).
 
 Reference semantics under test: CaptureChangeMySQL's BEGIN→COMMIT
 transaction delimiting (CaptureChangeMySQL.java:947-1024) — a
@@ -8,10 +9,13 @@ dangling (uncommitted) transaction never does.
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import types as T
 
 from nifi_spark.operators.txn import txn_complete_filter, txn_group
-from nifi_spark.streaming.stateful import stateful_txn_buffer
+from nifi_spark.schema import CHANGE_EVENTS_TXN
+from nifi_spark.streaming.job import CdcPipeline
 
 TXN_SCHEMA = T.StructType(
     [
@@ -70,75 +74,94 @@ def test_txn_group_orders_and_drops_open_txns(spark):
     assert g.merged == "first,second"
 
 
-def _seg(spark, tmp_path, name, rows):
-    df = spark.createDataFrame(rows, TXN_SCHEMA)
-    df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "feed" / name))
-
-
-def _drain(spark, tmp_path, qname, **buffer_kw):
-    stream = (
-        spark.readStream.schema(TXN_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "feed" / "*"))
-    )
-    out = stateful_txn_buffer(stream, **buffer_kw)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {qname} ORDER BY seq").collect()
-
-
-def test_stateful_txn_buffer_holds_until_commit_across_batches(spark, tmp_path):
-    # batch 1: txn 10 data only (held), txn 20 data+commit (flows), free row
-    _seg(
-        spark, tmp_path, "b1",
+def _gate_batch(spark, rows):
+    """A driver-local micro-batch of the transactional feed from
+    ``(seq, op, txn_id, conv_id, turn_idx, text)`` tuples; marker rows
+    carry no key."""
+    ts = datetime.datetime(2024, 1, 1)
+    return spark.createDataFrame(
         [
-            (1, "U", 10, "c1", "a"),
-            (2, "U", 20, "c2", "x"),
-            (3, "C", 20, None, None),
-            (4, "U", None, "c3", "free"),
+            (seq, op, ts, conv, turn, "user", text, None, "f", seq, None, txn)
+            for seq, op, txn, conv, turn, text in rows
         ],
+        CHANGE_EVENTS_TXN,
     )
-    # batch 2: more txn 10 data + its commit → everything flushes
-    _seg(
-        spark, tmp_path, "b2",
-        [(5, "U", 10, "c1", "b"), (6, "C", 10, None, None)],
+
+
+def _gate_pipeline(spark, tmp_path):
+    return CdcPipeline(
+        spark, str(tmp_path / "t"), str(tmp_path / "ck"),
+        n_buckets=4, txn_consistent=True,
     )
-    rows = _drain(spark, tmp_path, "txn_cross_batch")
-    assert [(r.seq, r.text) for r in rows] == [
-        (1, "a"), (2, "x"), (4, "free"), (5, "b")
-    ]
-    assert all(r.op == "U" for r in rows)  # boundary rows consumed
 
 
-def test_stateful_txn_buffer_straggler_after_commit_passes(spark, tmp_path):
-    _seg(spark, tmp_path, "b1", [(1, "U", 10, "c1", "a"), (2, "C", 10, None, None)])
-    # replay-overlap straggler for the already-committed txn 10
-    _seg(spark, tmp_path, "b2", [(3, "U", 10, "c1", "late")])
-    rows = _drain(spark, tmp_path, "txn_straggler")
-    assert [(r.seq, r.text) for r in rows] == [(1, "a"), (3, "late")]
+def _applied(p):
+    if not p.table.exists():
+        return []
+    return sorted(
+        (r.conv_id, r.turn_idx, r.text)
+        for r in p.table.read().select("conv_id", "turn_idx", "text").collect()
+    )
 
 
-import pytest
+def _held(p):
+    return sorted((r.txn_id, r.n_events) for r in p.pending_report().collect())
 
 
-@pytest.mark.parametrize("via_state", [False, True], ids=["jvm-gate", "stateful"])
-def test_pipeline_txn_consistent_end_to_end(spark, tmp_path, via_state):
+def test_txn_gate_holds_until_commit_across_batches(spark, tmp_path):
+    p = _gate_pipeline(spark, tmp_path)
+    # batch 1: txn 10 data only (held), txn 20 data+commit (applies), and
+    # a non-transactional row (applies)
+    p.apply_batch(_gate_batch(spark, [
+        (1, "U", 10, "c1", 0, "a"),
+        (2, "U", 20, "c2", 0, "x"),
+        (3, "C", 20, None, None, None),
+        (4, "U", None, "c3", 0, "free"),
+    ]), batch_id=0)
+    assert _applied(p) == [("c2", 0, "x"), ("c3", 0, "free")]
+    assert _held(p) == [(10, 1)]
+    # batch 2: more txn 10 data + its commit → the whole txn applies
+    p.apply_batch(_gate_batch(spark, [
+        (5, "U", 10, "c1", 1, "b"), (6, "C", 10, None, None, None),
+    ]), batch_id=1)
+    assert _applied(p) == [
+        ("c1", 0, "a"), ("c1", 1, "b"), ("c2", 0, "x"), ("c3", 0, "free")
+    ]  # boundary rows consumed: no key-less row reached the table
+    assert _held(p) == []
+
+
+def test_txn_gate_straggler_after_commit_passes(spark, tmp_path):
+    p = _gate_pipeline(spark, tmp_path)
+    p.apply_batch(_gate_batch(spark, [
+        (1, "U", 10, "c1", 0, "a"), (2, "C", 10, None, None, None),
+    ]), batch_id=0)
+    # a straggler of the already-committed txn 10 one batch later: the
+    # carried commit marker (txn_marker_keep) still admits it
+    p.apply_batch(_gate_batch(spark, [(3, "U", 10, "c1", 1, "late")]), batch_id=1)
+    assert _applied(p) == [("c1", 0, "a"), ("c1", 1, "late")]
+    assert _held(p) == []
+
+
+def test_txn_gate_dangling_txn_never_applies(spark, tmp_path):
+    p = _gate_pipeline(spark, tmp_path)
+    p.apply_batch(_gate_batch(spark, [
+        (1, "U", 10, "c1", 0, "a"), (2, "B", 11, None, None, None),
+    ]), batch_id=0)
+    p.apply_batch(_gate_batch(spark, [(3, "U", 11, "c2", 0, "also-open")]), batch_id=1)
+    assert _applied(p) == []
+    # held, not dropped: both open transactions stay visible
+    assert _held(p) == [(10, 1), (11, 1)]
+
+
+def test_pipeline_txn_consistent_end_to_end(spark, tmp_path):
     """Full CDC replay with transaction-delimited feed: only committed
     transactions' events reach the table (dangling ones never apply),
-    holding works across micro-batches, and replay stays idempotent —
-    under BOTH implementations (JVM pending-store gate / stateful buffer)."""
+    holding works across micro-batches, and replay stays idempotent."""
     from nifi_spark.feedgen import (
         generate_change_feed,
         materialize_feed,
         with_transactions,
     )
-    from nifi_spark.streaming.job import CdcPipeline
     from .oracle import assert_final_state_equal, pandas_fold
 
     SPAN, DANGLING_MOD = 500_000, 7
@@ -149,7 +172,7 @@ def test_pipeline_txn_consistent_end_to_end(spark, tmp_path, via_state):
 
     p = CdcPipeline(
         spark, str(tmp_path / "table"), str(tmp_path / "ckpt"),
-        n_buckets=8, txn_consistent=True, txn_via_state=via_state,
+        n_buckets=8, txn_consistent=True,
     )
     q = p.start(feed_dir, max_files_per_trigger=1, available_now=True)
     q.awaitTermination()
@@ -173,15 +196,14 @@ def test_pipeline_txn_consistent_end_to_end(spark, tmp_path, via_state):
     v = p.table.current_version()
     p2 = CdcPipeline(
         spark, str(tmp_path / "table"), str(tmp_path / "ckpt"),
-        n_buckets=8, txn_consistent=True, txn_via_state=via_state,
+        n_buckets=8, txn_consistent=True,
     )
     q2 = p2.start(feed_dir, max_files_per_trigger=1, available_now=True)
     q2.awaitTermination()
     assert p2.table.current_version() == v
 
 
-@pytest.mark.parametrize("via_state", [False, True], ids=["jvm-gate", "stateful"])
-def test_pipeline_txn_consistent_json_payload(spark, tmp_path, via_state):
+def test_pipeline_txn_consistent_json_payload(spark, tmp_path):
     """Same scenario through the raw-JSON normalization path: commit
     markers classify via their payload and are consumed by the gate."""
     from nifi_spark.feedgen import (
@@ -189,7 +211,6 @@ def test_pipeline_txn_consistent_json_payload(spark, tmp_path, via_state):
         materialize_feed,
         with_transactions,
     )
-    from nifi_spark.streaming.job import CdcPipeline
     from .oracle import assert_final_state_equal, pandas_fold
 
     SPAN, DANGLING_MOD = 800_000, 5
@@ -201,7 +222,6 @@ def test_pipeline_txn_consistent_json_payload(spark, tmp_path, via_state):
     p = CdcPipeline(
         spark, str(tmp_path / "table"), str(tmp_path / "ckpt"),
         n_buckets=8, txn_consistent=True, from_json_payload=True,
-        txn_via_state=via_state,
     )
     q = p.start(feed_dir, max_files_per_trigger=1, available_now=True)
     q.awaitTermination()
@@ -214,13 +234,6 @@ def test_pipeline_txn_consistent_json_payload(spark, tmp_path, via_state):
         .toPandas()
     )
     assert_final_state_equal(got, pandas_fold(committed))
-
-
-def test_stateful_txn_buffer_dangling_txn_never_emits(spark, tmp_path):
-    _seg(spark, tmp_path, "b1", [(1, "U", 10, "c1", "a"), (2, "B", 11, None, None)])
-    _seg(spark, tmp_path, "b2", [(3, "U", 11, "c2", "also-open")])
-    rows = _drain(spark, tmp_path, "txn_dangling")
-    assert rows == []
 
 
 def test_jvm_gate_empty_generation_is_skipped(spark, tmp_path):
@@ -236,7 +249,6 @@ def test_jvm_gate_empty_generation_is_skipped(spark, tmp_path):
         materialize_feed,
         with_transactions,
     )
-    from nifi_spark.streaming.job import CdcPipeline
 
     feed = generate_change_feed(spark, n_conversations=10, max_turns=4, max_edits=2)
     # one transaction per whole segment: every txn commits inside its batch
