@@ -16,20 +16,8 @@ then per key); for non-algebraic functions, bound group size upstream.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def grouped_apply(
-    df: DataFrame,
-    keys: list[str],
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-) -> DataFrame:
-    """Thin, typed wrapper over ``groupBy(keys).applyInPandas(fn, schema)``."""
-    return df.groupBy(*keys).applyInPandas(fn, schema=schema)
 
 
 def per_key_value_stats(

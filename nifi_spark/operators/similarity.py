@@ -166,14 +166,6 @@ def _sig_expr(vec: Column, p0: int, n_planes: int, dim: int) -> Column:
     return F.aggregate(terms, F.lit(0), lambda a, b: a + b).cast("long")
 
 
-def lsh_signature(
-    df: DataFrame, vec_col: str = "embedding", n_planes: int = 8, dim: int = 64,
-    out_col: str = "lsh_sig",
-) -> DataFrame:
-    """Sign signature: bit p = 1 iff dot(vec, hyperplane_p) > 0."""
-    return df.withColumn(out_col, _sig_expr(F.col(vec_col), 0, n_planes, dim))
-
-
 def _table_sigs(
     df: DataFrame, vec_col: str, n_tables: int, planes_per_table: int, dim: int
 ) -> DataFrame:

@@ -34,19 +34,23 @@ table over parquet — the Iceberg model re-expressed, not a toy:
   temp name and moved into place with Hadoop ``rename`` (fails when the
   destination exists — atomic on HDFS, see fsio.py for the store-by-store
   contract). A losing racer re-reads the new head and REBASES: the builder
-  callback receives the current head manifest, re-derives the untouched-
-  bucket file map and re-checks idempotency against it, and only then
-  restamps — mirroring Iceberg's re-validate-and-reapply on
-  ``CommitFailedException`` (reference nifi-iceberg-processors
-  PutIceberg.java:367-383). When the concurrent commit touched an
+  callback receives the current head manifest, re-checks idempotency and
+  the buckets it rewrote against it, and only then restamps through the
+  one manifest builder (``_stamp``) — mirroring Iceberg's
+  re-validate-and-reapply on ``CommitFailedException`` (reference
+  nifi-iceberg-processors PutIceberg.java:367-383). When the concurrent commit touched an
   overlapping bucket the rewrite is stale and the builder raises
   :class:`CommitConflict` instead of silently dropping the other writer's
   rows — the caller must re-run the merge against the new head.
 - **Idempotent commit IDs**: each commit stamps ``summary.batch_id`` — the
   generalization of NiFi's ``nifi-flowfile-uuid`` snapshot-summary marker
-  (PutIceberg.java:89-93, 392-399). :meth:`LakeTable.last_batch_id` lets a
-  restarted job skip already-applied batches; the check is re-evaluated
-  against the head INSIDE the commit loop, so replay-vs-race is also safe.
+  (PutIceberg.java:89-93, 392-399). A batch commit writes its own
+  summary; every other commit (compaction, expiry, DDL, rebucket)
+  carries the head's forward, so the marker and whatever the batch
+  recorded beside it (the streaming engine's watermark) stay on the head.
+  :meth:`LakeTable.last_batch_id` lets a restarted job skip
+  already-applied batches; the check is re-evaluated against the head
+  INSIDE the commit loop, so replay-vs-race is also safe.
 - **Bucket partitioning + pruning**: rows are hash-bucketed on the first
   key column (``bucket(conv_id)`` per FIXTURES.md §1); a merge rewrites
   only the buckets its batch touches — at 10^10 rows and 1024 buckets a
@@ -113,6 +117,9 @@ INTERNAL_COLS = ["_seq", "_deleted", "_bucket"]
 # many small JSON reads (warm = 0: manifests are immutable, cached by
 # version).
 MAX_MANIFEST_DEPTH = 16
+# ``LakeTable._stamp``'s default ``batch_id``: the commit is not a batch
+# commit, so it carries the head's summary forward.
+_CARRY = object()
 
 
 def _stat_norm(v):
@@ -402,6 +409,13 @@ class LakeTable:
         b = manifest.get("summary", {}).get("batch_id")
         return int(b) if b is not None else None
 
+    @classmethod
+    def _is_replay(cls, manifest: dict | None, batch_id: int | None) -> bool:
+        """The exactly-once check: ``batch_id`` is at or below the batch
+        id ``manifest`` (the head) has already applied."""
+        last = cls._batch_id_of(manifest)
+        return batch_id is not None and last is not None and batch_id <= last
+
     def schema(self, version: int | None = None) -> T.StructType | None:
         m = self._manifest(version)
         return T.StructType.fromJson(json.loads(m["schema"])) if m else None
@@ -449,6 +463,109 @@ class LakeTable:
             time.sleep(backoff)
             backoff = min(backoff * 2, 2.0)
         raise CommitConflict(f"could not commit after {max_retries} retries")
+
+    def _stamp(
+        self,
+        head: dict | None,
+        files: dict[str, list[str]],
+        *,
+        summary: dict | Callable[[], dict] | None = None,
+        batch_id=_CARRY,
+        new_stats: dict[str, dict] | None = None,
+        new_delta: list[str] = (),
+        touched: list[int] = (),
+        full: bool = False,
+        flatten: bool = False,
+        schema: str | None = None,
+        n_buckets: int | None = None,
+        key_cols: list[str] | None = None,
+    ) -> dict:
+        """The manifest every commit stamps on top of ``head`` (None for a
+        table's first commit). ``files`` maps the buckets the commit
+        rewrote to their new files; ``full`` says it is the whole map.
+
+        - Chain: a delta manifest (``files`` plus a ``base`` pointer to
+          the head) unless the commit is full or its chain would pass
+          ``MAX_MANIFEST_DEPTH`` (or ``flatten`` asks), which writes a
+          full manifest with the chain reset.
+        - Merge-on-read bookkeeping: a rewritten bucket leaves
+          ``mor_buckets``; ``new_delta`` files join ``delta_files`` and
+          their ``touched`` buckets join ``mor_buckets``; the delta list
+          empties once no bucket needs it. A full commit starts clean.
+        - ``file_stats``: the new files' on a delta manifest (reads walk
+          the chain), the whole live map's on a flattened one.
+        - ``summary``: a batch commit (``batch_id`` given) writes
+          ``summary`` plus ``batch_id``. Every other commit carries the
+          head's summary forward with ``summary`` as its own marker, so
+          the applied batch id and the engine watermark survive
+          compaction, expiry, DDL and layout commits. A callable
+          ``summary`` is evaluated here, after the caller's write.
+        """
+        if callable(summary):
+            summary = summary()
+        if batch_id is _CARRY:
+            summary = {"batch_id": None, **(head or {}).get("summary", {}), **(summary or {})}
+        else:
+            summary = {**(summary or {}), "batch_id": batch_id}
+        base, depth, flat, mor = None, 0, False, set()
+        if head is not None and not full:
+            mor = {int(b) for b in head.get("mor_buckets", [])} - {int(b) for b in files}
+            depth = int(head.get("depth", 0)) + 1
+            if flatten or depth > MAX_MANIFEST_DEPTH:
+                files = {**self._resolve_files(head["version"]), **files}
+                depth, flat = 0, True
+            else:
+                base = head["version"]
+        delta_files = (list(head.get("delta_files", [])) if mor else []) + list(new_delta)
+        mor |= {int(b) for b in touched}
+        stats = dict(new_stats or {})
+        if flat:  # no base to walk: carry every live file's stats
+            live = {f for fl in files.values() for f in fl} | set(delta_files)
+            stats = {
+                p: s for p, s in self._resolve_stats(head["version"]).items() if p in live
+            } | stats
+        head = head or {}
+        return {
+            "schema": schema or head["schema"],
+            "n_buckets": int(n_buckets or head.get("n_buckets", self._req_buckets)),
+            "key_cols": list(key_cols or head["key_cols"]),
+            "files": files,
+            "base": base,
+            "depth": depth,
+            "mor_buckets": sorted(mor),
+            "delta_files": delta_files,
+            "stats_cols": list(head.get("stats_cols") or self._req_stats_cols),
+            "file_stats": stats,
+            "summary": summary,
+            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+
+    def _check_rebase(
+        self,
+        head: dict | None,
+        base_version: int,
+        base_files: dict[str, list[str]],
+        base_delta: list[str],
+        buckets: list[int],
+        what: str,
+    ) -> None:
+        """Raise :class:`CommitConflict` when a rewrite of ``buckets`` read
+        at ``base_version`` can no longer rebase onto ``head``: a commit
+        since then rewrote one of those buckets, or appended delta rows
+        (possibly for them) — either way the rewrite would drop its rows.
+        ``what`` names the operation to re-run."""
+        if head is None:
+            raise CommitConflict(f"table disappeared during {what}")
+        if head["version"] == base_version:
+            return
+        head_files = self._resolve_files(head["version"])
+        for b in buckets:
+            if head_files.get(str(b), []) != base_files.get(str(b), []):
+                raise CommitConflict(
+                    f"concurrent commit rewrote bucket {b} — re-run {what}"
+                )
+        if head.get("delta_files", []) != base_delta:
+            raise CommitConflict(f"concurrent append during {what} — re-run {what}")
 
     # ---------- reads ----------
 
@@ -592,29 +709,6 @@ class LakeTable:
             cached.update(m.get("file_stats") or {})
             self._scache[version] = cached
         return cached
-
-    def _merged_stats(
-        self,
-        new_stats: dict[str, dict],
-        head: dict | None,
-        files: dict[str, list[str]],
-        delta_files: list[str] | None,
-        flattened: bool,
-    ) -> dict[str, dict]:
-        """The manifest ``file_stats`` entry: just the new files' stats on
-        a delta manifest (resolution walks the chain), the full live map
-        when the chain flattens (base=None would otherwise orphan every
-        older file's stats)."""
-        if not flattened:
-            return new_stats
-        live = {f for fl in files.values() for f in fl} | set(delta_files or [])
-        carried = {
-            p: s
-            for p, s in self._resolve_stats((head or {}).get("version", 0)).items()
-            if p in live
-        }
-        carried.update(new_stats)
-        return carried
 
     @staticmethod
     def _norm_filter(stats_filter: dict) -> dict:
@@ -953,10 +1047,12 @@ class LakeTable:
         the caller knows no stale event below that seq can still arrive
         (the watermark contract); newer tombstones are kept so late stale
         updates still lose. Commits a new snapshot; readers of old versions
-        are unaffected (copy-on-write). If any writer commits between the
-        snapshot this compaction read and its own commit, the compaction
-        ABORTS with :class:`CommitConflict` (its rewrite would drop the
-        concurrent merge's rows) — compaction is cheap to re-run.
+        are unaffected (copy-on-write); the manifest is a full one (chain
+        reset). If a commit between the snapshot this compaction read and
+        its own commit rewrote a bucket or appended delta rows, the
+        compaction ABORTS with :class:`CommitConflict` (its rewrite would
+        drop that commit's rows) — compaction is cheap to re-run. Same
+        body as :meth:`compact_buckets`, over every bucket.
 
         ``sort_by`` clusters each bucket's rows by the given columns
         before writing (≙ Iceberg's table sort order applied by
@@ -967,51 +1063,10 @@ class LakeTable:
         nothing can be skipped. One local sort per bucket partition; no
         extra shuffle.
         """
-        base_version = self.current_version()
-        base_m = self._manifest(base_version) or {}
-        df = self.read_raw(version=base_version)
-        if base_m.get("mor_buckets"):
-            # fold unfolded MOR deltas away — compaction is where
-            # merge-on-read debt is repaid (here: the whole table at once)
-            df = self._lww_fold_read(df, base_m["key_cols"])
-        if purge_tombstones_below_seq is not None:
-            df = df.filter(
-                ~(
-                    F.coalesce(F.col("_deleted"), F.lit(False))
-                    & (F.col("_seq") < purge_tombstones_below_seq)
-                )
-            )
-        files = self._write_buckets(
-            df,
-            f"v{uuid.uuid4().hex[:12]}",
-            sort_by=sort_by,
-            max_records_per_file=max_records_per_file,
+        return self._rewrite(
+            None, purge_tombstones_below_seq, "compact",
+            sort_by=sort_by, max_records_per_file=max_records_per_file,
         )
-        new_stats = self._collect_stats(files)
-        base_schema = json.dumps(self.schema(base_version).jsonValue())
-        base_summary = self.snapshot_summary(base_version)
-
-        def build(head: dict | None) -> dict:
-            if head is None or head["version"] != base_version:
-                raise CommitConflict(
-                    "concurrent commit during compaction "
-                    f"(read v{base_version}, head moved) — re-run compact()"
-                )
-            return {
-                "schema": base_schema,
-                "n_buckets": self.n_buckets,
-                "key_cols": base_m.get("key_cols"),
-                "files": files,
-                "depth": 0,  # compaction writes a full manifest: chain reset
-                "mor_buckets": [],
-                "delta_files": [],  # all deltas folded into bucket files
-                "stats_cols": self.stats_cols,
-                "file_stats": new_stats,
-                "summary": {**base_summary, "compaction": True},
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-
-        return self._commit(build)
 
     def compact_buckets(
         self, buckets: list[int], purge_tombstones_below_seq: int | None = None
@@ -1026,20 +1081,38 @@ class LakeTable:
         (appends included — their rows would be dropped by our rewrite);
         cheap to re-run. Returns None when the buckets are empty.
         """
+        return self._rewrite(buckets, purge_tombstones_below_seq, "compact_buckets")
+
+    def _rewrite(
+        self,
+        buckets: list[int] | None,
+        purge_tombstones_below_seq: int | None,
+        what: str,
+        **write_opts,
+    ) -> int | None:
+        """The compaction body: fold ``buckets`` (None = the whole table,
+        committed as a full manifest) to one generation of bucket files,
+        optionally purging old tombstones. Returns None when there is
+        nothing to rewrite."""
         base_version = self.current_version()
-        base_m = self._manifest(base_version) or {}
-        buckets = sorted(int(b) for b in buckets)
-        base_files = self._bucket_files(base_version)
-        base_mor = {int(b) for b in base_m.get("mor_buckets", [])}
-        has_delta_rows = bool(base_m.get("delta_files")) and bool(
-            base_mor & set(buckets)
+        base_m = self._manifest(base_version)
+        if base_m is None:
+            return None
+        whole = buckets is None
+        buckets = (
+            list(range(self.n_buckets)) if whole else sorted(int(b) for b in buckets)
         )
-        if not has_delta_rows and not any(
+        base_files = self._resolve_files(base_version)
+        base_delta = base_m.get("delta_files", [])
+        mor = {int(b) for b in base_m.get("mor_buckets", [])} & set(buckets)
+        if not whole and not (base_delta and mor) and not any(
             base_files.get(str(b)) for b in buckets
         ):
             return None
-        df = self.read_raw(buckets=buckets, version=base_version)
-        if set(buckets) & {int(b) for b in base_m.get("mor_buckets", [])}:
+        df = self.read_raw(buckets=None if whole else buckets, version=base_version)
+        if mor:
+            # fold the merge-on-read generations away: compaction is where
+            # that read debt is repaid
             df = self._lww_fold_read(df, base_m["key_cols"])
         if purge_tombstones_below_seq is not None:
             df = df.filter(
@@ -1048,58 +1121,16 @@ class LakeTable:
                     & (F.col("_seq") < purge_tombstones_below_seq)
                 )
             )
-        new_files = self._write_buckets(df, f"v{uuid.uuid4().hex[:12]}")
-        new_stats = self._collect_stats(
-            {str(b): new_files.get(str(b), []) for b in buckets}
-        )
+        new_files = self._write_buckets(df, f"v{uuid.uuid4().hex[:12]}", **write_opts)
+        files = {str(b): new_files.get(str(b), []) for b in buckets}
+        new_stats = self._collect_stats(files)
 
         def build(head: dict | None) -> dict:
-            if head is None:
-                raise CommitConflict("table disappeared during compaction")
-            if head["version"] != base_version:
-                head_files = self._resolve_files(head["version"])
-                for b in buckets:
-                    if head_files.get(str(b), []) != base_files.get(str(b), []):
-                        raise CommitConflict(
-                            f"concurrent commit touched bucket {b} — re-run"
-                        )
-                if head.get("delta_files", []) != base_m.get("delta_files", []):
-                    # a racer appended new delta rows (possibly for our
-                    # buckets) after our read — our rewrite would drop them
-                    raise CommitConflict(
-                        "concurrent append during bucket compaction — re-run"
-                    )
-            delta = {str(b): new_files.get(str(b), []) for b in buckets}
-            depth = int(head.get("depth", 0)) + 1
-            if depth > MAX_MANIFEST_DEPTH:
-                files = dict(self._resolve_files(head["version"]))
-                files.update(delta)
-                base, depth2 = None, 0
-            else:
-                files, base, depth2 = delta, head["version"], depth
-            mor = sorted(
-                {int(x) for x in head.get("mor_buckets", [])} - set(buckets)
+            self._check_rebase(head, base_version, base_files, base_delta, buckets, what)
+            return self._stamp(
+                head, files, new_stats=new_stats, summary={"compaction": True},
+                full=whole,
             )
-            keep_delta = [] if not mor else head.get("delta_files", [])
-            return {
-                "schema": head["schema"],
-                "n_buckets": self.n_buckets,
-                "key_cols": head.get("key_cols"),
-                "files": files,
-                "base": base,
-                "depth": depth2,
-                "mor_buckets": mor,
-                # flat delta files absorb into bucket files only when NO
-                # mor bucket still needs them (their remaining rows are
-                # stale copies, read-filtered by mor membership)
-                "delta_files": keep_delta,
-                "stats_cols": self.stats_cols,
-                "file_stats": self._merged_stats(
-                    new_stats, head, files, keep_delta, base is None
-                ),
-                "summary": {**head.get("summary", {}), "compaction": True},
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
 
         return self._commit(build)
 
@@ -1124,11 +1155,14 @@ class LakeTable:
         # does not chain back through every expired delta. Safe under the
         # single-maintenance-process assumption this method states.
         oldest = min(kept)
-        om = dict(self._manifest(oldest))
+        om = self._manifest(oldest)
         if om.get("base"):
-            om["files"] = dict(self._resolve_files(oldest))
-            om["base"] = None
-            om["depth"] = 0
+            om = {
+                **self._stamp(om, {}, flatten=True),
+                "version": oldest,
+                "snapshot_id": oldest,
+                "created_at": om.get("created_at"),
+            }
             self._io.write_text(self._manifest_path(oldest), json.dumps(om))
             self._mcache[oldest] = om
         frontier = list(kept)
@@ -1290,28 +1324,18 @@ class LakeTable:
             f"v{uuid.uuid4().hex[:12]}",
         )
 
+        new_stats = self._collect_stats(files)
+
         def build(h: dict | None) -> dict:
             if h is None or h["version"] != base_version:
                 raise CommitConflict(
                     "table changed during rebucket — re-run against the new head"
                 )
-            return {
-                "schema": h["schema"],
-                "n_buckets": int(new_n_buckets),
-                "key_cols": key_cols,
-                "files": files,
-                "base": None,
-                "depth": 0,
-                "mor_buckets": [],
-                "delta_files": [],
-                "stats_cols": self.stats_cols,
-                "file_stats": self._collect_stats(files),
-                "summary": {
-                    "rebucketed_from": self.n_buckets,
-                    "batch_id": h.get("summary", {}).get("batch_id"),
-                },
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
+            return self._stamp(
+                h, files, new_stats=new_stats,
+                summary={"rebucketed_from": self.n_buckets},
+                full=True, n_buckets=new_n_buckets,
+            )
 
         version = self._commit(build)
         self._nb = int(new_n_buckets)  # refresh the adopted layout
@@ -1328,22 +1352,15 @@ class LakeTable:
         df = df.withColumn("_bucket", self._bucket_col(key_cols[0]))
         files = self._write_buckets(df, f"v{uuid.uuid4().hex[:12]}")
         schema_json = json.dumps(df.schema.jsonValue())
+        new_stats = self._collect_stats(files)
 
         def build(head: dict | None) -> dict:
             if head is not None:
                 raise CommitConflict("table already exists; use merge_events()")
-            return {
-                "schema": schema_json,
-                "n_buckets": self.n_buckets,
-                "key_cols": key_cols,
-                "files": files,
-                "depth": 0,
-                "mor_buckets": [],
-                "stats_cols": self.stats_cols,
-                "file_stats": self._collect_stats(files),
-                "summary": summary or {},
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
+            return self._stamp(
+                None, files, new_stats=new_stats, summary=summary,
+                schema=schema_json, key_cols=key_cols,
+            )
 
         return self._commit(build)
 
@@ -1365,8 +1382,8 @@ class LakeTable:
         on the data path) and otherwise ignored, so replaying a DDL event
         is a no-op: returns None when nothing new is added. The commit is
         a zero-file delta manifest (O(1) regardless of table size); the
-        head's ``batch_id`` marker carries forward so replay
-        short-circuits stay intact.
+        head's summary (``batch_id``, the engine watermark) carries
+        forward so replay short-circuits stay intact.
         """
         def build(head: dict | None) -> dict | None:
             if head is None:
@@ -1389,31 +1406,11 @@ class LakeTable:
                 + [T.StructField(k, dt, True) for k, dt in new.items()]
                 + [f for f in schema.fields if f.name in INTERNAL_COLS]
             )
-            depth = int(head.get("depth", 0)) + 1
-            if depth > MAX_MANIFEST_DEPTH:
-                files, base, depth = dict(self._resolve_files(head["version"])), None, 0
-            else:
-                files, base = {}, head["version"]
-            return {
-                "schema": json.dumps(evolved.jsonValue()),
-                "n_buckets": self.n_buckets,
-                "key_cols": head["key_cols"],
-                "files": files,
-                "base": base,
-                "depth": depth,
-                "mor_buckets": head.get("mor_buckets", []),
-                "delta_files": head.get("delta_files", []),
-                "stats_cols": self.stats_cols,
-                "file_stats": self._merged_stats(
-                    {}, head, files, head.get("delta_files", []), base is None
-                ),
-                "summary": {
-                    **(extra_summary or {}),
-                    "ddl_added": sorted(new),
-                    "batch_id": head.get("summary", {}).get("batch_id"),
-                },
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
+            return self._stamp(
+                head, {},
+                summary={**(extra_summary or {}), "ddl_added": sorted(new)},
+                schema=json.dumps(evolved.jsonValue()),
+            )
 
         return self._commit(build)
 
@@ -1546,6 +1543,8 @@ class LakeTable:
         ``touched`` may be a list of bucket ids, a zero-arg callable
         evaluated after the delta write (the pipeline's observe() hook),
         or None (a tiny distinct probe over the written delta).
+        ``extra_summary`` may likewise be a callable, evaluated after the
+        write, so the commit can carry numbers observed on it.
 
         Appends NEVER conflict: a rebase just re-targets the new head's
         delta list (LWW-by-_seq makes concurrent appends and even a
@@ -1572,11 +1571,8 @@ class LakeTable:
             folded = events.withColumn("_bucket", self._bucket_col(key_cols[0]))
         else:
             folded = self._fold_events(events, key_cols, seq_col, pre_folded)
-        head0 = self._manifest()
-        if batch_id is not None:
-            last = self._batch_id_of(head0)
-            if last is not None and batch_id <= last:
-                return None  # already applied — exactly-once on replay
+        if self._is_replay(self._manifest(), batch_id):
+            return None  # already applied — exactly-once on replay
 
         delta = folded.select(
             *key_cols,
@@ -1610,10 +1606,8 @@ class LakeTable:
         def build(head: dict | None) -> dict | None:
             if head is None:
                 raise CommitConflict("table disappeared during append")
-            if batch_id is not None:
-                last = self._batch_id_of(head)
-                if last is not None and batch_id <= last:
-                    return None
+            if self._is_replay(head, batch_id):
+                return None
             # schema evolution (additive + Iceberg type widening), derived
             # from the CURRENT head so a rebase picks up a racer's
             # evolution too (driver-only work)
@@ -1623,36 +1617,15 @@ class LakeTable:
                 src_types,
                 key_cols,
             )
-            mor = sorted(
-                {int(x) for x in head.get("mor_buckets", [])} | set(touched)
-            )
             # the new delta file(s) join the manifest's flat delta list —
             # bucket file lists are untouched (that's the whole point);
             # the list is stored in full (bounded by the compaction
             # cadence, which clears it)
-            delta_files = list(head.get("delta_files", [])) + new_paths
-            depth = int(head.get("depth", 0)) + 1
-            if depth > MAX_MANIFEST_DEPTH:
-                files: dict = dict(self._resolve_files(head["version"]))
-                base, depth = None, 0
-            else:
-                files, base = {}, head["version"]
-            return {
-                "schema": json.dumps(evolved.jsonValue()),
-                "n_buckets": self.n_buckets,
-                "key_cols": key_cols,
-                "files": files,
-                "base": base,
-                "depth": depth,
-                "mor_buckets": mor,
-                "delta_files": delta_files,
-                "stats_cols": self.stats_cols,
-                "file_stats": self._merged_stats(
-                    new_stats, head, files, delta_files, base is None
-                ),
-                "summary": {**(extra_summary or {}), "batch_id": batch_id},
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
+            return self._stamp(
+                head, {}, summary=extra_summary, batch_id=batch_id,
+                new_stats=new_stats, new_delta=new_paths, touched=touched,
+                schema=json.dumps(evolved.jsonValue()), key_cols=key_cols,
+            )
 
         return self._commit(build)
 
@@ -1677,18 +1650,10 @@ class LakeTable:
                 # another writer created the table between our probe and
                 # commit; our files ignore its rows — cannot rebase
                 raise CommitConflict("table created concurrently — re-run merge")
-            return {
-                "schema": schema_json,
-                "n_buckets": self.n_buckets,
-                "key_cols": key_cols,
-                "files": files,
-                "depth": 0,
-                "mor_buckets": [],
-                "stats_cols": self.stats_cols,
-                "file_stats": new_stats,
-                "summary": {**(extra_summary or {}), "batch_id": batch_id},
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
+            return self._stamp(
+                None, files, summary=extra_summary, batch_id=batch_id,
+                new_stats=new_stats, schema=schema_json, key_cols=key_cols,
+            )
 
         return self._commit(build)
 
@@ -1697,10 +1662,9 @@ class LakeTable:
         payload_cols, touched: list[int] | None = None,
     ) -> int | None:
         base_version = self.current_version()
-        if batch_id is not None:
-            last = self._batch_id_of(self._manifest(base_version))
-            if last is not None and batch_id <= last:
-                return None  # already applied — exactly-once on replay
+        base_manifest = self._manifest(base_version)
+        if self._is_replay(base_manifest, batch_id):
+            return None  # already applied — exactly-once on replay
 
         # ---- schema evolution: append new payload columns (nullable),
         # widen existing ones along Iceberg promotion chains ----
@@ -1723,7 +1687,6 @@ class LakeTable:
             if touched_files
             else self.spark.createDataFrame([], evolved)
         )
-        base_manifest = self._manifest(base_version) or {}
         base_mor = {int(b) for b in base_manifest.get("mor_buckets", [])}
         base_delta_files = base_manifest.get("delta_files", [])
         mor_touched = base_mor & set(touched)
@@ -1790,12 +1753,13 @@ class LakeTable:
         }
 
         def build(head: dict | None) -> dict | None:
-            if head is None:
-                raise CommitConflict("table disappeared during merge")
-            if batch_id is not None:
-                last = self._batch_id_of(head)
-                if last is not None and batch_id <= last:
-                    return None  # raced with our own replay — already applied
+            if self._is_replay(head, batch_id):
+                return None  # raced with our own replay — already applied
+            # Rebase: safe iff the concurrent commits did not touch the
+            # buckets we rewrote (our rewrite folded base-version data)
+            self._check_rebase(
+                head, base_version, base_files, base_delta_files, touched, "merge"
+            )
             # re-derive the schema against the CURRENT head so a rebase
             # keeps a racer's evolution (their added/widened columns and
             # ours both survive; the widening reader reconciles files)
@@ -1807,53 +1771,12 @@ class LakeTable:
                     key_cols,
                 ).jsonValue()
             )
-            if head["version"] != base_version:
-                # Rebase: safe iff the concurrent commits did not touch the
-                # buckets we rewrote (our rewrite folded base-version data).
-                head_files = self._resolve_files(head["version"])
-                for b in touched:
-                    if head_files.get(str(b), []) != base_files.get(str(b), []):
-                        raise CommitConflict(
-                            f"concurrent commit rewrote bucket {b} — re-run merge"
-                        )
-                if head.get("delta_files", []) != base_delta_files:
-                    # concurrent MOR append — its rows (possibly for our
-                    # buckets) postdate our target read
-                    raise CommitConflict(
-                        "concurrent append during merge — re-run merge"
-                    )
-            delta = {str(b): new_files.get(str(b), []) for b in touched}
-            depth = int(head.get("depth", 0)) + 1
-            if depth > MAX_MANIFEST_DEPTH:
-                # flatten: full manifest, chain reset (bounded resolution)
-                files = dict(self._resolve_files(head["version"]))
-                files.update(delta)
-                base, depth = None, 0
-            else:
-                # delta manifest: O(touched buckets), untouched buckets
-                # resolve through the base pointer
-                files, base = delta, head["version"]
             # a COW rewrite folds its touched buckets back to one generation
-            mor = sorted(
-                {int(x) for x in head.get("mor_buckets", [])} - set(touched)
+            return self._stamp(
+                head, {str(b): new_files.get(str(b), []) for b in touched},
+                summary=extra_summary, batch_id=batch_id, new_stats=new_stats,
+                schema=schema_json, key_cols=key_cols,
             )
-            keep_delta = [] if not mor else head.get("delta_files", [])
-            return {
-                "schema": schema_json,
-                "n_buckets": self.n_buckets,
-                "key_cols": key_cols,
-                "files": files,
-                "base": base,
-                "depth": depth,
-                "mor_buckets": mor,
-                "delta_files": keep_delta,
-                "stats_cols": self.stats_cols,
-                "file_stats": self._merged_stats(
-                    new_stats, head, files, keep_delta, base is None
-                ),
-                "summary": {**(extra_summary or {}), "batch_id": batch_id},
-                "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
 
         return self._commit(build)
 

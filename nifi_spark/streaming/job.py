@@ -9,10 +9,13 @@ Spark restatement of the reference flow
   (≙ CaptureChangeMySQL's binlog file/pos cluster state,
   reference CaptureChangeMySQL.java:1189-1213 updateState); restart resumes
   with no re-read.
-- **watermark** — the engine tracks ``max(ts) - delay`` across batches in a
-  small state file next to the checkpoint; events older than the watermark
-  route to the late count (≙ EnforceOrder wait-timeout → ``skipped``,
-  reference EnforceOrder.java:205) and are excluded from the merge.
+- **watermark** — the engine tracks ``max(ts) - delay`` across batches;
+  the running event-time max rides each batch's sink commit
+  (``summary.max_ts_epoch`` in the table's head manifest, carried forward
+  by maintenance commits), so it can never disagree with the committed
+  data. Events older than the watermark route to the late count
+  (≙ EnforceOrder wait-timeout → ``skipped``, reference
+  EnforceOrder.java:205) and are excluded from the merge.
 - **fold** — salted two-phase last-writer-wins per ``(conv_id, turn_idx)``
   (operators.ordering), keeping delete-winners as tombstone candidates.
 - **apply** — ``foreachBatch``: LakeTable.merge with the streaming
@@ -33,7 +36,6 @@ from __future__ import annotations
 import contextlib
 import functools
 import json
-import os
 import threading
 import time
 
@@ -42,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..fsio import FsIO
 from ..fsio import join as fsio_join
-from ..normalize import _EVENT_JSON_SCHEMA, normalize_json
+from ..normalize import _EVENT_JSON_SCHEMA
 from ..operators.ordering import lww_fold_salted
 from ..schema import CHANGE_EVENTS, KEY_COLS
 from ..sinks.laketable import LakeTable
@@ -256,14 +258,26 @@ class CdcPipeline:
         # pending_report for the observability half).
         self.txn_abandon_after_batches = txn_abandon_after_batches
         self.table_path = table_path
-        # Checkpoint-adjacent state (engine watermark + txn pending store)
+        # Checkpoint-adjacent state (txn pending store, quality verdicts)
         # must live wherever the checkpoint lives — in production that is
         # hdfs:// / s3a:// for driver-failover durability — so all of its
         # IO routes through FsIO (local fast path, Hadoop FS otherwise),
-        # exactly like the LakeTable commit log.
+        # exactly like the LakeTable commit log. The engine watermark is
+        # not here: it rides the table's batch commits (_load_watermark).
         self._ckpt_io = FsIO(spark, checkpoint_dir)
-        self._wm_path = fsio_join(checkpoint_dir, "engine_watermark.json")
         self._pending_dir = fsio_join(checkpoint_dir, "txn_pending")
+        # Legacy-layout guard (one listing): a dead-letter table written
+        # with flat files would make Spark read only those and silently
+        # hide every batch_id=N/reason=R directory written from now on.
+        # Refused before the first batch, so no commit waits on it.
+        dlq = fsio_join(table_path, "_dlq")
+        if any(n.endswith(".parquet") for n in self.table._io.list_names(dlq)):
+            raise ValueError(
+                f"dead-letter table {dlq} holds flat parquet files (the "
+                "layout before per-batch directories); move them under a "
+                "batch_id=<N>/reason=<reason> directory before starting "
+                "the pipeline"
+            )
         # Pre-built Column expression trees, reused every micro-batch.
         # Columns are immutable unresolved expressions, so building the
         # ~40 of them once removes that many Py4J round-trips per batch —
@@ -325,21 +339,29 @@ class CdcPipeline:
             ],
         ]
 
-    # ---------- engine watermark state (auditable, checkpoint-adjacent) ----------
+    # ---------- engine watermark (in the table's head manifest) ----------
 
-    def _load_watermark(self) -> int | None:
-        if self._ckpt_io.exists(self._wm_path):
-            return json.loads(self._ckpt_io.read_text(self._wm_path)).get(
-                "max_ts_epoch"
-            )
-        return None
+    def _load_watermark(self, head: dict | None = None) -> int | None:
+        """The event-time max (epoch seconds) of every batch committed so
+        far: ``summary.max_ts_epoch`` of ``head``, the table's head
+        manifest (read when not given). None before the first commit, and
+        on a table whose head predates the field until its next batch."""
+        if head is None:
+            head = self.table._manifest()
+        return (head or {}).get("summary", {}).get("max_ts_epoch")
 
-    def _store_watermark(self, max_ts_epoch: int) -> None:
-        self._ckpt_io.mkdirs(self.checkpoint_dir)
-        prev = self._load_watermark() or 0
-        self._ckpt_io.write_text(
-            self._wm_path, json.dumps({"max_ts_epoch": max(prev, max_ts_epoch)})
-        )
+    def _batch_summary(self, rows: list, prev_wm: int | None) -> dict:
+        """The record a batch commits with: its admitted and late counts
+        and the running event-time max (the watermark input)."""
+        counts = self._counts(rows)
+        mxs = [int(r["mx"]) for r in rows if r["mx"] is not None]
+        if prev_wm is not None:
+            mxs.append(int(prev_wm))
+        return {
+            "n_events": counts["n_events"],
+            "n_late": counts["n_late"],
+            "max_ts_epoch": max(mxs) if mxs else None,
+        }
 
     # ---------- JVM txn gate (pending store) ----------
 
@@ -359,24 +381,40 @@ class CdcPipeline:
         )
         return path, gens
 
-    def _mark_pending_rows(self, gen_dir: str, n: int) -> None:
-        """Stamp the generation with its row count (observed on the write
-        job itself — no extra job, no local-only footer reads) so the NEXT
-        batch can skip the read+union when the carryover is empty, the
-        steady state of a feed whose transactions commit within a batch."""
+    def _mark_pending_rows(self, gen_dir: str, n: int, max_age: int | None) -> None:
+        """Stamp the generation with its row count and the largest
+        ``_gate_age`` of its open-transaction rows (both observed on the
+        write job itself — no extra job, no local-only footer reads), so
+        the NEXT batch can skip the read+union when the carryover is
+        empty, the steady state of a feed whose transactions commit
+        within a batch, and skip the abandoned-txn write when nothing it
+        carries can expire. ``_NROWS`` reads ``"n age"`` (age -1: no open
+        transaction), or ``"0"`` for an empty generation."""
+        age = -1 if max_age is None else int(max_age)
+        text = f"{int(n)} {age}" if n else "0"
         try:
-            self._ckpt_io.write_text(fsio_join(gen_dir, "_NROWS"), str(int(n)))
+            self._ckpt_io.write_text(fsio_join(gen_dir, "_NROWS"), text)
         except Exception:
             pass  # marker is an optimization; absence just means "read it"
 
-    def _pending_is_empty(self, gen_dir: str) -> bool:
+    def _pending_stamp(self, gen_dir: str | None) -> tuple[int | None, int | None]:
+        """``(rows, max open-txn age)`` of a pending generation, from its
+        ``_NROWS`` stamp: ``(0, -1)`` when there is no generation, None
+        for what the stamp does not tell (missing or unreadable, or the
+        age on a stamp that holds only a non-zero count)."""
+        if gen_dir is None:
+            return 0, -1
         try:
-            marker = fsio_join(gen_dir, "_NROWS")
-            if not self._ckpt_io.exists(marker):
-                return False
-            return int(self._ckpt_io.read_text(marker).strip()) == 0
+            n, *age = (
+                int(x)
+                for x in self._ckpt_io.read_text(fsio_join(gen_dir, "_NROWS")).split()
+            )
         except Exception:
-            return False
+            return None, None
+        return n, age[0] if age else (-1 if n == 0 else None)
+
+    def _pending_is_empty(self, gen_dir: str) -> bool:
+        return self._pending_stamp(gen_dir)[0] == 0
 
     def pending_report(self) -> DataFrame:
         """Open (uncommitted) transactions currently held by the JVM gate —
@@ -457,9 +495,10 @@ class CdcPipeline:
         from ..operators.txn import txn_complete_filter
 
         prev_path, gens = self._pending_before(batch_id)
+        n_prev, age_prev = self._pending_stamp(prev_path)
         batch = flagged.withColumn("_gate_age", F.lit(0))
         src = batch
-        if prev_path is not None and not self._pending_is_empty(prev_path):
+        if n_prev != 0:
             # explicit schema: no per-batch footer-inference job, and an
             # older generation written BEFORE an additive DDL evolution
             # reads with nulls for the new columns (schema-on-read)
@@ -471,11 +510,16 @@ class CdcPipeline:
         ok = src.filter(~F.col("_bad"))
         committed, pending = txn_complete_filter(ok, txn_col="txn_id", op_col="op")
         abandoned = None
-        if self.txn_abandon_after_batches is not None:
+        n_abandon = self.txn_abandon_after_batches
+        if n_abandon is not None:
             # expire only rows STILL pending (a commit arriving this batch
             # admits its stragglers normally, whatever their age)
-            expired = F.col("_gate_age") >= self.txn_abandon_after_batches
-            abandoned = pending.filter(expired)
+            expired = F.col("_gate_age") >= n_abandon
+            # this batch's own rows are age 0, the consumed generation's
+            # at most age_prev: a batch with nothing to expire writes no
+            # abandoned-txn directory
+            if n_abandon <= 0 or age_prev is None or age_prev >= n_abandon:
+                abandoned = pending.filter(expired)
             pending = pending.filter(~expired)
         markers = ok.filter(
             (F.col("op") == "C") & (F.col("_gate_age") < self.txn_marker_keep)
@@ -493,14 +537,16 @@ class CdcPipeline:
             # on a single writer. The Observation rides the write job —
             # the row count for the _NROWS marker costs no extra job and
             # no local-filesystem assumption.
-            carry.observe(obs, F.count(F.lit(1)).alias("n")).repartition(
-                1
-            ).write.mode("overwrite").parquet(out_dir)
-            self._mark_pending_rows(out_dir, obs.get["n"])
+            carry.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.max(F.when(F.col("op") != "C", F.col("_gate_age"))).alias("age"),
+            ).repartition(1).write.mode("overwrite").parquet(out_dir)
+            self._mark_pending_rows(out_dir, obs.get["n"], obs.get["age"])
             if abandoned is not None:
                 # expired open txns land in the DLQ instead of vanishing
-                # (one small write per batch when the option is on,
-                # overwritten by a replay of the uncommitted batch)
+                # (a small write on the batches whose carryover can hold
+                # one, overwritten by a replay of the uncommitted batch)
                 self._write_dlq(abandoned, batch_id, "txn-abandoned")
             if prev_path is not None:
                 consumed = int(prev_path.rsplit("b_", 1)[1])
@@ -540,7 +586,8 @@ class CdcPipeline:
         The bootstrap is recorded as lineage batch_id -1 with the
         snapshot position range, so the provenance chain covers the
         initial load; ``watermark_ts_epoch`` (the snapshot's event-time)
-        pre-seeds the engine watermark when late-event skipping is on.
+        rides the initial commit's summary and pre-seeds the engine
+        watermark when late-event skipping is on.
         """
         if self.table.exists():
             raise ValueError(
@@ -550,9 +597,10 @@ class CdcPipeline:
         img = snapshot_df.withColumn(
             "_seq", F.lit(int(snapshot_seq)).cast("long")
         )
-        version = self.table.create(
-            img, KEY_COLS, summary={"bootstrap_seq": int(snapshot_seq)}
-        )
+        summary = {"bootstrap_seq": int(snapshot_seq)}
+        if watermark_ts_epoch is not None:
+            summary["max_ts_epoch"] = int(watermark_ts_epoch)
+        version = self.table.create(img, KEY_COLS, summary=summary)
         n_rows = self.table.read_raw().count()
         write_lineage_rows(
             self.spark,
@@ -572,8 +620,6 @@ class CdcPipeline:
             }],
             self.table_path,
         )
-        if watermark_ts_epoch is not None:
-            self._store_watermark(int(watermark_ts_epoch))
         return version
 
     # ---------- batch apply (the foreachBatch body) ----------
@@ -649,9 +695,11 @@ class CdcPipeline:
            only the touched base buckets, so it runs them first as one
            aggregation over the cached batch;
         2. the sink call — ``append_events`` or ``merge_events``, handed
-           the touched set so it runs no probe of its own;
+           the touched set so it runs no probe of its own, and the
+           batch's summary (counts and the running event-time max, the
+           watermark input), which rides the commit;
         3. post-commit (:meth:`_post_commit`) — DDL evolve, DLQ, lineage,
-           watermark, then the maintenance cadence.
+           then the maintenance cadence.
 
         Driver-action budget per micro-batch (the fixed cost that
         serializes a thousands-of-batches stream): ONE Spark job in append
@@ -671,16 +719,17 @@ class CdcPipeline:
         runs index compaction beside the other tasks (:meth:`_run_cadence`).
         """
         metrics = {"batch_id": batch_id, "n_events": 0, "n_late": 0, "n_dlq": 0, "n_ddl": 0, "version": None}
-        # Replay pre-check, driver-only (manifest head read): append mode
-        # must know before launching its single job — its observation is
-        # populated by that job, so short-circuiting later (as the sinks
-        # do internally) would leave nothing to await.
-        if batch_id is not None and self.table.exists():
-            last = self.table._batch_id_of(self.table._manifest())
-            if last is not None and batch_id <= last:
-                self._replay_heal(batch_df, batch_id, metrics)
-                return metrics
-        flagged = self._flag_batch(batch_df)
+        # Replay pre-check, driver-only (one manifest head read, which also
+        # yields the watermark): append mode must know before launching
+        # its single job — its observation is populated by that job, so
+        # short-circuiting later (as the sinks do internally) would leave
+        # nothing to await.
+        head = self.table._manifest()
+        if self.table._is_replay(head, batch_id):
+            self._replay_heal(batch_df, batch_id, metrics)
+            return metrics
+        prev_wm = self._load_watermark(head) if head else None
+        flagged = self._flag_batch(batch_df, prev_wm)
         pre_sink = contextlib.nullcontext()
         with contextlib.ExitStack() as stack:
             if self.txn_consistent:
@@ -720,7 +769,7 @@ class CdcPipeline:
                     # batch it folded. The quality gate runs first, so a
                     # halted batch never reaches the index.
                     self._near_dup_step(flagged, batch_id, metrics)
-            version, per_file = self._sink(flagged, batch_id)
+            version, per_file = self._sink(flagged, batch_id, prev_wm)
             metrics.update(self._counts(per_file), version=version)
             self._post_commit(flagged, batch_id, version, per_file, metrics)
         return metrics
@@ -755,10 +804,14 @@ class CdcPipeline:
         else:
             self._near_dup_step(healed, batch_id, metrics)
 
-    def _sink(self, flagged: DataFrame, batch_id: int) -> tuple[int | None, list]:
-        """Accounting + the one sink call. Returns ``(version, per_file)``:
-        the committed version (None when nothing committed) and the
-        ``self._obs_aggs`` rows, one per source file."""
+    def _sink(
+        self, flagged: DataFrame, batch_id: int, prev_wm: int | None
+    ) -> tuple[int | None, list]:
+        """Accounting + the one sink call, which commits the batch's
+        summary (:meth:`_batch_summary` over the watermark ``prev_wm``).
+        Returns ``(version, per_file)``: the committed version (None when
+        nothing committed) and the ``self._obs_aggs`` rows, one per source
+        file."""
         kw = dict(
             seq_col="seq", op_col="op", batch_id=batch_id,
             pre_folded=self.salt_buckets > 1,
@@ -770,21 +823,23 @@ class CdcPipeline:
                 return None, per_file
             version = self.table.merge_events(
                 self._payload(flagged), KEY_COLS,
-                extra_summary={k: counts[k] for k in ("n_events", "n_late")},
+                extra_summary=self._batch_summary(per_file, prev_wm),
                 touched=sorted({int(b) for r in per_file for b in r["buckets"] or []}),
                 **kw,
             )
             return version, per_file
         # the aggregates ride the delta write (a CollectMetrics node in its
-        # plan); the touched set is read after that job ran. Raw delta
-        # append: no batch-local fold — the read-side LWW fold / compaction
-        # reconciles duplicates, so the write is one narrow stage
+        # plan); the touched set and the summary are read after that job
+        # ran. Raw delta append: no batch-local fold — the read-side LWW
+        # fold / compaction reconciles duplicates, so the write is one
+        # narrow stage
         obs = Observation()
         row = functools.cache(lambda: obs.get)
         version = self.table.append_events(
             self._payload(flagged.observe(obs, *self._obs_aggs)), KEY_COLS,
             fold_mode="raw",
             touched=lambda: [int(b) for b in row()["buckets"] or []],
+            extra_summary=lambda: self._batch_summary([row()], prev_wm),
             **kw,
         )
         files = sorted(row()["files"] or [])
@@ -840,8 +895,8 @@ class CdcPipeline:
         """Everything after the sink commit, in one order for both sink
         modes: DDL evolve (metadata-only and additive — this batch's files
         null-fill through the schema reader; a replay re-applies it), the
-        DLQ write, then — only when the sink committed — lineage rows, the
-        watermark and the maintenance cadence."""
+        DLQ write, then — only when the sink committed — lineage rows and
+        the maintenance cadence. The watermark is already in the commit."""
         if metrics["n_ddl"]:
             self._evolve_ddl(flagged)
         if metrics["n_dlq"]:
@@ -864,9 +919,6 @@ class CdcPipeline:
                     "committed_at": committed_at,
                 })
         write_lineage_rows(self.spark, lineage, self.table_path)
-        mxs = [r["mx"] for r in per_file if r["mx"] is not None]
-        if mxs:
-            self._store_watermark(int(max(mxs)))
         self._run_cadence(metrics)
 
     def _evolve_ddl(self, flagged: DataFrame) -> None:
@@ -965,10 +1017,13 @@ class CdcPipeline:
                     int(from_v),
                 )
 
-    def _flag_batch(self, batch_df: DataFrame, late: bool = True) -> DataFrame:
+    def _flag_batch(
+        self, batch_df: DataFrame, prev_wm: int | None = None, late: bool = True
+    ) -> DataFrame:
         """Parse + flag one micro-batch: payload parse (when not baked
         into the streaming plan), ``_bad``, and — unless ``late=False``
-        (the replay heal) — the engine-watermark ``_late`` flag."""
+        (the replay heal) — the ``_late`` flag against the engine
+        watermark ``prev_wm`` (:meth:`_load_watermark`)."""
         if "_late" in batch_df.columns:
             # fully pre-flagged by the streaming plan (start() bakes parse,
             # _bad, and a constant-false _late into the stream when no
@@ -991,11 +1046,9 @@ class CdcPipeline:
             return bad_flagged
 
         late_cond = F.lit(False)
-        if self.watermark_delay_s is not None:
-            prev_max = self._load_watermark()
-            if prev_max is not None:
-                cutoff = F.timestamp_seconds(F.lit(prev_max - self.watermark_delay_s))
-                late_cond = F.col("ts") < cutoff
+        if self.watermark_delay_s is not None and prev_wm is not None:
+            cutoff = F.timestamp_seconds(F.lit(prev_wm - self.watermark_delay_s))
+            late_cond = F.col("ts") < cutoff
         return bad_flagged.withColumn("_late", ~F.col("_bad") & late_cond)
 
     def _near_dup_step(self, df: DataFrame, batch_id: int, metrics: dict) -> None:

@@ -34,12 +34,14 @@ per table. Design points that matter at scale:
   nowhere — per-table atomicity of a cross-table transaction.
 - **Unrouted events** (a table name with no configured sink) land in a
   dead-letter parquet under the checkpoint (≙ RouteOnAttribute's
-  unmatched relationship) with their batch id — never silently dropped,
-  never poisoning a sink.
+  unmatched relationship), one ``unrouted/batch_id=N`` directory per
+  batch that a replay overwrites — never silently dropped, never
+  duplicated, never poisoning a sink.
 - **Per-table state isolation.** Each sub-pipeline owns a checkpoint
-  subdirectory (watermark, txn pending store, lineage target), so
-  table-level replays, late-event cutoffs, and open-transaction
-  carryover never interact across tables.
+  subdirectory (txn pending store, quality verdicts) and its table's
+  head manifest carries its watermark, so table-level replays,
+  late-event cutoffs, and open-transaction carryover never interact
+  across tables.
 
 ``parallel=True`` applies the per-table batches from a thread pool —
 the jobs are independent (distinct tables, distinct state dirs), so the
@@ -138,8 +140,8 @@ class MultiTableCdcPipeline:
                         & ~self._is_marker
                     )
                     .withColumn("_batch_id", F.lit(batch_id))
-                    .write.mode("append")
-                    .parquet(self.unrouted_dir)
+                    .write.mode("overwrite")
+                    .parquet(fsio_join(self.unrouted_dir, f"batch_id={batch_id}"))
                 )
 
             def _route(name: str) -> DataFrame:

@@ -377,3 +377,70 @@ def test_abandoned_txn_dlq_rows_once_after_replay(spark, tmp_path, monkeypatch):
     assert sorted(tuple(r) for r in p2.table.read().select("conv_id", "text").collect()) == [
         ("a", "one")
     ]
+
+
+@pytest.mark.parametrize("sink_mode", SINK_MODES)
+def test_watermark_survives_crash_after_sink_commit(spark, tmp_path, sink_mode, monkeypatch):
+    """The engine watermark rides the batch's sink commit, so a crash
+    right after that commit (here: in the lineage write) cannot leave it
+    behind: a restarted driver still flags the next batch's old events
+    as late."""
+    from nifi_spark.streaming import job
+
+    b0 = _turns(spark, [("a", BASE)], 0, ts=TS0 + datetime.timedelta(hours=1))
+    b1 = _turns(spark, [("b", NEAR)], 100)  # an hour behind batch 0
+    paths = (str(tmp_path / "t"), str(tmp_path / "ck"))
+    kw = dict(n_buckets=4, sink_mode=sink_mode, watermark_delay_s=60)
+    real_write = job.write_lineage_rows
+    calls = []
+
+    def write_crashing_once(*a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("crash after the sink commit")
+        return real_write(*a, **k)
+
+    monkeypatch.setattr(job, "write_lineage_rows", write_crashing_once)
+    with pytest.raises(RuntimeError, match="crash after the sink commit"):
+        CdcPipeline(spark, *paths, **kw).apply_batch(b0, batch_id=0)
+
+    p = CdcPipeline(spark, *paths, **kw)  # restarted driver
+    m = p.apply_batch(b1, batch_id=1)
+    assert (m["n_late"], m["n_events"]) == (len(NEAR), 0)
+    assert {r.conv_id for r in p.table.read().collect()} == {"a"}
+
+
+def test_gated_batch_abandoning_nothing_writes_no_dlq(spark, tmp_path):
+    """With ``txn_abandon_after_batches`` set, only a batch whose carryover
+    can hold an expired transaction writes a ``txn-abandoned`` DLQ
+    directory: the gate knows the oldest carried age from the stamp of
+    the generation it consumes."""
+    import os
+
+    batches = [
+        _txn_events(spark, [(1, "I", 9, "z", 0, "open"), (2, "I", 1, "a", 0, "one"),
+                            (3, "C", 1, None, None, None)]),
+        _txn_events(spark, [(4, "I", 2, "b", 0, "two"), (5, "C", 2, None, None, None)]),
+        _txn_events(spark, [(6, "I", 3, "c", 0, "three"), (7, "C", 3, None, None, None)]),
+    ]
+    path = str(tmp_path / "t")
+    p = CdcPipeline(spark, path, str(tmp_path / "ck"), n_buckets=4,
+                    txn_consistent=True, txn_abandon_after_batches=2)
+    for batch_id, batch in enumerate(batches):
+        p.apply_batch(batch, batch_id=batch_id)
+    # txn 9 was carried at age 1 after batch 0 and 2 after batch 1: only
+    # batch 2 can (and does) abandon it
+    assert sorted(os.listdir(f"{path}/_dlq")) == ["batch_id=2"]
+    assert _dlq_rows(spark, path) == [(2, 1, "txn-abandoned")]
+    assert sorted(r.conv_id for r in p.table.read().collect()) == ["a", "b", "c"]
+
+
+def test_flat_dlq_layout_is_refused(spark, tmp_path):
+    """A dead-letter table holding flat files (the layout before
+    per-batch directories) would hide every directory written after it
+    from Spark's reader, so the pipeline refuses to start on it."""
+    dlq = tmp_path / "t" / "_dlq"
+    dlq.mkdir(parents=True)
+    (dlq / "part-00000.parquet").write_bytes(b"")
+    with pytest.raises(ValueError, match="batch_id=<N>/reason=<reason>"):
+        CdcPipeline(spark, str(tmp_path / "t"), str(tmp_path / "ck"), n_buckets=4)

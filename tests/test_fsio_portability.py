@@ -74,9 +74,10 @@ def test_txn_gate_survives_file_scheme_checkpoint(spark, tmp_path):
 
 
 def test_watermark_survives_file_scheme_checkpoint(spark, tmp_path):
-    """Engine watermark stored by one pipeline instance must be LOADED by
-    a fresh instance pointed at the same file:// checkpoint (restart
-    semantics) — late events stay skipped after a driver restart."""
+    """The engine watermark a pipeline commits into the table's head
+    manifest must be LOADED by a fresh instance (restart semantics), with
+    the checkpoint on a file:// URI — late events stay skipped after a
+    driver restart."""
     ckpt = _file_uri(tmp_path / "ckpt")
     p = CdcPipeline(
         spark, str(tmp_path / "table"), ckpt, n_buckets=4, watermark_delay_s=60,

@@ -400,3 +400,88 @@ def test_rebucket_layout_evolution(spark, tmp_path):
     )
     got = t2.read().filter(F.col("conv_id") == "k2").collect()
     assert [r.text for r in got] == ["v2-new"]
+
+
+MANIFEST_KEYS = {
+    "schema", "n_buckets", "key_cols", "files", "base", "depth", "mor_buckets",
+    "delta_files", "stats_cols", "file_stats", "summary", "created_at",
+    "version", "snapshot_id",
+}
+
+
+@pytest.fixture(scope="module")
+def commit_kinds(spark, tmp_path_factory):
+    """One commit of every kind, each stamped on top of the last; returns
+    kind → the manifest as stored on disk."""
+    import json
+
+    from pyspark.sql import types as T
+
+    root = tmp_path_factory.mktemp("kinds")
+
+    def stored(t, v):
+        return json.loads(open(f"{t.path}/_commits/v{v:08d}.json").read())
+
+    def rows(seq, *convs):
+        return _batch(spark, [(seq, "I", c, 0, "user", f"{c}@{seq}", None, TS) for c in convs])
+
+    out = {}
+    c = LakeTable(spark, str(root / "created"), n_buckets=4)
+    v = c.create(
+        rows(0, "c0").drop("op").withColumnRenamed("seq", "_seq"), KEYS,
+        summary={"bootstrap_seq": 0, "max_ts_epoch": 7},
+    )
+    out["create"] = stored(c, v)
+
+    t = LakeTable(spark, str(root / "t"), n_buckets=4)
+    steps = [
+        ("first_merge", lambda: t.merge_events(
+            rows(1, "a", "b"), KEYS, batch_id=1, extra_summary={"max_ts_epoch": 10})),
+        ("merge", lambda: t.merge_events(
+            rows(2, "a"), KEYS, batch_id=2, extra_summary={"max_ts_epoch": 20})),
+        ("append", lambda: t.append_events(
+            rows(3, "b", "c", "d"), KEYS, batch_id=3,
+            extra_summary=lambda: {"max_ts_epoch": 30})),
+        ("compact_buckets", lambda: t.compact_buckets(t._manifest()["mor_buckets"])),
+        ("evolve", lambda: t.evolve({"note": T.StringType()})),
+        ("compact", lambda: t.compact()),
+        ("rebucket", lambda: t.rebucket(8)),
+        ("append_after", lambda: t.append_events(
+            rows(4, "e"), KEYS, batch_id=4, extra_summary={"max_ts_epoch": 40})),
+        ("merge_after", lambda: t.merge_events(
+            rows(5, "f"), KEYS, batch_id=5, extra_summary={"max_ts_epoch": 50})),
+    ]
+    for kind, commit in steps:
+        v = commit()
+        assert v == t.current_version(), kind
+        out[kind] = stored(t, v)
+    assert t.expire_snapshots(keep_n=2)["manifests_deleted"] > 0
+    out["expire_flatten"] = stored(t, v - 1)  # the oldest kept, flattened in place
+    assert sorted(r.conv_id for r in t.read().collect()) == list("abcdef")
+    return out
+
+
+@pytest.mark.parametrize("kind,batch_id,max_ts", [
+    ("create", None, 7),
+    ("first_merge", 1, 10),
+    ("append", 3, 30),
+    ("merge", 2, 20),
+    ("compact_buckets", 3, 30),
+    ("compact", 3, 30),
+    ("evolve", 3, 30),
+    ("rebucket", 3, 30),
+    ("expire_flatten", 4, 40),
+])
+def test_every_commit_kind_stamps_one_manifest_shape(commit_kinds, kind, batch_id, max_ts):
+    """Every commit goes through one manifest builder: one key set, and
+    the summary a batch committed (its batch id, the engine watermark)
+    carried forward by every commit that is not a batch."""
+    m = commit_kinds[kind]
+    assert set(m) == MANIFEST_KEYS
+    assert (m["summary"]["batch_id"], m["summary"]["max_ts_epoch"]) == (batch_id, max_ts)
+    if kind in ("create", "first_merge", "compact", "rebucket", "expire_flatten"):
+        assert (m["base"], m["depth"]) == (None, 0)  # a full manifest
+    else:
+        assert m["base"] == m["version"] - 1 and m["depth"] > 0
+    if kind == "compact_buckets":
+        assert m["mor_buckets"] == [] and m["delta_files"] == []

@@ -231,3 +231,19 @@ def test_multi_table_ddl_routes_to_one_table(spark, tmp_path):
     slices = _route_pd(feed.toPandas())
     for name in TABLES:
         assert_final_state_equal(_table_pd(multi, name), pandas_fold(slices[name]))
+
+
+def test_multi_table_unrouted_rows_once_after_replay(spark, tmp_path):
+    """Unrouted rows land in one ``unrouted/batch_id=N`` directory per
+    batch, which a replay of the batch overwrites: each row is there once
+    however often the batch re-runs."""
+    batch = spark.createDataFrame(
+        [(1, "I", "c0", 0, "user", "hi", "unknown_tbl")],
+        "seq long, op string, conv_id string, turn_idx int, role string, "
+        "text string, table_name string",
+    )
+    multi = _mk(spark, tmp_path)
+    for _ in range(2):
+        assert multi.apply_batch(batch, 0)["n_unrouted"] == 1
+    dead = spark.read.parquet(multi.unrouted_dir)
+    assert [(r._batch_id, r.text) for r in dead.collect()] == [(0, "hi")]
