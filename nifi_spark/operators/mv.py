@@ -83,10 +83,9 @@ def refresh_agg_mv(
         hit = touched.select(
             src._bucket_col(k).alias("s"), mv._bucket_col(k).alias("v")
         ).distinct().collect()
-        table_keys = (src._manifest() or {}).get("key_cols") or []
         buckets = (
             sorted({r.s for r in hit})
-            if table_keys and k == table_keys[0] else None
+            if k == src._manifest(to_version)["key_cols"][0] else None
         )
         live = src.read(version=to_version, buckets=buckets).join(
             touched, key_cols, "left_semi"

@@ -19,26 +19,32 @@ table over parquet — the Iceberg model re-expressed, not a toy:
   flattens into a full manifest, so a cold read costs at most that many
   small JSON reads and a warm read (manifests are immutable → cached by
   version) costs one.
-- **O(1) head discovery**: ``_commits/_latest`` holds the newest version as
-  a hint (≙ Delta's ``_last_checkpoint``); readers verify the hinted
-  manifest exists and probe forward, so finding the head never lists the
-  commit directory — at 10^4+ commits the list call is the classic
-  metadata bottleneck. The hint is best-effort: missing/corrupt falls back
-  to a listing.
+- **O(1) head discovery, once per operation**: ``_commits/_latest`` holds
+  the newest version as a hint (≙ Delta's ``_last_checkpoint``). The one
+  head reader (``_head``) reads the hint, reads the manifest it names
+  (cached by version — manifests are immutable) and probes forward, so
+  finding the head never lists the commit directory — at 10^4+ commits
+  the list call is the classic metadata bottleneck. The hint is
+  best-effort: missing, corrupt or naming a missing manifest falls back
+  to a listing. Every write operation reads the head once at entry and
+  takes every decision from that manifest: existence, the replay
+  short-circuit, schema, base files, bucket count and stats columns.
 - **Snapshot expiry**: :meth:`expire_snapshots` keeps the newest ``keep_n``
   snapshots plus the base-chain closure they need, deletes older manifests
   and any data file no kept snapshot references (≙ Iceberg
   ``expire_snapshots``) — metadata and orphaned data stop accumulating
   forever.
-- **Atomic commit with optimistic rebase-retry**: manifests are staged to a
-  temp name and moved into place with Hadoop ``rename`` (fails when the
-  destination exists — atomic on HDFS, see fsio.py for the store-by-store
-  contract). A losing racer re-reads the new head and REBASES: the builder
-  callback receives the current head manifest, re-checks idempotency and
-  the buckets it rewrote against it, and only then restamps through the
-  one manifest builder (``_stamp``) — mirroring Iceberg's
-  re-validate-and-reapply on ``CommitFailedException`` (reference
-  nifi-iceberg-processors PutIceberg.java:367-383). When the concurrent commit touched an
+- **Atomic commit with optimistic rebase-retry**: the first attempt
+  builds on the head the operation read at entry and stages the manifest
+  for that version + 1 under a temp name, moved into place with Hadoop
+  ``rename`` (fails when the destination exists — atomic on HDFS, see
+  fsio.py for the store-by-store contract). Only a losing racer reads the
+  head again, and REBASES: the ``build`` callback receives the new head
+  manifest, re-checks idempotency and the buckets it rewrote against it,
+  and only then restamps through ``_stamp``, which every commit shares —
+  mirroring Iceberg's re-validate-and-reapply on
+  ``CommitFailedException`` (reference nifi-iceberg-processors
+  PutIceberg.java:367-383). When the concurrent commit touched an
   overlapping bucket the rewrite is stale and the builder raises
   :class:`CommitConflict` instead of silently dropping the other writer's
   rows — the caller must re-run the merge against the new head.
@@ -71,8 +77,8 @@ table over parquet — the Iceberg model re-expressed, not a toy:
   session.py). Verified by plan assertion in tests/test_laketable.py.
 - **Merge-on-read mode**: :meth:`append_events` commits a change batch as
   flat whole-batch delta file(s) (manifest ``delta_files``) without ever
-  reading the base — O(batch) per commit, one narrow Spark stage in raw
-  mode — and records the touched buckets in ``mor_buckets``; readers
+  reading the base — O(batch) per commit, one narrow Spark stage — and
+  records the touched buckets in ``mor_buckets``; readers
   LWW-fold those buckets (bucket files + delta rows) so queryable state
   matches copy-on-write exactly (≙ Iceberg/Hudi MOR, Paimon LSM buckets).
   :meth:`compact_buckets` repays the read debt on a cadence, folding
@@ -335,12 +341,10 @@ class LakeTable:
         re-opening a 64-bucket table with the default 16 would otherwise
         silently hash keys to different buckets and the merge join would
         duplicate keys across buckets). The constructor value only seeds
-        the layout of a table this instance creates."""
+        the layout of a table this instance creates. Every head read
+        refreshes it, so an operation buckets by the head it read."""
         if self._nb is None:
-            if not self.exists():
-                return self._req_buckets  # uncached: table may appear later
-            m = self._manifest()
-            self._nb = int(m.get("n_buckets", self._req_buckets))
+            self._head()
         return self._nb
 
     # ---------- commit log ----------
@@ -353,41 +357,42 @@ class LakeTable:
 
     def _versions(self) -> list[int]:
         """Full commit-dir listing — maintenance ops only; the hot path
-        discovers the head via the ``_latest`` hint (see
-        :meth:`current_version`)."""
+        discovers the head via the ``_latest`` hint (see :meth:`_head`)."""
         return sorted(
             int(f[1:-5])
             for f in self._io.list_names(self._commits_dir())
             if f.startswith("v") and f.endswith(".json")
         )
 
-    def _latest_hint(self) -> int | None:
-        p = pjoin(self._commits_dir(), _LATEST)
+    def _head(self) -> dict | None:
+        """The head manifest (None for an empty table) — the one head
+        discovery. Reads the ``_latest`` hint with no ``exists`` first,
+        reads the manifest it names (cached by version) and probes forward,
+        since the hint may lag a just-committed racer by a few versions.
+        A missing or unreadable hint, or one naming a missing manifest,
+        falls back to listing the commit directory."""
         try:
-            if not self._io.exists(p):
-                return None
-            v = int(self._io.read_text(p).strip())
-            # a hint pointing at a missing manifest is corrupt — ignore it
-            return v if v > 0 and self._io.exists(self._manifest_path(v)) else None
+            v = int(self._io.read_text(pjoin(self._commits_dir(), _LATEST)))
+            if v < 1:
+                raise ValueError(v)
+            self._manifest(v)  # raises when the hinted manifest is missing
         except Exception:
-            return None
-
-    def current_version(self) -> int:
-        """Newest committed version — O(1) via the ``_latest`` hint plus a
-        forward probe (the hint may lag a just-committed racer by a few
-        versions); falls back to listing when the hint is absent/corrupt."""
-        v = self._latest_hint()
-        if v is None:
             vs = self._versions()
             v = vs[-1] if vs else 0
         while self._io.exists(self._manifest_path(v + 1)):
             v += 1
-        return v
+        m = self._manifest(v) if v else None
+        self._nb = int(m.get("n_buckets", self._req_buckets)) if m else self._req_buckets
+        return m
+
+    def current_version(self) -> int:
+        """Newest committed version (0 for an empty table)."""
+        return (self._head() or {}).get("version", 0)
 
     def _manifest(self, version: int | None = None) -> dict | None:
-        version = version or self.current_version()
-        if version == 0:
-            return None
+        """The manifest at ``version``; the head's when it is None or 0."""
+        if not version:
+            return self._head()
         m = self._mcache.get(version)
         if m is None:
             m = json.loads(self._io.read_text(self._manifest_path(version)))
@@ -395,12 +400,11 @@ class LakeTable:
         return m
 
     def exists(self) -> bool:
-        return self.current_version() > 0
+        return self._head() is not None
 
     def last_batch_id(self) -> int | None:
         """Latest committed batch id — the idempotency/resume marker."""
-        m = self._manifest()
-        return self._batch_id_of(m)
+        return self._batch_id_of(self._head())
 
     @staticmethod
     def _batch_id_of(manifest: dict | None) -> int | None:
@@ -425,33 +429,37 @@ class LakeTable:
         return m.get("summary", {}) if m else {}
 
     def _commit(
-        self, build: Callable[[dict | None], dict | None], max_retries: int = 10
+        self,
+        head: dict | None,
+        build: Callable[[dict | None], dict | None],
+        max_retries: int = 10,
     ) -> int | None:
         """Optimistic commit loop with head rebase.
 
-        ``build(head_manifest)`` derives the manifest to stamp from the
-        CURRENT head (None when the table is empty). It may return None
-        (nothing to do — e.g. batch already applied) or raise
-        :class:`CommitConflict` (the head moved in a way that invalidates
-        the staged data files). Stamp = write temp manifest + atomic
-        rename; a lost rename re-reads the head and rebuilds.
-        ≙ PutIceberg.java:367-383 retry on CommitFailedException.
+        ``build(head)`` derives the manifest to stamp from ``head`` — on
+        the first attempt the head the operation read at entry (None when
+        the table is empty). It may return None (nothing to do — e.g.
+        batch already applied) or raise :class:`CommitConflict` (the head
+        moved in a way that invalidates the staged data files). Stamp =
+        write temp manifest + atomic rename at ``head``'s version + 1.
+        Only a lost rename discovers the head again, and ``build`` rebases
+        onto it. ≙ PutIceberg.java:367-383, which builds on the metadata it
+        read and refreshes only on CommitFailedException.
         """
-        self._io.mkdirs(self._commits_dir())
+        if head is None:  # a table's first commit creates the log dir
+            self._io.mkdirs(self._commits_dir())
         backoff = 0.1
         for _ in range(max_retries):
-            head_version = self.current_version()
-            head = self._manifest(head_version) if head_version else None
             manifest = build(head)
             if manifest is None:
                 return None
-            version = head_version + 1
-            manifest["version"] = version
-            manifest["snapshot_id"] = version
+            version = (head or {}).get("version", 0) + 1
+            manifest["version"] = manifest["snapshot_id"] = version
+            text = json.dumps(manifest)
             tmp = pjoin(self._commits_dir(), f".tmp-{uuid.uuid4().hex}.json")
-            final = self._manifest_path(version)
-            self._io.write_text(tmp, json.dumps(manifest))
-            if self._io.rename_no_overwrite(tmp, final):
+            self._io.write_text(tmp, text)
+            if self._io.rename_no_overwrite(tmp, self._manifest_path(version)):
+                self._mcache[version] = json.loads(text)  # as a reader sees it
                 try:  # best-effort head hint — readers probe forward anyway
                     self._io.write_text(
                         pjoin(self._commits_dir(), _LATEST), str(version)
@@ -462,6 +470,7 @@ class LakeTable:
             self._io.delete(tmp)  # racer won this version — rebase and retry
             time.sleep(backoff)
             backoff = min(backoff * 2, 2.0)
+            head = self._head()
         raise CommitConflict(f"could not commit after {max_retries} retries")
 
     def _stamp(
@@ -534,37 +543,32 @@ class LakeTable:
             "depth": depth,
             "mor_buckets": sorted(mor),
             "delta_files": delta_files,
-            "stats_cols": list(head.get("stats_cols") or self._req_stats_cols),
+            "stats_cols": self._stats_cols(head),
             "file_stats": stats,
             "summary": summary,
             "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
 
     def _check_rebase(
-        self,
-        head: dict | None,
-        base_version: int,
-        base_files: dict[str, list[str]],
-        base_delta: list[str],
-        buckets: list[int],
-        what: str,
+        self, head: dict | None, base: dict, buckets: list[int], what: str
     ) -> None:
         """Raise :class:`CommitConflict` when a rewrite of ``buckets`` read
-        at ``base_version`` can no longer rebase onto ``head``: a commit
-        since then rewrote one of those buckets, or appended delta rows
-        (possibly for them) — either way the rewrite would drop its rows.
-        ``what`` names the operation to re-run."""
+        at the ``base`` manifest can no longer rebase onto ``head``: a
+        commit since then rewrote one of those buckets, or appended delta
+        rows (possibly for them) — either way the rewrite would drop its
+        rows. ``what`` names the operation to re-run."""
         if head is None:
             raise CommitConflict(f"table disappeared during {what}")
-        if head["version"] == base_version:
+        if head["version"] == base["version"]:
             return
         head_files = self._resolve_files(head["version"])
+        base_files = self._resolve_files(base["version"])
         for b in buckets:
             if head_files.get(str(b), []) != base_files.get(str(b), []):
                 raise CommitConflict(
                     f"concurrent commit rewrote bucket {b} — re-run {what}"
                 )
-        if head.get("delta_files", []) != base_delta:
+        if head.get("delta_files", []) != base.get("delta_files", []):
             raise CommitConflict(f"concurrent append during {what} — re-run {what}")
 
     # ---------- reads ----------
@@ -591,30 +595,26 @@ class LakeTable:
     # manifest lower_bounds/upper_bounds; reference lands via PutIceberg
     # whose tables get this from Iceberg's own manifests) ----------
 
-    @property
-    def stats_cols(self) -> list[str]:
-        """Columns whose per-file [min,max] every commit records in the
-        manifest (``file_stats``). The manifest's list wins for an
+    def _stats_cols(self, head: dict | None) -> list[str]:
+        """Columns whose per-file [min,max] a commit on ``head`` records in
+        the manifest (``file_stats``). The manifest's list wins for an
         existing table (same doctrine as :attr:`n_buckets`); the
         constructor value seeds new tables — and upgrades an old table
         that never recorded stats (files written before the upgrade have
         no entries and are simply never skipped)."""
-        if not self.exists():
-            return self._req_stats_cols
-        m = self._manifest() or {}
-        return list(m.get("stats_cols") or self._req_stats_cols)
+        return list((head or {}).get("stats_cols") or self._req_stats_cols)
 
     def _collect_stats(
-        self, files: dict[str, list[str]] | list[str]
+        self, files: dict[str, list[str]] | list[str], head: dict | None
     ) -> dict[str, dict]:
-        """Per-file {col: [min,max]} for ``stats_cols`` over just-written
-        files. Local paths read parquet footers (pyarrow row-group
-        statistics — no data IO); any remote/URI path falls back to ONE
-        column-pruned Spark scan of the new files (exact, works on any
-        Hadoop scheme). Footer string bounds may be truncated by the
+        """Per-file {col: [min,max]} for the stats columns of ``head`` (the
+        operation's) over just-written files. Local paths read parquet
+        footers (pyarrow row-group statistics — no data IO); any
+        remote/URI path falls back to ONE column-pruned Spark scan of the
+        new files (exact, works on any Hadoop scheme). Footer string bounds may be truncated by the
         writer — the parquet spec keeps truncated bounds valid bounds,
         which is all skipping needs."""
-        cols = self.stats_cols
+        cols = self._stats_cols(head)
         if not cols:
             return {}
         paths = (
@@ -1094,26 +1094,24 @@ class LakeTable:
         committed as a full manifest) to one generation of bucket files,
         optionally purging old tombstones. Returns None when there is
         nothing to rewrite."""
-        base_version = self.current_version()
-        base_m = self._manifest(base_version)
-        if base_m is None:
+        head = self._head()
+        if head is None:
             return None
         whole = buckets is None
         buckets = (
             list(range(self.n_buckets)) if whole else sorted(int(b) for b in buckets)
         )
-        base_files = self._resolve_files(base_version)
-        base_delta = base_m.get("delta_files", [])
-        mor = {int(b) for b in base_m.get("mor_buckets", [])} & set(buckets)
-        if not whole and not (base_delta and mor) and not any(
+        base_files = self._resolve_files(head["version"])
+        mor = {int(b) for b in head.get("mor_buckets", [])} & set(buckets)
+        if not whole and not (head.get("delta_files") and mor) and not any(
             base_files.get(str(b)) for b in buckets
         ):
             return None
-        df = self.read_raw(buckets=None if whole else buckets, version=base_version)
+        df = self.read_raw(buckets=None if whole else buckets, version=head["version"])
         if mor:
             # fold the merge-on-read generations away: compaction is where
             # that read debt is repaid
-            df = self._lww_fold_read(df, base_m["key_cols"])
+            df = self._lww_fold_read(df, head["key_cols"])
         if purge_tombstones_below_seq is not None:
             df = df.filter(
                 ~(
@@ -1123,16 +1121,16 @@ class LakeTable:
             )
         new_files = self._write_buckets(df, f"v{uuid.uuid4().hex[:12]}", **write_opts)
         files = {str(b): new_files.get(str(b), []) for b in buckets}
-        new_stats = self._collect_stats(files)
+        new_stats = self._collect_stats(files, head)
 
-        def build(head: dict | None) -> dict:
-            self._check_rebase(head, base_version, base_files, base_delta, buckets, what)
+        def build(h: dict | None) -> dict:
+            self._check_rebase(h, head, buckets, what)
             return self._stamp(
-                head, files, new_stats=new_stats, summary={"compaction": True},
+                h, files, new_stats=new_stats, summary={"compaction": True},
                 full=whole,
             )
 
-        return self._commit(build)
+        return self._commit(head, build)
 
     def expire_snapshots(self, keep_n: int = 10) -> dict[str, int]:
         """Delete manifests and data files no recent snapshot needs
@@ -1180,6 +1178,10 @@ class LakeTable:
         for v in vs:
             if v not in kept:
                 self._io.delete(self._manifest_path(v))
+                # a stale hint must not find it cached, and the caches
+                # stay bounded by the kept snapshots
+                for cache in (self._mcache, self._fcache, self._scache):
+                    cache.pop(v, None)
                 manifests_deleted += 1
         data_deleted = 0
         data_dir = pjoin(self.path, _DATA)
@@ -1307,12 +1309,11 @@ class LakeTable:
         """
         if new_n_buckets < 1:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
-        base_version = self.current_version()
-        head = self._manifest(base_version)
+        head = self._head()
         if head is None:
             raise CommitConflict("cannot rebucket an empty table")
         key_cols = list(head["key_cols"])
-        rows = self.read_raw(version=base_version)
+        rows = self.read_raw(version=head["version"])
         if head.get("mor_buckets"):
             rows = self._lww_fold_read(rows, key_cols)
         rebucketed = rows.withColumn(
@@ -1323,11 +1324,10 @@ class LakeTable:
             rebucketed.repartition(new_n_buckets, F.col("_bucket")),
             f"v{uuid.uuid4().hex[:12]}",
         )
-
-        new_stats = self._collect_stats(files)
+        new_stats = self._collect_stats(files, head)
 
         def build(h: dict | None) -> dict:
-            if h is None or h["version"] != base_version:
+            if h is None or h["version"] != head["version"]:
                 raise CommitConflict(
                     "table changed during rebucket — re-run against the new head"
                 )
@@ -1337,14 +1337,19 @@ class LakeTable:
                 full=True, n_buckets=new_n_buckets,
             )
 
-        version = self._commit(build)
+        version = self._commit(head, build)
         self._nb = int(new_n_buckets)  # refresh the adopted layout
         return version
 
     def create(
         self, df: DataFrame, key_cols: list[str], seq_col: str = "_seq", summary: dict | None = None
     ) -> int:
-        """Initial snapshot from a full table image (no merge)."""
+        """Initial snapshot from a full table image (no merge). Refuses
+        with :class:`CommitConflict`, before writing any data, when the
+        table already exists."""
+        head = self._head()
+        if head is not None:
+            raise CommitConflict("table already exists; use merge_events()")
         if seq_col not in df.columns:
             df = df.withColumn(seq_col, F.lit(0).cast("long"))
         if "_deleted" not in df.columns:
@@ -1352,17 +1357,17 @@ class LakeTable:
         df = df.withColumn("_bucket", self._bucket_col(key_cols[0]))
         files = self._write_buckets(df, f"v{uuid.uuid4().hex[:12]}")
         schema_json = json.dumps(df.schema.jsonValue())
-        new_stats = self._collect_stats(files)
+        new_stats = self._collect_stats(files, head)
 
-        def build(head: dict | None) -> dict:
-            if head is not None:
+        def build(h: dict | None) -> dict:
+            if h is not None:
                 raise CommitConflict("table already exists; use merge_events()")
             return self._stamp(
                 None, files, new_stats=new_stats, summary=summary,
                 schema=schema_json, key_cols=key_cols,
             )
 
-        return self._commit(build)
+        return self._commit(head, build)
 
     def evolve(
         self,
@@ -1412,7 +1417,7 @@ class LakeTable:
                 schema=json.dumps(evolved.jsonValue()),
             )
 
-        return self._commit(build)
+        return self._commit(self._head(), build)
 
     def merge(
         self,
@@ -1473,18 +1478,21 @@ class LakeTable:
         """
         if events is None:
             return None
+        head = self._head()
+        if self._is_replay(head, batch_id):
+            return None  # already applied — exactly-once on replay
         payload_cols = [
             c for c in events.columns if c not in (*key_cols, seq_col, op_col)
         ]
         folded = self._fold_events(events, key_cols, seq_col, pre_folded)
 
-        if not self.exists():
+        if head is None:
             return self._commit_initial(
                 folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
             )
         if touched is not None:
             return self._merge_incremental(
-                folded, key_cols, seq_col, op_col, batch_id, extra_summary,
+                head, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
                 payload_cols, touched=sorted(touched),
             )
         # Probe path: the touched-bucket probe and the merge join both read
@@ -1492,7 +1500,8 @@ class LakeTable:
         folded = folded.cache()
         try:
             return self._merge_incremental(
-                folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
+                head, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
+                payload_cols,
             )
         finally:
             folded.unpersist()
@@ -1519,7 +1528,6 @@ class LakeTable:
         batch_id: int | None = None,
         extra_summary: dict | None = None,
         pre_folded: bool = False,
-        fold_mode: str = "bucket",
         touched: list[int] | Callable[[], list[int]] | None = None,
     ) -> int | None:
         """Merge-on-read MERGE: APPEND the batch as flat whole-batch delta
@@ -1527,18 +1535,20 @@ class LakeTable:
         Paimon's LSM buckets; contrast :meth:`merge_events`, which is
         copy-on-write).
 
-        Per-batch cost is O(batch) instead of O(table), and with
-        ``fold_mode="raw"`` the write is a single NARROW Spark stage (no
-        shuffle, no per-bucket split — measured the cheapest possible
-        micro-batch shape): the read-side LWW fold reconciles in-batch
-        duplicates by seq exactly like cross-batch ones, so the batch-local
-        fold is optional. Readers reconcile via :meth:`read`, which
-        LWW-folds buckets listed in the manifest's ``mor_buckets`` over
-        bucket files + ``delta_files`` (groupBy key → max_by(_seq)), so
-        the queryable state is identical to the COW path's. Read
-        amplification is bounded by compaction (:meth:`compact_buckets` /
+        Per-batch cost is O(batch) instead of O(table), and the write is a
+        single NARROW Spark stage (no shuffle, no per-bucket split, no
+        batch-local fold — measured the cheapest possible micro-batch
+        shape). The batch goes in unfolded: the read-side LWW fold
+        reconciles in-batch duplicates by seq exactly like cross-batch
+        ones. Readers reconcile via :meth:`read`, which LWW-folds buckets
+        listed in the manifest's ``mor_buckets`` over bucket files +
+        ``delta_files`` (groupBy key → max_by(_seq)), so the queryable
+        state is identical to the COW path's. Read amplification is
+        bounded by compaction (:meth:`compact_buckets` /
         :meth:`compact`), which folds the deltas into per-bucket zstd
-        files — the streaming pipeline runs it on a cadence.
+        files — the streaming pipeline runs it on a cadence. A table's
+        first commit is its base image (``read`` does not fold clean
+        buckets), so that one is folded (``pre_folded`` skips the fold).
 
         ``touched`` may be a list of bucket ids, a zero-arg callable
         evaluated after the delta write (the pipeline's observe() hook),
@@ -1553,37 +1563,29 @@ class LakeTable:
         """
         if events is None:
             return None
+        head = self._head()
+        if self._is_replay(head, batch_id):
+            return None  # already applied — exactly-once on replay
         payload_cols = [
             c for c in events.columns if c not in (*key_cols, seq_col, op_col)
         ]
-        if not self.exists():
-            # the initial commit is the BASE image (read() doesn't fold
-            # clean buckets) — always fold it, even in raw mode
-            folded = self._fold_events(events, key_cols, seq_col, pre_folded)
+        if head is None:
             return self._commit_initial(
-                folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
+                self._fold_events(events, key_cols, seq_col, pre_folded),
+                key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols,
             )
-        if fold_mode == "raw" or pre_folded:
-            # raw mode: no batch-local fold, no shuffle — the delta write
-            # is one narrow stage (scan → flat files). Delta volume is
-            # O(events) instead of O(keys); the compaction cadence repays
-            # it. (pre_folded batches are already one row per key.)
-            folded = events.withColumn("_bucket", self._bucket_col(key_cols[0]))
-        else:
-            folded = self._fold_events(events, key_cols, seq_col, pre_folded)
-        if self._is_replay(self._manifest(), batch_id):
-            return None  # already applied — exactly-once on replay
-
-        delta = folded.select(
+        # scan → flat files, one narrow stage: delta volume is O(events),
+        # not O(keys); the compaction cadence repays it
+        delta = events.select(
             *key_cols,
             *payload_cols,
             F.col(seq_col).cast("long").alias("_seq"),
             (F.col(op_col) == "D").alias("_deleted"),
-            "_bucket",
+            self._bucket_col(key_cols[0]).alias("_bucket"),
         )
         src_types = {f.name: f.dataType for f in delta.schema.fields}
         new_paths = self._write_flat(delta, f"v{uuid.uuid4().hex[:12]}")
-        new_stats = self._collect_stats(new_paths)
+        new_stats = self._collect_stats(new_paths, head)
         if not new_paths:
             return None  # nothing survived the filter (all-late/bad batch)
         if callable(touched):
@@ -1603,16 +1605,16 @@ class LakeTable:
         if not touched:
             return None  # zero-row delta (files carried no events)
 
-        def build(head: dict | None) -> dict | None:
-            if head is None:
+        def build(h: dict | None) -> dict | None:
+            if h is None:
                 raise CommitConflict("table disappeared during append")
-            if self._is_replay(head, batch_id):
+            if self._is_replay(h, batch_id):
                 return None
             # schema evolution (additive + Iceberg type widening), derived
-            # from the CURRENT head so a rebase picks up a racer's
+            # from the head built on so a rebase picks up a racer's
             # evolution too (driver-only work)
             evolved = _evolve_schema(
-                T.StructType.fromJson(json.loads(head["schema"])),
+                T.StructType.fromJson(json.loads(h["schema"])),
                 payload_cols,
                 src_types,
                 key_cols,
@@ -1622,16 +1624,19 @@ class LakeTable:
             # the list is stored in full (bounded by the compaction
             # cadence, which clears it)
             return self._stamp(
-                head, {}, summary=extra_summary, batch_id=batch_id,
+                h, {}, summary=extra_summary, batch_id=batch_id,
                 new_stats=new_stats, new_delta=new_paths, touched=touched,
                 schema=json.dumps(evolved.jsonValue()), key_cols=key_cols,
             )
 
-        return self._commit(build)
+        return self._commit(head, build)
 
     def _commit_initial(
         self, folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
     ) -> int | None:
+        """A batch that finds no head at entry becomes the table's base
+        image. If another writer creates the table first, the rename loses
+        and the commit refuses: these files ignore its rows."""
         merged = folded.select(
             *key_cols,
             *payload_cols,
@@ -1643,32 +1648,25 @@ class LakeTable:
         files = self._write_partitioned(merged, f"v{uuid.uuid4().hex[:12]}")
         if not files:
             return None  # empty first batch — don't commit an empty table
-        new_stats = self._collect_stats(files)
+        new_stats = self._collect_stats(files, None)
 
-        def build(head: dict | None) -> dict | None:
-            if head is not None:
-                # another writer created the table between our probe and
-                # commit; our files ignore its rows — cannot rebase
+        def build(h: dict | None) -> dict | None:
+            if h is not None:
                 raise CommitConflict("table created concurrently — re-run merge")
             return self._stamp(
                 None, files, summary=extra_summary, batch_id=batch_id,
                 new_stats=new_stats, schema=schema_json, key_cols=key_cols,
             )
 
-        return self._commit(build)
+        return self._commit(None, build)
 
     def _merge_incremental(
-        self, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
+        self, head, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
         payload_cols, touched: list[int] | None = None,
     ) -> int | None:
-        base_version = self.current_version()
-        base_manifest = self._manifest(base_version)
-        if self._is_replay(base_manifest, batch_id):
-            return None  # already applied — exactly-once on replay
-
         # ---- schema evolution: append new payload columns (nullable),
         # widen existing ones along Iceberg promotion chains ----
-        table_schema = self.schema(base_version)
+        table_schema = T.StructType.fromJson(json.loads(head["schema"]))
         src_types = {f.name: f.dataType for f in folded.schema.fields}
         evolved = _evolve_schema(table_schema, payload_cols, src_types, key_cols)
         user_cols = [f.name for f in evolved.fields if f.name not in INTERNAL_COLS]
@@ -1678,7 +1676,7 @@ class LakeTable:
             touched = sorted(
                 r[0] for r in folded.select("_bucket").distinct().collect()
             )
-        base_files = self._bucket_files(base_version)
+        base_files = self._resolve_files(head["version"])
         touched_files = [
             f for b, fl in base_files.items() if int(b) in touched for f in fl
         ]
@@ -1687,8 +1685,8 @@ class LakeTable:
             if touched_files
             else self.spark.createDataFrame([], evolved)
         )
-        base_mor = {int(b) for b in base_manifest.get("mor_buckets", [])}
-        base_delta_files = base_manifest.get("delta_files", [])
+        base_mor = {int(b) for b in head.get("mor_buckets", [])}
+        base_delta_files = head.get("delta_files", [])
         mor_touched = base_mor & set(touched)
         if base_delta_files and mor_touched:
             # flat MOR delta rows for our buckets live outside the bucket
@@ -1747,25 +1745,23 @@ class LakeTable:
         ).select(*key_cols, "_w.*")
 
         new_files = self._write_partitioned(merged, f"v{uuid.uuid4().hex[:12]}")
-        new_stats = self._collect_stats(new_files)
+        new_stats = self._collect_stats(new_files, head)
         our_user_types = {
             f.name: f.dataType for f in evolved.fields if f.name not in INTERNAL_COLS
         }
 
-        def build(head: dict | None) -> dict | None:
-            if self._is_replay(head, batch_id):
+        def build(h: dict | None) -> dict | None:
+            if self._is_replay(h, batch_id):
                 return None  # raced with our own replay — already applied
             # Rebase: safe iff the concurrent commits did not touch the
-            # buckets we rewrote (our rewrite folded base-version data)
-            self._check_rebase(
-                head, base_version, base_files, base_delta_files, touched, "merge"
-            )
-            # re-derive the schema against the CURRENT head so a rebase
+            # buckets we rewrote (our rewrite folded the entry head's data)
+            self._check_rebase(h, head, touched, "merge")
+            # re-derive the schema against the head built on, so a rebase
             # keeps a racer's evolution (their added/widened columns and
             # ours both survive; the widening reader reconciles files)
             schema_json = json.dumps(
                 _evolve_schema(
-                    T.StructType.fromJson(json.loads(head["schema"])),
+                    T.StructType.fromJson(json.loads(h["schema"])),
                     val_cols,
                     our_user_types,
                     key_cols,
@@ -1773,12 +1769,12 @@ class LakeTable:
             )
             # a COW rewrite folds its touched buckets back to one generation
             return self._stamp(
-                head, {str(b): new_files.get(str(b), []) for b in touched},
+                h, {str(b): new_files.get(str(b), []) for b in touched},
                 summary=extra_summary, batch_id=batch_id, new_stats=new_stats,
                 schema=schema_json, key_cols=key_cols,
             )
 
-        return self._commit(build)
+        return self._commit(head, build)
 
 
 class IcebergMergeSink:

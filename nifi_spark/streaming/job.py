@@ -829,15 +829,12 @@ class CdcPipeline:
             )
             return version, per_file
         # the aggregates ride the delta write (a CollectMetrics node in its
-        # plan); the touched set and the summary are read after that job
-        # ran. Raw delta append: no batch-local fold — the read-side LWW
-        # fold / compaction reconciles duplicates, so the write is one
-        # narrow stage
+        # plan, one narrow stage); the touched set and the summary are
+        # read after that job ran
         obs = Observation()
         row = functools.cache(lambda: obs.get)
         version = self.table.append_events(
             self._payload(flagged.observe(obs, *self._obs_aggs)), KEY_COLS,
-            fold_mode="raw",
             touched=lambda: [int(b) for b in row()["buckets"] or []],
             extra_summary=lambda: self._batch_summary([row()], prev_wm),
             **kw,

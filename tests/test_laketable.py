@@ -201,7 +201,7 @@ def test_delta_manifests_bounded_and_flatten(spark, tmp_path):
             return {"schema": h["schema"], "n_buckets": 64, "files": fake,
                     "base": h["version"], "depth": depth, "summary": {"batch_id": None}}
 
-        t._commit(build)
+        t._commit(t._head(), build)
     assert t.current_version() == 200
     # manifest size is O(touched): delta manifests list exactly 2 buckets
     sizes = []
@@ -409,10 +409,26 @@ MANIFEST_KEYS = {
 }
 
 
+def _count_io(t, calls):
+    """Record every ``exists`` and ``read_text`` call on ``t``'s FsIO."""
+    for name in ("exists", "read_text"):
+        orig = getattr(t._io, name)
+        setattr(t._io, name, lambda p, _n=name, _o=orig: (calls.append((_n, p)), _o(p))[1])
+
+
+def _head_reads(calls):
+    """(reads of the ``_latest`` hint, ``exists`` calls) among ``calls``."""
+    return (
+        sum(n == "read_text" and p.endswith("/_commits/_latest") for n, p in calls),
+        sum(n == "exists" for n, _ in calls),
+    )
+
+
 @pytest.fixture(scope="module")
 def commit_kinds(spark, tmp_path_factory):
     """One commit of every kind, each stamped on top of the last; returns
-    kind → the manifest as stored on disk."""
+    kind → the manifest as stored on disk, and under ``"head_reads"``
+    kind → (``_latest`` reads, ``exists`` calls) the commit made."""
     import json
 
     from pyspark.sql import types as T
@@ -425,15 +441,18 @@ def commit_kinds(spark, tmp_path_factory):
     def rows(seq, *convs):
         return _batch(spark, [(seq, "I", c, 0, "user", f"{c}@{seq}", None, TS) for c in convs])
 
-    out = {}
+    out, calls = {"head_reads": {}}, []
     c = LakeTable(spark, str(root / "created"), n_buckets=4)
+    _count_io(c, calls)
     v = c.create(
         rows(0, "c0").drop("op").withColumnRenamed("seq", "_seq"), KEYS,
         summary={"bootstrap_seq": 0, "max_ts_epoch": 7},
     )
     out["create"] = stored(c, v)
+    out["head_reads"]["create"] = _head_reads(calls)
 
     t = LakeTable(spark, str(root / "t"), n_buckets=4)
+    _count_io(t, calls)
     steps = [
         ("first_merge", lambda: t.merge_events(
             rows(1, "a", "b"), KEYS, batch_id=1, extra_summary={"max_ts_epoch": 10})),
@@ -442,7 +461,7 @@ def commit_kinds(spark, tmp_path_factory):
         ("append", lambda: t.append_events(
             rows(3, "b", "c", "d"), KEYS, batch_id=3,
             extra_summary=lambda: {"max_ts_epoch": 30})),
-        ("compact_buckets", lambda: t.compact_buckets(t._manifest()["mor_buckets"])),
+        ("compact_buckets", lambda: t.compact_buckets(out["append"]["mor_buckets"])),
         ("evolve", lambda: t.evolve({"note": T.StringType()})),
         ("compact", lambda: t.compact()),
         ("rebucket", lambda: t.rebucket(8)),
@@ -452,7 +471,9 @@ def commit_kinds(spark, tmp_path_factory):
             rows(5, "f"), KEYS, batch_id=5, extra_summary={"max_ts_epoch": 50})),
     ]
     for kind, commit in steps:
+        calls.clear()
         v = commit()
+        out["head_reads"][kind] = _head_reads(calls)
         assert v == t.current_version(), kind
         out[kind] = stored(t, v)
     assert t.expire_snapshots(keep_n=2)["manifests_deleted"] > 0
@@ -485,3 +506,90 @@ def test_every_commit_kind_stamps_one_manifest_shape(commit_kinds, kind, batch_i
         assert m["base"] == m["version"] - 1 and m["depth"] > 0
     if kind == "compact_buckets":
         assert m["mor_buckets"] == [] and m["delta_files"] == []
+
+
+@pytest.mark.parametrize("kind", [
+    "create", "first_merge", "merge", "append", "compact_buckets", "evolve",
+    "compact", "rebucket", "append_after", "merge_after",
+])
+def test_every_commit_kind_reads_the_head_once(commit_kinds, kind):
+    """Each write operation discovers the head once, at entry: one read of
+    the ``_latest`` hint and one forward-probe ``exists``; its commit
+    builds on that head instead of discovering it again."""
+    assert commit_kinds["head_reads"][kind] == (1, 1)
+
+
+def test_append_rebases_after_lost_rename(spark, tmp_path):
+    """An append whose manifest rename loses to a racer reads the new
+    head, rebases onto it and commits at the racer's version + 1; both
+    batches' rows stay live."""
+    path = str(tmp_path / "t")
+    t = LakeTable(spark, path, n_buckets=2)
+    t.merge(_batch(spark, [(1, "I", "a", 0, "user", "a1", None, TS)]), KEYS, batch_id=0)
+    racer = LakeTable(spark, path, n_buckets=2)
+    orig_rename = t._io.rename_no_overwrite
+    state = {"n": 0}
+
+    def racing_rename(src, dst):
+        state["n"] += 1
+        if state["n"] == 1:
+            racer.append_events(
+                _batch(spark, [(10, "U", "a", 0, "user", "a10", None, TS),
+                               (11, "I", "b", 0, "user", "b11", None, TS)]),
+                KEYS, batch_id=10,
+            )
+        return orig_rename(src, dst)
+
+    t._io.rename_no_overwrite = racing_rename
+    v = t.append_events(
+        _batch(spark, [(12, "I", "c", 0, "user", "c12", None, TS)]), KEYS, batch_id=11
+    )
+    assert (v, state["n"]) == (3, 2)  # lost v2 to the racer, committed v3
+    m2, m3 = t._manifest(2), t._manifest(3)
+    assert m3["base"] == 2  # the rebase built on the racer's manifest
+    n = len(m2["delta_files"])
+    assert m3["delta_files"][:n] == m2["delta_files"] and len(m3["delta_files"]) > n
+    assert _rows(LakeTable(spark, path)) == {
+        ("a", 0): "a10", ("b", 0): "b11", ("c", 0): "c12"
+    }
+    assert t.last_batch_id() == 11
+
+
+def test_head_found_whatever_the_latest_hint_says(spark, tmp_path):
+    """A missing ``_latest`` hint, a garbage one, one naming a missing
+    manifest and one lagging the head by two versions all still give the
+    true head, on a warm instance and on a fresh one."""
+    from pyspark.sql import types as T
+
+    path = str(tmp_path / "t")
+    t = LakeTable(spark, path, n_buckets=2)
+    t.merge(_batch(spark, [(1, "I", "a", 0, "user", "a1", None, TS)]), KEYS, batch_id=0)
+    for i in range(3):  # metadata-only commits: v2..v4
+        t.evolve({f"x{i}": T.StringType()})
+    hint = tmp_path / "t" / "_commits" / "_latest"
+    for content in (None, "garbage", "99", "2"):
+        if content is None:
+            hint.unlink()
+        else:
+            hint.write_text(content)
+        for table in (t, LakeTable(spark, path)):
+            assert table.current_version() == 4, content
+            assert table.last_batch_id() == 0, content
+
+
+def test_create_refuses_an_existing_table_before_writing(spark, tmp_path):
+    """``create`` on an existing table raises before it writes any data
+    file: no new data directory appears."""
+    import os
+
+    from nifi_spark.sinks.laketable import CommitConflict
+
+    path = tmp_path / "t"
+    img = spark.createDataFrame(
+        [("c1", 0, "x", 1)], "conv_id string, turn_idx int, text string, _seq long"
+    )
+    LakeTable(spark, str(path), n_buckets=2).create(img, KEYS)
+    before = set(os.listdir(path / "data"))
+    with pytest.raises(CommitConflict, match="already exists"):
+        LakeTable(spark, str(path), n_buckets=2).create(img, KEYS)
+    assert set(os.listdir(path / "data")) == before

@@ -282,10 +282,10 @@ def test_append_mode_dlq_and_late_skip(spark, tmp_path):
 
 def test_randomized_cow_mor_interleaving_matches_oracle(spark, tmp_path):
     """Seeded fuzz over the riskiest surface: random change batches applied
-    through randomly interleaved COW merges and MOR appends (folded and
-    raw), with random partial/full compactions — after every step the
-    queryable state must equal the Python LWW oracle (max-seq winner per
-    key, tombstone wins absent a newer re-insert)."""
+    through randomly interleaved COW merges and MOR appends, with random
+    partial/full compactions — after every step the queryable state must
+    equal the Python LWW oracle (max-seq winner per key, tombstone wins
+    absent a newer re-insert)."""
     import random
 
     for seed in (7, 21):
@@ -308,10 +308,7 @@ def test_randomized_cow_mor_interleaving_matches_oracle(spark, tmp_path):
             if rng.random() < 0.5:
                 t.merge_events(_batch(spark, rows), KEYS, batch_id=step)
             else:
-                t.append_events(
-                    _batch(spark, rows), KEYS, batch_id=step,
-                    fold_mode=rng.choice(["bucket", "raw"]),
-                )
+                t.append_events(_batch(spark, rows), KEYS, batch_id=step)
             if rng.random() < 0.3:
                 mor = [int(b) for b in (t._manifest() or {}).get("mor_buckets", [])]
                 if mor and rng.random() < 0.5:
