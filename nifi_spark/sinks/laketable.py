@@ -31,23 +31,23 @@ table over parquet — the Iceberg model re-expressed, not a toy:
   short-circuit, schema, base files, bucket count and stats columns.
 - **Snapshot expiry**: :meth:`expire_snapshots` keeps the newest ``keep_n``
   snapshots plus the base-chain closure they need, deletes older manifests
-  and any data file no kept snapshot references (≙ Iceberg
-  ``expire_snapshots``) — metadata and orphaned data stop accumulating
-  forever.
+  and the data files they named that no kept snapshot references (≙
+  Iceberg ``expire_snapshots``). It reads only the commit log, so it never
+  touches a write not yet committed and may run beside a live stream.
 - **Atomic commit with optimistic rebase-retry**: the first attempt
   builds on the head the operation read at entry and stages the manifest
   for that version + 1 under a temp name, moved into place with Hadoop
   ``rename`` (fails when the destination exists — atomic on HDFS, see
   fsio.py for the store-by-store contract). Only a losing racer reads the
-  head again, and REBASES: the ``build`` callback receives the new head
-  manifest, re-checks idempotency and the buckets it rewrote against it,
-  and only then restamps through ``_stamp``, which every commit shares —
-  mirroring Iceberg's re-validate-and-reapply on
-  ``CommitFailedException`` (reference nifi-iceberg-processors
-  PutIceberg.java:367-383). When the concurrent commit touched an
-  overlapping bucket the rewrite is stale and the builder raises
+  head again, and REBASES: ``_commit`` re-validates the new head (replay,
+  existence, bucket layout, the buckets the write read), then restamps
+  through ``_stamp``, which every commit shares — Iceberg's
+  re-validate-and-reapply on ``CommitFailedException`` (reference
+  nifi-iceberg-processors PutIceberg.java:367-383). When a concurrent
+  commit changed the layout or a bucket the write read, it raises
   :class:`CommitConflict` instead of silently dropping the other writer's
-  rows — the caller must re-run the merge against the new head.
+  rows — the caller re-runs against the new head. A write that does not
+  commit deletes its data files (≙ PutIceberg.java:419-423).
 - **Idempotent commit IDs**: each commit stamps ``summary.batch_id`` — the
   generalization of NiFi's ``nifi-flowfile-uuid`` snapshot-summary marker
   (PutIceberg.java:89-93, 392-399). A batch commit writes its own
@@ -106,7 +106,7 @@ import json
 import re
 import time
 import uuid
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -432,46 +432,77 @@ class LakeTable:
         self,
         head: dict | None,
         build: Callable[[dict | None], dict | None],
+        *,
+        what: str = "commit",
+        reads: Sequence[int] = (),
+        batch_id: int | None = None,
+        staged: str | None = None,
         max_retries: int = 10,
     ) -> int | None:
-        """Optimistic commit loop with head rebase.
-
-        ``build(head)`` derives the manifest to stamp from ``head`` — on
-        the first attempt the head the operation read at entry (None when
-        the table is empty). It may return None (nothing to do — e.g.
-        batch already applied) or raise :class:`CommitConflict` (the head
-        moved in a way that invalidates the staged data files). Stamp =
-        write temp manifest + atomic rename at ``head``'s version + 1.
-        Only a lost rename discovers the head again, and ``build`` rebases
-        onto it. ≙ PutIceberg.java:367-383, which builds on the metadata it
-        read and refreshes only on CommitFailedException.
+        """Optimistic commit loop with head rebase — the one place that
+        decides whether a staged write may commit. ``head`` is the manifest
+        the operation read at entry (None: empty table) and derived its
+        ``staged`` tag directory from. Each attempt re-validates the head
+        ``h`` it builds on: a replayed ``batch_id`` commits nothing; the
+        table's existence, ``n_buckets`` and ``key_cols`` must be as at
+        entry; the ``reads`` buckets must resolve to the same files and,
+        if any, ``delta_files`` be unchanged — else :class:`CommitConflict`
+        names ``what`` to re-run. ``build(h)`` then derives the manifest
+        (None: nothing to do), stamped by atomic rename at ``h``'s version
+        + 1; only a lost rename reads the head again. ≙ PutIceberg.java
+        :367-383 (re-validate, re-apply) and :419-423 (abort uncommitted
+        files): when nothing commits, ``staged`` is deleted; an error from
+        the rename or after it keeps it, as the manifest may be in place.
         """
         if head is None:  # a table's first commit creates the log dir
             self._io.mkdirs(self._commits_dir())
-        backoff = 0.1
-        for _ in range(max_retries):
-            manifest = build(head)
-            if manifest is None:
-                return None
-            version = (head or {}).get("version", 0) + 1
-            manifest["version"] = manifest["snapshot_id"] = version
-            text = json.dumps(manifest)
-            tmp = pjoin(self._commits_dir(), f".tmp-{uuid.uuid4().hex}.json")
-            self._io.write_text(tmp, text)
-            if self._io.rename_no_overwrite(tmp, self._manifest_path(version)):
-                self._mcache[version] = json.loads(text)  # as a reader sees it
-                try:  # best-effort head hint — readers probe forward anyway
-                    self._io.write_text(
-                        pjoin(self._commits_dir(), _LATEST), str(version)
-                    )
-                except Exception:
-                    pass
-                return version
-            self._io.delete(tmp)  # racer won this version — rebase and retry
-            time.sleep(backoff)
-            backoff = min(backoff * 2, 2.0)
-            head = self._head()
-        raise CommitConflict(f"could not commit after {max_retries} retries")
+        h, backoff, settled = head, 0.1, False
+        try:
+            for attempt in range(max_retries):
+                if attempt:  # a racer won the last version — rebase onto it
+                    time.sleep(backoff)
+                    backoff = min(backoff * 2, 2.0)
+                    h = self._head()
+                if self._is_replay(h, batch_id):
+                    return None
+                why = None
+                if (h is None) != (head is None):
+                    why = "table already exists" if head is None else "table disappeared"
+                elif h is not None and h["version"] != head["version"]:
+                    now, then = (reads and self._resolve_files(m["version"]) for m in (h, head))
+                    moved = [b for b in reads if now.get(str(b), []) != then.get(str(b), [])]
+                    if any(h.get(k) != head.get(k) for k in ("n_buckets", "key_cols")):
+                        why = "table layout changed"
+                    elif moved:
+                        why = f"concurrent commit rewrote bucket {moved[0]}"
+                    elif reads and h.get("delta_files", []) != head.get("delta_files", []):
+                        why = "concurrent append"
+                if why:
+                    raise CommitConflict(f"{why} during {what} — re-run {what}")
+                manifest = build(h)
+                if manifest is None:
+                    return None
+                version = (h or {}).get("version", 0) + 1
+                manifest["version"] = manifest["snapshot_id"] = version
+                text = json.dumps(manifest)
+                tmp = pjoin(self._commits_dir(), f".tmp-{uuid.uuid4().hex}.json")
+                self._io.write_text(tmp, text)
+                settled = True  # from here the manifest may be in place
+                if self._io.rename_no_overwrite(tmp, self._manifest_path(version)):
+                    self._mcache[version] = json.loads(text)  # as a reader sees it
+                    try:  # best-effort head hint — readers probe forward anyway
+                        self._io.write_text(
+                            pjoin(self._commits_dir(), _LATEST), str(version)
+                        )
+                    except Exception:
+                        pass
+                    return version
+                settled = False
+                self._io.delete(tmp)
+            raise CommitConflict(f"could not commit after {max_retries} retries")
+        finally:
+            if staged and not settled:
+                self._io.delete(self._tag_dir(staged))
 
     def _stamp(
         self,
@@ -548,28 +579,6 @@ class LakeTable:
             "summary": summary,
             "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-
-    def _check_rebase(
-        self, head: dict | None, base: dict, buckets: list[int], what: str
-    ) -> None:
-        """Raise :class:`CommitConflict` when a rewrite of ``buckets`` read
-        at the ``base`` manifest can no longer rebase onto ``head``: a
-        commit since then rewrote one of those buckets, or appended delta
-        rows (possibly for them) — either way the rewrite would drop its
-        rows. ``what`` names the operation to re-run."""
-        if head is None:
-            raise CommitConflict(f"table disappeared during {what}")
-        if head["version"] == base["version"]:
-            return
-        head_files = self._resolve_files(head["version"])
-        base_files = self._resolve_files(base["version"])
-        for b in buckets:
-            if head_files.get(str(b), []) != base_files.get(str(b), []):
-                raise CommitConflict(
-                    f"concurrent commit rewrote bucket {b} — re-run {what}"
-                )
-        if head.get("delta_files", []) != base.get("delta_files", []):
-            raise CommitConflict(f"concurrent append during {what} — re-run {what}")
 
     # ---------- reads ----------
 
@@ -1119,30 +1128,33 @@ class LakeTable:
                     & (F.col("_seq") < purge_tombstones_below_seq)
                 )
             )
-        new_files = self._write_buckets(df, f"v{uuid.uuid4().hex[:12]}", **write_opts)
+        tag = self._new_tag()
+        new_files = self._write_buckets(df, tag, **write_opts)
         files = {str(b): new_files.get(str(b), []) for b in buckets}
         new_stats = self._collect_stats(files, head)
 
-        def build(h: dict | None) -> dict:
-            self._check_rebase(h, head, buckets, what)
+        def build(h: dict) -> dict:
             return self._stamp(
                 h, files, new_stats=new_stats, summary={"compaction": True},
                 full=whole,
             )
 
-        return self._commit(head, build)
+        return self._commit(head, build, what=what, reads=buckets, staged=tag)
 
     def expire_snapshots(self, keep_n: int = 10) -> dict[str, int]:
         """Delete manifests and data files no recent snapshot needs
         (≙ Iceberg ``expire_snapshots`` — without it, metadata and
-        orphaned copy-on-write files accumulate forever).
+        replaced copy-on-write files accumulate forever).
 
         Keeps the newest ``keep_n`` snapshots PLUS the base-chain closure
         their delta manifests resolve through (every kept manifest stays
-        fully readable for time travel). A data file is deleted only when
-        no kept snapshot references it. Maintenance op: lists the commit
-        dir and the data dirs; run it from the single maintenance process
-        (like compaction, it assumes no concurrent expiry).
+        fully readable for time travel). The commit log is the only input
+        (one listing): a data file goes only when an expired manifest
+        named it and no kept one resolves to it, so a write not yet
+        committed is never touched and expiry may run beside a live writer
+        (one expiry at a time). A writer that crashed before its commit
+        leaves its files; like Iceberg, which leaves them to a separate,
+        age-guarded ``remove_orphan_files``, this does not sweep them.
         """
         vs = self._versions()
         if len(vs) <= keep_n:
@@ -1150,8 +1162,8 @@ class LakeTable:
         kept = set(vs[-keep_n:])
         # Flatten the oldest kept manifest in place (content-equivalent:
         # same resolved file map, base pointer removed) so the keep-closure
-        # does not chain back through every expired delta. Safe under the
-        # single-maintenance-process assumption this method states.
+        # does not chain back through every expired delta — and every file
+        # on disk stays named by a manifest that exists.
         oldest = min(kept)
         om = self._manifest(oldest)
         if om.get("base"):
@@ -1169,50 +1181,38 @@ class LakeTable:
             if base and base not in kept:
                 kept.add(base)
                 frontier.append(base)
-        referenced: set[str] = set()
-        for v in kept:
-            for fl in self._resolve_files(v).values():
-                referenced.update(fl)
-            referenced.update((self._manifest(v) or {}).get("delta_files", []))
-        manifests_deleted = 0
-        for v in vs:
-            if v not in kept:
-                self._io.delete(self._manifest_path(v))
-                # a stale hint must not find it cached, and the caches
-                # stay bounded by the kept snapshots
-                for cache in (self._mcache, self._fcache, self._scache):
-                    cache.pop(v, None)
-                manifests_deleted += 1
-        data_deleted = 0
-        data_dir = pjoin(self.path, _DATA)
-        for tag in self._io.list_names(data_dir):
-            tdir = pjoin(data_dir, tag)
-            prefix = tdir + "/"
-            if not any(f.startswith(prefix) for f in referenced):
-                self._io.delete(tdir)  # whole commit's output orphaned
-                data_deleted += 1
-                continue
-            for part in self._io.list_names(tdir):
-                if part.endswith(".parquet"):  # flat MOR delta file
-                    fp = pjoin(tdir, part)
-                    if fp not in referenced:
-                        self._io.delete(fp)
-                        data_deleted += 1
-                    continue
-                if not part.startswith("_pb="):
-                    continue
-                pdir = pjoin(tdir, part)
-                for fname in self._io.list_names(pdir):
-                    fp = pjoin(pdir, fname)
-                    if fname.endswith(".parquet") and fp not in referenced:
-                        self._io.delete(fp)
-                        data_deleted += 1
-        return {
-            "manifests_deleted": manifests_deleted,
-            "data_files_deleted": data_deleted,
-        }
+        live = {f for v in kept for fl in self._resolve_files(v).values() for f in fl}
+        live |= {f for v in kept for f in self._manifest(v).get("delta_files", [])}
+        expired = [v for v in vs if v not in kept]
+        dead = {f for v in expired for fl in self._manifest(v)["files"].values() for f in fl}
+        dead |= {f for v in expired for f in self._manifest(v).get("delta_files", [])}
+        prefix = self._tag_dir("")
+
+        def unit(p: str) -> str:  # p's write directory (p itself outside data/)
+            tag = p[len(prefix):].split("/")[0]
+            return self._tag_dir(tag) if p.startswith(prefix) else p
+
+        # a dead file goes with its write directory when no live file is in it
+        keep = {unit(p) for p in live}
+        doomed = {p if unit(p) in keep else unit(p) for p in dead - live}
+        for p in sorted(doomed):  # data before manifests: a re-run finds them again
+            self._io.delete(p)
+        for v in expired:
+            self._io.delete(self._manifest_path(v))
+            # a stale hint must not find it cached, and the caches
+            # stay bounded by the kept snapshots
+            for cache in (self._mcache, self._fcache, self._scache):
+                cache.pop(v, None)
+        return {"manifests_deleted": len(expired), "data_files_deleted": len(doomed)}
 
     # ---------- writes ----------
+
+    @staticmethod
+    def _new_tag() -> str:  # a fresh name for one write's data directory
+        return f"v{uuid.uuid4().hex[:12]}"
+
+    def _tag_dir(self, version_tag: str) -> str:
+        return pjoin(self.path, _DATA, version_tag)
 
     def _bucket_col(self, key_col: str) -> F.Column:
         return F.pmod(F.xxhash64(F.col(key_col)), F.lit(self.n_buckets)).cast("int")
@@ -1237,7 +1237,7 @@ class LakeTable:
         codec init dominates tiny files (measured ~1 s/batch of pure zstd
         setup across n_buckets files) and deltas are short-lived —
         compaction rewrites them zstd."""
-        out_dir = pjoin(self.path, _DATA, version_tag)
+        out_dir = self._tag_dir(version_tag)
         w = df.withColumn("_pb", F.col("_bucket"))
         if sort_by:
             # Sort keyed on _pb FIRST so the dynamic-partition writer's
@@ -1285,7 +1285,7 @@ class LakeTable:
         readers restrict them to live MOR buckets via the ``_bucket``
         column (see :meth:`read_raw`). snappy, not zstd: per-file codec
         init dominates tiny delta files, and compaction rewrites them zstd."""
-        out_dir = pjoin(self.path, _DATA, version_tag)
+        out_dir = self._tag_dir(version_tag)
         df.write.option("compression", codec).mode("overwrite").parquet(out_dir)
         return [
             pjoin(out_dir, f)
@@ -1304,8 +1304,8 @@ class LakeTable:
         survive — the LWW guard must keep working across the rewrite);
         merge-on-read delta generations are folded in, so the new layout
         starts with zero MOR debt. Commits a flattened manifest (depth 0,
-        no base pointer). Single-writer op: a concurrent commit during
-        the rewrite raises CommitConflict and the caller re-runs.
+        no base pointer). A concurrent commit that rewrote a bucket or
+        appended rows raises CommitConflict; the caller re-runs.
         """
         if new_n_buckets < 1:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
@@ -1320,24 +1320,20 @@ class LakeTable:
             "_bucket",
             F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(new_n_buckets)).cast("int"),
         )
+        tag = self._new_tag()
         files = self._write_partitioned(
-            rebucketed.repartition(new_n_buckets, F.col("_bucket")),
-            f"v{uuid.uuid4().hex[:12]}",
+            rebucketed.repartition(new_n_buckets, F.col("_bucket")), tag
         )
         new_stats = self._collect_stats(files, head)
+        old_n = self.n_buckets
 
-        def build(h: dict | None) -> dict:
-            if h is None or h["version"] != head["version"]:
-                raise CommitConflict(
-                    "table changed during rebucket — re-run against the new head"
-                )
+        def build(h: dict) -> dict:
             return self._stamp(
-                h, files, new_stats=new_stats,
-                summary={"rebucketed_from": self.n_buckets},
+                h, files, new_stats=new_stats, summary={"rebucketed_from": old_n},
                 full=True, n_buckets=new_n_buckets,
             )
 
-        version = self._commit(head, build)
+        version = self._commit(head, build, what="rebucket", reads=range(old_n), staged=tag)
         self._nb = int(new_n_buckets)  # refresh the adopted layout
         return version
 
@@ -1355,19 +1351,18 @@ class LakeTable:
         if "_deleted" not in df.columns:
             df = df.withColumn("_deleted", F.lit(False))
         df = df.withColumn("_bucket", self._bucket_col(key_cols[0]))
-        files = self._write_buckets(df, f"v{uuid.uuid4().hex[:12]}")
+        tag = self._new_tag()
+        files = self._write_buckets(df, tag)
         schema_json = json.dumps(df.schema.jsonValue())
         new_stats = self._collect_stats(files, head)
 
         def build(h: dict | None) -> dict:
-            if h is not None:
-                raise CommitConflict("table already exists; use merge_events()")
             return self._stamp(
-                None, files, new_stats=new_stats, summary=summary,
+                h, files, new_stats=new_stats, summary=summary,
                 schema=schema_json, key_cols=key_cols,
             )
 
-        return self._commit(head, build)
+        return self._commit(head, build, what="create", staged=tag)
 
     def evolve(
         self,
@@ -1390,12 +1385,12 @@ class LakeTable:
         head's summary (``batch_id``, the engine watermark) carries
         forward so replay short-circuits stay intact.
         """
-        def build(head: dict | None) -> dict | None:
-            if head is None:
-                raise CommitConflict(
-                    "cannot evolve an empty table — create()/merge first"
-                )
-            schema = T.StructType.fromJson(json.loads(head["schema"]))
+        head = self._head()
+        if head is None:
+            raise CommitConflict("cannot evolve an empty table — create()/merge first")
+
+        def build(h: dict) -> dict | None:
+            schema = T.StructType.fromJson(json.loads(h["schema"]))
             existing = {f.name: f.dataType for f in schema.fields}
             new: dict[str, T.DataType] = {}
             for k, dt in add_columns.items():
@@ -1412,12 +1407,12 @@ class LakeTable:
                 + [f for f in schema.fields if f.name in INTERNAL_COLS]
             )
             return self._stamp(
-                head, {},
+                h, {},
                 summary={**(extra_summary or {}), "ddl_added": sorted(new)},
                 schema=json.dumps(evolved.jsonValue()),
             )
 
-        return self._commit(self._head(), build)
+        return self._commit(head, build, what="evolve")
 
     def merge(
         self,
@@ -1556,10 +1551,12 @@ class LakeTable:
         ``extra_summary`` may likewise be a callable, evaluated after the
         write, so the commit can carry numbers observed on it.
 
-        Appends NEVER conflict: a rebase just re-targets the new head's
-        delta list (LWW-by-_seq makes concurrent appends and even a
-        concurrent COW rewrite of the same bucket commute). Exactly-once
-        replay via ``batch_id`` is identical to merge_events.
+        Appends conflict only with a layout change (a concurrent
+        :meth:`rebucket` — the delta rows carry the old bucket ids): any
+        other rebase just re-targets the new head's delta list
+        (LWW-by-_seq makes concurrent appends and even a concurrent COW
+        rewrite of the same bucket commute). Exactly-once replay via
+        ``batch_id`` is identical to merge_events.
         """
         if events is None:
             return None
@@ -1584,16 +1581,15 @@ class LakeTable:
             self._bucket_col(key_cols[0]).alias("_bucket"),
         )
         src_types = {f.name: f.dataType for f in delta.schema.fields}
-        new_paths = self._write_flat(delta, f"v{uuid.uuid4().hex[:12]}")
+        tag = self._new_tag()
+        new_paths = self._write_flat(delta, tag)
         new_stats = self._collect_stats(new_paths, head)
-        if not new_paths:
-            return None  # nothing survived the filter (all-late/bad batch)
         if callable(touched):
             # the streaming pipeline derives the touched set from an
             # observe() on the write job above — evaluated here, after
             # that job ran, so it costs nothing extra
             touched = touched()
-        if touched is None:
+        if touched is None and new_paths:
             # tiny probe over the just-written delta (bounded by batch
             # size; direct-API callers only — the pipeline passes touched)
             touched = [
@@ -1601,15 +1597,11 @@ class LakeTable:
                 for r in self.spark.read.parquet(*new_paths)
                 .select("_bucket").distinct().collect()
             ]
-        touched = sorted(int(b) for b in touched)
-        if not touched:
-            return None  # zero-row delta (files carried no events)
+        touched = sorted(int(b) for b in touched or ())
 
-        def build(h: dict | None) -> dict | None:
-            if h is None:
-                raise CommitConflict("table disappeared during append")
-            if self._is_replay(h, batch_id):
-                return None
+        def build(h: dict) -> dict | None:
+            if not new_paths or not touched:
+                return None  # nothing survived the filter, or zero-row files
             # schema evolution (additive + Iceberg type widening), derived
             # from the head built on so a rebase picks up a racer's
             # evolution too (driver-only work)
@@ -1629,14 +1621,15 @@ class LakeTable:
                 schema=json.dumps(evolved.jsonValue()), key_cols=key_cols,
             )
 
-        return self._commit(head, build)
+        return self._commit(head, build, what="append", batch_id=batch_id, staged=tag)
 
     def _commit_initial(
         self, folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
     ) -> int | None:
         """A batch that finds no head at entry becomes the table's base
         image. If another writer creates the table first, the rename loses
-        and the commit refuses: these files ignore its rows."""
+        and the commit refuses (unless that writer applied this batch):
+        these files ignore its rows."""
         merged = folded.select(
             *key_cols,
             *payload_cols,
@@ -1645,20 +1638,20 @@ class LakeTable:
             "_bucket",
         )
         schema_json = json.dumps(merged.schema.jsonValue())
-        files = self._write_partitioned(merged, f"v{uuid.uuid4().hex[:12]}")
-        if not files:
-            return None  # empty first batch — don't commit an empty table
+        tag = self._new_tag()
+        files = self._write_partitioned(merged, tag)
+        if not files:  # empty first batch — don't commit an empty table
+            self._io.delete(self._tag_dir(tag))
+            return None
         new_stats = self._collect_stats(files, None)
 
-        def build(h: dict | None) -> dict | None:
-            if h is not None:
-                raise CommitConflict("table created concurrently — re-run merge")
+        def build(h: dict | None) -> dict:
             return self._stamp(
-                None, files, summary=extra_summary, batch_id=batch_id,
+                h, files, summary=extra_summary, batch_id=batch_id,
                 new_stats=new_stats, schema=schema_json, key_cols=key_cols,
             )
 
-        return self._commit(None, build)
+        return self._commit(None, build, what="merge", batch_id=batch_id, staged=tag)
 
     def _merge_incremental(
         self, head, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
@@ -1744,18 +1737,14 @@ class LakeTable:
             winner.alias("_w"),
         ).select(*key_cols, "_w.*")
 
-        new_files = self._write_partitioned(merged, f"v{uuid.uuid4().hex[:12]}")
+        tag = self._new_tag()
+        new_files = self._write_partitioned(merged, tag)
         new_stats = self._collect_stats(new_files, head)
         our_user_types = {
             f.name: f.dataType for f in evolved.fields if f.name not in INTERNAL_COLS
         }
 
-        def build(h: dict | None) -> dict | None:
-            if self._is_replay(h, batch_id):
-                return None  # raced with our own replay — already applied
-            # Rebase: safe iff the concurrent commits did not touch the
-            # buckets we rewrote (our rewrite folded the entry head's data)
-            self._check_rebase(h, head, touched, "merge")
+        def build(h: dict) -> dict:
             # re-derive the schema against the head built on, so a rebase
             # keeps a racer's evolution (their added/widened columns and
             # ours both survive; the widening reader reconciles files)
@@ -1774,7 +1763,11 @@ class LakeTable:
                 schema=schema_json, key_cols=key_cols,
             )
 
-        return self._commit(head, build)
+        # a rebase is safe iff no concurrent commit touched the buckets we
+        # rewrote (our rewrite folded the entry head's data)
+        return self._commit(
+            head, build, what="merge", reads=touched, batch_id=batch_id, staged=tag
+        )
 
 
 class IcebergMergeSink:
@@ -1905,7 +1898,9 @@ def iceberg_merge_sql(
 
 def _cli(argv: list[str] | None = None) -> None:
     """Maintenance entry point (≙ Iceberg's rewrite_data_files /
-    expire_snapshots procedures, run from the single maintenance process):
+    expire_snapshots procedures, run from one maintenance process), safe
+    beside a live stream: expiry deletes only files expired manifests
+    named (a crashed writer's uncommitted files are kept, no orphan sweep):
 
         python -m nifi_spark.sinks.laketable compact --table <path> [--purge-below-seq N]
         python -m nifi_spark.sinks.laketable compact-mor --table <path>

@@ -198,9 +198,9 @@ class CdcPipeline:
         self.compact_every = compact_every
         # Inline snapshot-expiry cadence: a thousand-batch stream commits a
         # manifest per batch; without expiry the commit log grows without
-        # bound and head discovery/time-travel degrade. Same single-writer
-        # assumption as the inline compaction. 0 = off (run
-        # `laketable expire` from a maintenance process instead).
+        # bound and head discovery/time-travel degrade. 0 = off: run
+        # `laketable expire` from a maintenance process instead — expiry
+        # deletes only files expired manifests named, so that is safe too.
         self.expire_every = expire_every
         self.expire_keep_n = expire_keep_n
         # committed batches of this instance: the clock every maintenance
@@ -993,7 +993,8 @@ class CdcPipeline:
             if self._ndx is not None and due(self.index_compact_every):
                 stack.enter_context(_in_background(self._ndx.compact))
             if self.sink_mode == "append" and due(self.compact_every):
-                mor = (self.table._manifest() or {}).get("mor_buckets", [])
+                # the manifest this batch just committed (cached): no head read
+                mor = self.table._manifest(metrics["version"]).get("mor_buckets", [])
                 if mor:
                     self.table.compact_buckets([int(b) for b in mor])
                     metrics["compacted"] = len(mor)
@@ -1001,7 +1002,7 @@ class CdcPipeline:
                 out = self.table.expire_snapshots(keep_n=self.expire_keep_n)
                 if out["manifests_deleted"]:
                     metrics["expired"] = out["manifests_deleted"]
-                if self._mv is not None and self._mv.exists():
+                if self._mv is not None:  # a missing view lists no versions
                     mout = self._mv.expire_snapshots(keep_n=self.expire_keep_n)
                     if mout["manifests_deleted"]:
                         metrics["mv_expired"] = mout["manifests_deleted"]

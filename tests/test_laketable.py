@@ -3,6 +3,7 @@
 stale-update-after-delete hazard from SURVEY.md §7.3."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -476,8 +477,20 @@ def commit_kinds(spark, tmp_path_factory):
         out["head_reads"][kind] = _head_reads(calls)
         assert v == t.current_version(), kind
         out[kind] = stored(t, v)
+    listed = []
+    orig_list = t._io.list_names
+    t._io.list_names = lambda p: (listed.append(os.path.relpath(p, t.path)), orig_list(p))[1]
     assert t.expire_snapshots(keep_n=2)["manifests_deleted"] > 0
+    t._io.list_names = orig_list
+    out["expire_listings"] = listed
     out["expire_flatten"] = stored(t, v - 1)  # the oldest kept, flattened in place
+    kept_paths = [
+        p for k in t._versions() for fl in t._resolve_files(k).values() for p in fl
+    ] + [p for k in t._versions() for p in t._manifest(k)["delta_files"]]
+    out["expire_tags"] = (
+        set(os.listdir(f"{t.path}/data")),
+        {os.path.relpath(p, f"{t.path}/data").split(os.sep)[0] for p in kept_paths},
+    )
     assert sorted(r.conv_id for r in t.read().collect()) == list("abcdef")
     return out
 
@@ -519,6 +532,15 @@ def test_every_commit_kind_reads_the_head_once(commit_kinds, kind):
     assert commit_kinds["head_reads"][kind] == (1, 1)
 
 
+def test_expiry_reads_only_the_commit_log(commit_kinds):
+    """Expiry over every commit kind lists the commit directory once and
+    no data directory, and afterwards ``data/`` holds exactly the tag
+    directories of the files the kept manifests resolve to."""
+    assert commit_kinds["expire_listings"] == ["_commits"]
+    on_disk, kept = commit_kinds["expire_tags"]
+    assert on_disk == kept
+
+
 def test_append_rebases_after_lost_rename(spark, tmp_path):
     """An append whose manifest rename loses to a racer reads the new
     head, rebases onto it and commits at the racer's version + 1; both
@@ -553,6 +575,79 @@ def test_append_rebases_after_lost_rename(spark, tmp_path):
         ("a", 0): "a10", ("b", 0): "b11", ("c", 0): "c12"
     }
     assert t.last_batch_id() == 11
+
+
+@pytest.mark.parametrize("op", ["append", "merge", "compact_buckets"])
+def test_rebase_across_a_layout_change_refuses(spark, tmp_path, op):
+    """A write staged under one bucket layout must not commit on top of a
+    concurrent ``rebucket``: its rows and buckets carry the old bucket ids.
+    The operation raises, a re-run commits, and every key reads once. The
+    table's keys all sit in bucket 1 of 2, so the merge touches bucket 0,
+    which is empty under both layouts (``pmod(h, 8)`` is odd for them)."""
+    from nifi_spark.sinks.laketable import CommitConflict
+
+    path = str(tmp_path / "t")
+    t = LakeTable(spark, path, n_buckets=2)
+    probe = spark.createDataFrame([(f"k{i}",) for i in range(60)], "conv_id string")
+    b2 = {r.conv_id: r.b for r in probe.select("conv_id", t._bucket_col("conv_id").alias("b")).collect()}
+    old = [k for k, b in b2.items() if b == 1][:12]
+    new = [k for k, b in b2.items() if b == 0][:8]
+    t.merge(_batch(spark, [(1, "I", k, 0, "user", "v1", None, TS) for k in old]), KEYS, batch_id=0)
+    inserts = _batch(spark, [(2, "I", k, 0, "user", "v2", None, TS) for k in new])
+    batch = inserts.unionByName(
+        _batch(spark, [(2, "U", k, 0, "user", "v2", None, TS) for k in old[:4]])
+    )
+
+    def touched():
+        return sorted({r[0] for r in inserts.select(t._bucket_col("conv_id")).collect()})
+
+    run = {
+        "append": lambda: t.append_events(batch, KEYS, batch_id=1),
+        "merge": lambda: t.merge_events(inserts, KEYS, batch_id=1, touched=touched()),
+        "compact_buckets": lambda: t.compact_buckets(list(range(t.n_buckets))),
+    }[op]
+    if op == "compact_buckets":
+        t.append_events(batch, KEYS, batch_id=1)
+    racer = LakeTable(spark, path)
+    orig_rename = t._io.rename_no_overwrite
+    state = {"n": 0}
+
+    def racing_rename(src, dst):
+        state["n"] += 1
+        if state["n"] == 1:
+            racer.rebucket(8)
+        return orig_rename(src, dst)
+
+    t._io.rename_no_overwrite = racing_rename
+    with pytest.raises(CommitConflict, match="layout"):
+        run()
+    assert run() == t.current_version()
+    keys = [r.conv_id for r in LakeTable(spark, path).read().collect()]
+    assert sorted(keys) == sorted(old + new)
+
+
+def test_expiry_spares_a_write_not_yet_committed(spark, tmp_path, monkeypatch):
+    """Expiry from a second instance between an append's data write and
+    its commit leaves the append's files alone: the append commits and
+    every key reads back."""
+    path = str(tmp_path / "t")
+    t = LakeTable(spark, path, n_buckets=2)
+    for i in range(3):
+        t.merge(_batch(spark, [(i, "I", f"c{i}", 0, "user", "v", None, TS)]), KEYS, batch_id=i)
+    orig = t._write_flat
+
+    def hooked(df, version_tag):
+        paths = orig(df, version_tag)
+        LakeTable(spark, path).expire_snapshots(keep_n=1)
+        return paths
+
+    monkeypatch.setattr(t, "_write_flat", hooked)
+    v = t.append_events(
+        _batch(spark, [(9, "I", "c9", 0, "user", "v", None, TS)]), KEYS, batch_id=9
+    )
+    assert v == 4
+    assert all(os.path.exists(p) for p in t._manifest(v)["delta_files"])
+    assert sorted(k for k, _ in _rows(LakeTable(spark, path))) == ["c0", "c1", "c2", "c9"]
 
 
 def test_head_found_whatever_the_latest_hint_says(spark, tmp_path):

@@ -5,6 +5,7 @@ production stream needs (≙ Iceberg/Hudi MOR, Paimon LSM buckets;
 reference consistency bar: PutIceberg.java append-only commit path)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -132,8 +133,13 @@ def test_compact_buckets_conflicts_with_concurrent_append(spark, tmp_path, monke
         return files
 
     monkeypatch.setattr(t, "_write_buckets", hooked)
+    before = set(os.listdir(f"{path}/data"))
     with pytest.raises(CommitConflict):
         t.compact_buckets(mor)
+    # the aborted compaction removed its files: the racer's are the only new ones
+    assert set(os.listdir(f"{path}/data")) == before | {
+        p.split("/")[-2] for p in racer._manifest()["delta_files"]
+    }
     # the racer's write survives; re-running compaction (fresh base) succeeds
     monkeypatch.setattr(t, "_write_buckets", orig)
     assert _rows(t) == {("c1", 0): "v3"}

@@ -3,6 +3,7 @@ one-shuffle merge plan, Hadoop-FS (file:// URI) table paths."""
 
 from __future__ import annotations
 
+import os
 import uuid as pyuuid
 
 import pytest
@@ -380,8 +381,13 @@ def test_commit_conflict_overlapping_buckets(spark, tmp_path):
         return orig_rename(src, dst)
 
     t._io.rename_no_overwrite = racing_rename
+    before = set(os.listdir(f"{path}/data"))
     with pytest.raises(CommitConflict, match="re-run merge"):
         t.merge(_batch(spark, [(11, "U", c0, 0, "mine")]), KEYS, batch_id=11)
+    # the aborted merge removed its files: the racer's are the only new ones
+    assert set(os.listdir(f"{path}/data")) == before | {
+        p.split("/")[-3] for fl in t2._manifest()["files"].values() for p in fl
+    }
     # winner's update intact; re-running the merge (fresh read) succeeds
     t3 = LakeTable(spark, path, n_buckets=2)
     assert {r.text for r in t3.read().collect()} == {"theirs"}
@@ -404,8 +410,13 @@ def test_compact_aborts_on_concurrent_commit(spark, tmp_path):
         return orig_rename(src, dst)
 
     t._io.rename_no_overwrite = racing_rename
+    before = set(os.listdir(f"{path}/data"))
     with pytest.raises(CommitConflict, match="compact"):
         t.compact()
+    # the aborted compaction removed its files: the racer's are the only new ones
+    assert set(os.listdir(f"{path}/data")) == before | {
+        p.split("/")[-3] for fl in t2._manifest()["files"].values() for p in fl
+    }
     assert {r.text for r in LakeTable(spark, path, 2).read().collect()} == {"b"}
 
 
