@@ -95,18 +95,36 @@ class FsIO:
             return
         self._fs.delete(self._Path(path), True)
 
-    def list_names(self, path: str) -> list[str]:
-        """Basenames of a directory's children ([] when absent)."""
+    def list_names(self, path: str, recursive: bool = False) -> list[str]:
+        """Basenames of a directory's children ([] when absent).
+
+        ``recursive``: the paths, relative to ``path`` and ``/``-joined,
+        of every file in the tree below it (directories are not listed)
+        — one call for a whole partitioned write's output, which on a
+        remote store is one ``listFiles`` walk instead of a listing per
+        partition directory."""
         if self._local:
             p = _local_path(path)
-            try:
-                return os.listdir(p)
-            except FileNotFoundError:
-                return []
+            if not recursive:
+                try:
+                    return os.listdir(p)
+                except FileNotFoundError:
+                    return []
+            return [
+                os.path.relpath(os.path.join(d, f), p).replace(os.sep, "/")
+                for d, _, files in os.walk(p)
+                for f in files
+            ]
         p = self._Path(path)
         if not self._fs.exists(p):
             return []
-        return [st.getPath().getName() for st in self._fs.listStatus(p)]
+        if not recursive:
+            return [st.getPath().getName() for st in self._fs.listStatus(p)]
+        root = self._fs.makeQualified(p).toString().rstrip("/") + "/"
+        out, it = [], self._fs.listFiles(p, True)
+        while it.hasNext():
+            out.append(it.next().getPath().toString()[len(root):])
+        return out
 
     def read_text(self, path: str) -> str:
         if self._local:

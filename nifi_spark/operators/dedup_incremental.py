@@ -126,6 +126,10 @@ class LshIndex:
         self.bands_dir = fsio_join(path, "bands")
         self.sh_dir = fsio_join(path, "shingles")
         self._held: list[DataFrame] = []
+        # the id column's type, learned from the docs of each add_batch:
+        # with it every index read carries its schema, so none launches a
+        # footer-inference job
+        self._id_type: str | None = None
 
     # -- state ------------------------------------------------------------
 
@@ -154,10 +158,24 @@ class LshIndex:
         if cur is None or upto > cur:
             self._io.write_text(fsio_join(self.path, "_compacted_upto"), str(upto))
 
+    def _schema(self, base: str) -> str:
+        """DDL of one batch partition of ``base`` (the bands or the
+        shingles side): its file columns, then its sub-bucket column."""
+        if base == self.bands_dir:
+            cols = "band int, bhash string, pb int"
+        else:
+            cols = "_sh array<bigint>, sb int"
+        return f"`{self.id_col}` {self._id_type}, {cols}"
+
     def _read_part(self, base: str, upto: int) -> DataFrame:
         """Partition-discovered read of ``base`` filtered to batch <= upto
-        (partition pruning keeps later/replayed batches out of the scan)."""
-        return self.spark.read.parquet(base).filter(F.col("batch") <= upto)
+        (partition pruning keeps later/replayed batches out of the scan).
+        The schema is explicit once an add_batch has given the id type; a
+        compact() on an instance that has not seen one infers it."""
+        reader = self.spark.read
+        if self._id_type is not None:
+            reader = reader.schema(f"{self._schema(base)}, batch int")
+        return reader.parquet(base).filter(F.col("batch") <= upto)
 
     def _pb(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.n_sub_buckets)).cast("int")
@@ -235,6 +253,7 @@ class LshIndex:
         _guard_internal(
             docs, ["_sh", "sig", "band", "bhash", "batch", "pb", "sb"], "LshIndex"
         )
+        self._id_type = dict(docs.dtypes)[self.id_col]
 
         band_part = fsio_join(self.bands_dir, f"batch={batch_id}")
         sh_part = fsio_join(self.sh_dir, f"batch={batch_id}")
@@ -283,10 +302,7 @@ class LshIndex:
         # explicit schema: an EMPTY batch writes only _SUCCESS (dynamic
         # partitioning emits no files for zero rows), which would fail
         # schema inference
-        idt = dict(docs.dtypes)[self.id_col]
-        new_bands = self.spark.read.schema(
-            f"`{self.id_col}` {idt}, band int, bhash string, pb int"
-        ).parquet(band_part)
+        new_bands = self.spark.read.schema(self._schema(self.bands_dir)).parquet(band_part)
         # the batch's pb set comes from its partition DIRECTORIES (dynamic
         # partitioning creates pb=X only for present values) — one listing,
         # no Spark job
@@ -310,9 +326,8 @@ class LshIndex:
         if not pbs:  # empty batch: nothing can match anything
             self.last_probe_plan = None  # witnesses reflect THIS batch,
             self.last_sh_buckets = []  # not a stale predecessor
-            return self.spark.createDataFrame(
-                [], f"id_a {idt}, id_b {idt}, jaccard double"
-            )
+            idt = self._id_type
+            return self.spark.createDataFrame([], f"id_a {idt}, id_b {idt}, jaccard double")
         all_bands = self._read_part(self.bands_dir, batch_id).filter(
             F.col("pb").isin(pbs)
         )
@@ -440,8 +455,7 @@ class LshIndex:
             tmp = fsio_join(base, "_tmp_compact")
             self._io.delete(tmp)  # stale pre-marker staging from a crash
             (
-                self.spark.read.parquet(base)
-                .filter(F.col("batch") <= target)
+                self._read_part(base, target)
                 .drop("batch")
                 .repartition(n_files, F.col(pcol))
                 .write.partitionBy(pcol)

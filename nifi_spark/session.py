@@ -60,6 +60,17 @@ def get_spark(
         # reason. Readers (Spark, DuckDB, pyarrow) handle both transparently.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # Spark's generated-code cache (static, one per JVM) defaults to
+        # 100 classes, but one process of this engine generates ~300
+        # distinct ones: 297 for a gated merge stream (txn gate, quality
+        # checks, near-dup index, MV), 308-323 for an append stream plus
+        # its operator queries. At 100 the LRU evicts each plan's classes
+        # before the next batch re-runs it, so a gated batch re-compiled
+        # ~250 classes (Janino, then JIT) for as long as the stream ran.
+        # At ~3x the measured set a steady gated batch compiles ~6 (its
+        # per-batch literals), at the cost of 0.5-2.3% driver RSS
+        # (BENCH/SCALING.md section A).
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

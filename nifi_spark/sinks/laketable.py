@@ -1250,15 +1250,10 @@ class LakeTable:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         writer.mode("overwrite").parquet(out_dir)
         mapping: dict[str, list[str]] = {}
-        for entry in self._io.list_names(out_dir):
-            if entry.startswith("_pb="):
-                b = entry.split("=", 1)[1]
-                pdir = pjoin(out_dir, entry)
-                mapping[b] = [
-                    pjoin(pdir, f)
-                    for f in self._io.list_names(pdir)
-                    if f.endswith(".parquet")
-                ]
+        for rel in self._io.list_names(out_dir, recursive=True):
+            part, _, name = rel.partition("/")
+            if part.startswith("_pb=") and name.endswith(".parquet"):
+                mapping.setdefault(part.split("=", 1)[1], []).append(pjoin(out_dir, rel))
         return mapping
 
     def _write_buckets(

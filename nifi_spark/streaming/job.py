@@ -36,9 +36,9 @@ from __future__ import annotations
 import contextlib
 import functools
 import json
-import threading
 import time
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,7 +61,9 @@ class QualityGateError(RuntimeError):
 def _in_background(fn):
     """Run ``fn()`` on a daemon thread while the ``with`` body runs; on
     exit, wait for it and raise its error — unless the body raised, whose
-    error is the one to keep."""
+    error is the one to keep. The thread inherits the caller's Spark
+    local properties, so its jobs carry the batch's job group and
+    description."""
     err: list[BaseException] = []
 
     def run() -> None:
@@ -70,7 +72,7 @@ def _in_background(fn):
         except BaseException as e:  # re-raised in the caller's thread
             err.append(e)
 
-    t = threading.Thread(target=run, daemon=True)
+    t = InheritableThread(run, daemon=True)
     t.start()
     try:
         yield

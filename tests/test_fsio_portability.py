@@ -157,3 +157,19 @@ def test_maxvalue_state_file_scheme(spark, tmp_path):
     assert st2.get("t", "c") == 5
     with pytest.raises(ValueError, match="spark handle"):
         MaxValueState("hdfs://nn/state.json")
+
+
+def test_recursive_listing_same_on_both_branches(spark, tmp_path):
+    """``list_names(recursive=True)`` gives every file below a directory
+    as a ``/``-joined relative path, the same through ``os.walk`` (plain
+    path) and Hadoop's ``listFiles`` (``file://``), and [] when absent."""
+    from nifi_spark.fsio import FsIO
+
+    for rel in ("_SUCCESS", "_pb=0/a.parquet", "_pb=0/b.parquet", "_pb=12/c.parquet"):
+        (tmp_path / "out" / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / "out" / rel).write_bytes(b"")
+    want = ["_SUCCESS", "_pb=0/a.parquet", "_pb=0/b.parquet", "_pb=12/c.parquet"]
+    for base in (str(tmp_path), _file_uri(tmp_path)):
+        io = FsIO(spark, base)
+        assert sorted(io.list_names(f"{base}/out", recursive=True)) == want
+        assert io.list_names(f"{base}/missing", recursive=True) == []
