@@ -306,22 +306,11 @@ class LshIndex:
         # the batch's pb set comes from its partition DIRECTORIES (dynamic
         # partitioning creates pb=X only for present values) — one listing,
         # no Spark job
-        part_names = self._io.list_names(band_part)
         pbs = sorted(
             int(name.split("=", 1)[1])
-            for name in part_names
+            for name in self._io.list_names(band_part)
             if name.startswith("pb=")
         )
-        if not pbs and any(n.endswith(".parquet") for n in part_names):
-            # data files directly under batch=N with no pb= dirs: an index
-            # persisted by the pre-sub-bucket layout. Refuse loudly — a
-            # silent empty probe (no matching partitions) or a mixed-layout
-            # partition-discovery failure would be far worse.
-            raise ValueError(
-                f"LshIndex at {self.path}: batch {batch_id} uses the "
-                "legacy flat layout (no pb= sub-buckets); rebuild the "
-                "index (re-ingest or one-shot re-add) before probing"
-            )
         self.last_pb_buckets = pbs  # pruning witness (tests/ops visibility)
         if not pbs:  # empty batch: nothing can match anything
             self.last_probe_plan = None  # witnesses reflect THIS batch,

@@ -46,11 +46,9 @@ def get_spark(
         # struct buffer and always plan as SortAggregate — this knob does
         # not affect the LWW fold; see operators/ordering.py.)
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-        # The LakeTable merge repartitions both sides on _bucket (a function
-        # of the join key) and joins on (_bucket, key...): subset-key hash
-        # partitioning is a valid co-partitioning for that join, and
-        # accepting it removes two full-data exchanges from every merge
-        # (sinks/laketable.py "one-shuffle physical plan"). Spark rejects
+        # A join whose sides are already hash-partitioned on a subset of
+        # its keys (e.g. on a bucket id that is a function of the key) is
+        # co-partitioned: accepting that adds no exchange. Spark rejects
         # subset co-partitioning by default only as a skew heuristic.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -64,17 +64,20 @@ table over parquet — the Iceberg model re-expressed, not a toy:
   Iceberg COW with partition pruning.
 - **MERGE semantics**: :meth:`merge_events` applies a change batch with the
   arms of PutDatabaseRecord's statement types (reference
-  .../standard/PutDatabaseRecord.java:119-128 INSERT/UPDATE/UPSERT/DELETE):
-  source newer than target → update (or tombstone when op='D'); source for
-  absent key → insert (unless a newer tombstone exists); stale source →
-  ignored (cross-batch last-writer-wins guard ``source.seq > target._seq``).
-- **One-shuffle physical plan**: the batch is hash-repartitioned once on
-  ``_bucket``; because ``_bucket`` is a function of the join/group key, the
-  LWW fold (``groupBy(_bucket, key)``), the full-outer merge join against
-  the bucket-repartitioned target, and the ``partitionBy(_pb)`` file write
-  all reuse that single exchange (subset-key co-partitioning —
-  ``spark.sql.requireAllClusterKeysForCoPartition=false``, set in
-  session.py). Verified by plan assertion in tests/test_laketable.py.
+  .../standard/PutDatabaseRecord.java:119-128 INSERT/UPDATE/UPSERT/DELETE)
+  as one last-writer-wins fold over the touched buckets' rows plus the
+  batch's: per key the highest ``_seq`` wins, so a newer source row
+  updates (or tombstones when op='D'), a source row for an absent key
+  inserts, and a stale one loses (the cross-batch guard
+  ``source.seq > target._seq``). On equal ``_seq`` the table's row wins —
+  the fold orders by ``(_seq, is_table_row)``, which is the ``s.seq >
+  t._seq`` arm of :func:`iceberg_merge_sql`.
+- **One fold, one shuffle**: every bucket rewrite — merge, a table's
+  first commit, compaction and rebucket — goes through :meth:`_fold`:
+  rows are hash-repartitioned once on ``_bucket``; because ``_bucket`` is
+  a function of the key, the fold (``groupBy(_bucket, key)``) and the
+  ``partitionBy(_pb)`` file write reuse that single exchange. Verified by
+  plan assertion in tests/test_round2.py.
 - **Merge-on-read mode**: :meth:`append_events` commits a change batch as
   flat whole-batch delta file(s) (manifest ``delta_files``) without ever
   reading the base — O(batch) per commit, one narrow Spark stage — and
@@ -1100,9 +1103,9 @@ class LakeTable:
         **write_opts,
     ) -> int | None:
         """The compaction body: fold ``buckets`` (None = the whole table,
-        committed as a full manifest) to one generation of bucket files,
-        optionally purging old tombstones. Returns None when there is
-        nothing to rewrite."""
+        committed as a full manifest) to one generation of bucket files —
+        which repays the merge-on-read debt — optionally purging old
+        tombstones. Returns None when there is nothing to rewrite."""
         head = self._head()
         if head is None:
             return None
@@ -1116,11 +1119,10 @@ class LakeTable:
             base_files.get(str(b)) for b in buckets
         ):
             return None
-        df = self.read_raw(buckets=None if whole else buckets, version=head["version"])
-        if mor:
-            # fold the merge-on-read generations away: compaction is where
-            # that read debt is repaid
-            df = self._lww_fold_read(df, head["key_cols"])
+        df = self._fold(
+            self.read_raw(buckets=None if whole else buckets, version=head["version"]),
+            head["key_cols"],
+        )
         if purge_tombstones_below_seq is not None:
             df = df.filter(
                 ~(
@@ -1129,7 +1131,7 @@ class LakeTable:
                 )
             )
         tag = self._new_tag()
-        new_files = self._write_buckets(df, tag, **write_opts)
+        new_files = self._write_partitioned(df, tag, **write_opts)
         files = {str(b): new_files.get(str(b), []) for b in buckets}
         new_stats = self._collect_stats(files, head)
 
@@ -1214,8 +1216,33 @@ class LakeTable:
     def _tag_dir(self, version_tag: str) -> str:
         return pjoin(self.path, _DATA, version_tag)
 
-    def _bucket_col(self, key_col: str) -> F.Column:
-        return F.pmod(F.xxhash64(F.col(key_col)), F.lit(self.n_buckets)).cast("int")
+    def _bucket_col(self, key_col: str, n_buckets: int | None = None) -> F.Column:
+        n = n_buckets or self.n_buckets
+        return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
+
+    def _fold(
+        self,
+        rows: DataFrame,
+        key_cols: list[str],
+        n_buckets: int | None = None,
+        tie: str | None = None,
+    ) -> DataFrame:
+        """The write path's last-writer-wins kernel, shared by every bucket
+        rewrite (merge, a table's first commit, compaction, rebucket).
+        ``rows`` carry the user columns plus ``_seq``, ``_deleted`` and
+        ``_bucket``; they are hash-repartitioned once on ``_bucket`` and
+        folded per key to the row with the highest ``_seq`` — the
+        ``groupBy(_bucket, key)`` and the partitioned file write both reuse
+        that one exchange. ``tie`` names a column that breaks ``_seq`` ties
+        (the higher value wins); it is not in the result."""
+        vals = [c for c in rows.columns if c not in (*key_cols, "_bucket", tie)]
+        order = F.struct("_seq", tie) if tie else F.col("_seq")
+        return (
+            rows.repartition(n_buckets or self.n_buckets, F.col("_bucket"))
+            .groupBy("_bucket", *key_cols)
+            .agg(F.max_by(F.struct(*vals), order).alias("_w"))
+            .select(*key_cols, "_w.*", "_bucket")
+        )
 
     def _write_partitioned(
         self,
@@ -1256,21 +1283,6 @@ class LakeTable:
                 mapping.setdefault(part.split("=", 1)[1], []).append(pjoin(out_dir, rel))
         return mapping
 
-    def _write_buckets(
-        self,
-        df: DataFrame,
-        version_tag: str,
-        sort_by: list[str] | None = None,
-        max_records_per_file: int | None = None,
-    ) -> dict[str, list[str]]:
-        """Repartition on _bucket then write (for dfs not already aligned)."""
-        return self._write_partitioned(
-            df.repartition(self.n_buckets, F.col("_bucket")),
-            version_tag,
-            sort_by=sort_by,
-            max_records_per_file=max_records_per_file,
-        )
-
     def _write_flat(
         self, df: DataFrame, version_tag: str, codec: str = "snappy"
     ) -> list[str]:
@@ -1295,12 +1307,13 @@ class LakeTable:
         At 100× growth a 16-bucket table serializes every merge onto 16
         tasks; this is the maintenance op that restores write parallelism.
 
-        One full keyed shuffle of live rows (tombstones and their _seq
-        survive — the LWW guard must keep working across the rewrite);
-        merge-on-read delta generations are folded in, so the new layout
-        starts with zero MOR debt. Commits a flattened manifest (depth 0,
-        no base pointer). A concurrent commit that rewrote a bucket or
-        appended rows raises CommitConflict; the caller re-runs.
+        One :meth:`_fold` of every row under the new ``_bucket`` — a single
+        shuffle (tombstones and their _seq survive — the LWW guard must
+        keep working across the rewrite); merge-on-read delta generations
+        are folded in, so the new layout starts with zero MOR debt.
+        Commits a flattened manifest (depth 0, no base pointer). A
+        concurrent commit that rewrote a bucket or appended rows raises
+        CommitConflict; the caller re-runs.
         """
         if new_n_buckets < 1:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
@@ -1308,17 +1321,11 @@ class LakeTable:
         if head is None:
             raise CommitConflict("cannot rebucket an empty table")
         key_cols = list(head["key_cols"])
-        rows = self.read_raw(version=head["version"])
-        if head.get("mor_buckets"):
-            rows = self._lww_fold_read(rows, key_cols)
-        rebucketed = rows.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(new_n_buckets)).cast("int"),
+        rows = self.read_raw(version=head["version"]).withColumn(
+            "_bucket", self._bucket_col(key_cols[0], new_n_buckets)
         )
         tag = self._new_tag()
-        files = self._write_partitioned(
-            rebucketed.repartition(new_n_buckets, F.col("_bucket")), tag
-        )
+        files = self._write_partitioned(self._fold(rows, key_cols, new_n_buckets), tag)
         new_stats = self._collect_stats(files, head)
         old_n = self.n_buckets
 
@@ -1347,7 +1354,7 @@ class LakeTable:
             df = df.withColumn("_deleted", F.lit(False))
         df = df.withColumn("_bucket", self._bucket_col(key_cols[0]))
         tag = self._new_tag()
-        files = self._write_buckets(df, tag)
+        files = self._write_partitioned(df.repartition(self.n_buckets, F.col("_bucket")), tag)
         schema_json = json.dumps(df.schema.jsonValue())
         new_stats = self._collect_stats(files, head)
 
@@ -1418,11 +1425,10 @@ class LakeTable:
         batch_id: int | None = None,
         extra_summary: dict | None = None,
     ) -> int | None:
-        """MERGE a pre-folded change batch (one row per key, op ∈ I/U/D).
+        """MERGE a change batch (op ∈ I/U/D).
 
-        Compatibility wrapper over :meth:`merge_events` with
-        ``pre_folded=True``. Equivalent SQL (the real-Iceberg path,
-        IcebergMergeSink):
+        Compatibility wrapper over :meth:`merge_events`. Equivalent SQL
+        (the real-Iceberg path, IcebergMergeSink):
 
             MERGE INTO t USING b ON t.k = b.k
             WHEN MATCHED AND b.seq > t._seq AND b.op = 'D' THEN UPDATE SET _deleted=true, _seq=b.seq
@@ -1432,9 +1438,7 @@ class LakeTable:
         Returns the new version, or None if ``batch_id`` was already
         committed (idempotent replay).
         """
-        return self.merge_events(
-            batch, key_cols, seq_col, op_col, batch_id, extra_summary, pre_folded=True
-        )
+        return self.merge_events(batch, key_cols, seq_col, op_col, batch_id, extra_summary)
 
     def merge_events(
         self,
@@ -1444,17 +1448,13 @@ class LakeTable:
         op_col: str = "op",
         batch_id: int | None = None,
         extra_summary: dict | None = None,
-        pre_folded: bool = False,
         touched: list[int] | None = None,
     ) -> int | None:
-        """Fold a raw change batch to last-writer-wins per key and MERGE it —
-        one physical shuffle for fold + join + write: raw events
-        hash-repartition on ``_bucket`` once, the per-key LWW fold runs
-        inside bucket partitions (``groupBy(_bucket, key)`` reuses the
-        exchange), and the merge join and the partitioned file write reuse
-        it too. ``pre_folded=True`` (one row per key already — e.g. the
-        salted hot-key fold, operators/ordering.lww_fold_salted) skips the
-        fold.
+        """MERGE a raw change batch, copy-on-write: the touched buckets'
+        rows and the batch's go through one :meth:`_fold` — a single
+        shuffle on ``_bucket`` for fold and file write — so in-batch
+        duplicates and the table's rows reconcile by the same
+        last-writer-wins rule (on equal ``_seq`` the table's row wins).
 
         Key columns must be non-null (null keys belong in the DLQ — the
         pipeline routes them there before this call).
@@ -1471,42 +1471,31 @@ class LakeTable:
         head = self._head()
         if self._is_replay(head, batch_id):
             return None  # already applied — exactly-once on replay
-        payload_cols = [
-            c for c in events.columns if c not in (*key_cols, seq_col, op_col)
-        ]
-        folded = self._fold_events(events, key_cols, seq_col, pre_folded)
-
+        rows = self._change_rows(events, key_cols, seq_col, op_col)
         if head is None:
-            return self._commit_initial(
-                folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
-            )
+            return self._commit_initial(rows, key_cols, batch_id, extra_summary)
         if touched is not None:
             return self._merge_incremental(
-                head, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
-                payload_cols, touched=sorted(touched),
+                head, rows, key_cols, batch_id, extra_summary, touched=sorted(touched)
             )
-        # Probe path: the touched-bucket probe and the merge join both read
-        # the folded batch — cache it across the two actions.
-        folded = folded.cache()
+        # Probe path: the touched-bucket probe and the merge both read the
+        # batch — cache it across the two actions.
+        rows = rows.cache()
         try:
-            return self._merge_incremental(
-                head, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
-                payload_cols,
-            )
+            return self._merge_incremental(head, rows, key_cols, batch_id, extra_summary)
         finally:
-            folded.unpersist()
+            rows.unpersist()
 
-    def _fold_events(self, events, key_cols, seq_col, pre_folded):
-        """Batch-local LWW fold, bucket-aligned (see merge_events)."""
-        src = events.withColumn("_bucket", self._bucket_col(key_cols[0]))
-        np = [c for c in events.columns if c not in key_cols]  # non-key incl seq/op
-        if pre_folded:
-            return src.repartition(self.n_buckets, F.col("_bucket"))
-        return (
-            src.repartition(self.n_buckets, F.col("_bucket"))
-            .groupBy("_bucket", *key_cols)
-            .agg(F.max_by(F.struct(*np), F.col(seq_col)).alias("_w"))
-            .select("_bucket", *key_cols, "_w.*")
+    def _change_rows(self, events, key_cols, seq_col, op_col) -> DataFrame:
+        """A change batch as table rows: key and payload columns plus
+        ``_seq``, ``_deleted`` (op='D') and ``_bucket``."""
+        payload_cols = [c for c in events.columns if c not in (*key_cols, seq_col, op_col)]
+        return events.select(
+            *key_cols,
+            *payload_cols,
+            F.col(seq_col).cast("long").alias("_seq"),
+            (F.col(op_col) == "D").alias("_deleted"),
+            self._bucket_col(key_cols[0]).alias("_bucket"),
         )
 
     def append_events(
@@ -1517,7 +1506,6 @@ class LakeTable:
         op_col: str = "op",
         batch_id: int | None = None,
         extra_summary: dict | None = None,
-        pre_folded: bool = False,
         touched: list[int] | Callable[[], list[int]] | None = None,
     ) -> int | None:
         """Merge-on-read MERGE: APPEND the batch as flat whole-batch delta
@@ -1538,7 +1526,7 @@ class LakeTable:
         :meth:`compact`), which folds the deltas into per-bucket zstd
         files — the streaming pipeline runs it on a cadence. A table's
         first commit is its base image (``read`` does not fold clean
-        buckets), so that one is folded (``pre_folded`` skips the fold).
+        buckets), so that one is folded.
 
         ``touched`` may be a list of bucket ids, a zero-arg callable
         evaluated after the delta write (the pipeline's observe() hook),
@@ -1558,23 +1546,12 @@ class LakeTable:
         head = self._head()
         if self._is_replay(head, batch_id):
             return None  # already applied — exactly-once on replay
-        payload_cols = [
-            c for c in events.columns if c not in (*key_cols, seq_col, op_col)
-        ]
+        delta = self._change_rows(events, key_cols, seq_col, op_col)
         if head is None:
-            return self._commit_initial(
-                self._fold_events(events, key_cols, seq_col, pre_folded),
-                key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols,
-            )
+            return self._commit_initial(delta, key_cols, batch_id, extra_summary)
         # scan → flat files, one narrow stage: delta volume is O(events),
         # not O(keys); the compaction cadence repays it
-        delta = events.select(
-            *key_cols,
-            *payload_cols,
-            F.col(seq_col).cast("long").alias("_seq"),
-            (F.col(op_col) == "D").alias("_deleted"),
-            self._bucket_col(key_cols[0]).alias("_bucket"),
-        )
+        payload_cols = [c for c in delta.columns if c not in (*key_cols, *INTERNAL_COLS)]
         src_types = {f.name: f.dataType for f in delta.schema.fields}
         tag = self._new_tag()
         new_paths = self._write_flat(delta, tag)
@@ -1618,23 +1595,15 @@ class LakeTable:
 
         return self._commit(head, build, what="append", batch_id=batch_id, staged=tag)
 
-    def _commit_initial(
-        self, folded, key_cols, seq_col, op_col, batch_id, extra_summary, payload_cols
-    ) -> int | None:
+    def _commit_initial(self, rows, key_cols, batch_id, extra_summary) -> int | None:
         """A batch that finds no head at entry becomes the table's base
-        image. If another writer creates the table first, the rename loses
-        and the commit refuses (unless that writer applied this batch):
-        these files ignore its rows."""
-        merged = folded.select(
-            *key_cols,
-            *payload_cols,
-            F.col(seq_col).cast("long").alias("_seq"),
-            (F.col(op_col) == "D").alias("_deleted"),
-            "_bucket",
-        )
-        schema_json = json.dumps(merged.schema.jsonValue())
+        image, folded alone. If another writer creates the table first,
+        the rename loses and the commit refuses (unless that writer applied
+        this batch): these files ignore its rows."""
+        folded = self._fold(rows, key_cols)
+        schema_json = json.dumps(folded.schema.jsonValue())
         tag = self._new_tag()
-        files = self._write_partitioned(merged, tag)
+        files = self._write_partitioned(folded, tag)
         if not files:  # empty first batch — don't commit an empty table
             self._io.delete(self._tag_dir(tag))
             return None
@@ -1649,95 +1618,43 @@ class LakeTable:
         return self._commit(None, build, what="merge", batch_id=batch_id, staged=tag)
 
     def _merge_incremental(
-        self, head, folded, key_cols, seq_col, op_col, batch_id, extra_summary,
-        payload_cols, touched: list[int] | None = None,
+        self, head, rows, key_cols, batch_id, extra_summary, touched: list[int] | None = None
     ) -> int | None:
-        # ---- schema evolution: append new payload columns (nullable),
-        # widen existing ones along Iceberg promotion chains ----
+        """The copy-on-write merge body: rewrite the touched buckets as one
+        :meth:`_fold` of their rows at ``head`` (base files plus any
+        merge-on-read delta rows) and the batch ``rows``, both cast to the
+        evolved schema. The table's rows carry the higher tie rank, so on
+        equal ``_seq`` the table's row wins."""
+        # schema evolution: append new payload columns (nullable), widen
+        # existing ones along Iceberg promotion chains
         table_schema = T.StructType.fromJson(json.loads(head["schema"]))
-        src_types = {f.name: f.dataType for f in folded.schema.fields}
-        evolved = _evolve_schema(table_schema, payload_cols, src_types, key_cols)
-        user_cols = [f.name for f in evolved.fields if f.name not in INTERNAL_COLS]
-
-        # ---- bucket pruning: rewrite only touched buckets ----
+        our_user_types = {
+            f.name: f.dataType for f in rows.schema.fields if f.name not in INTERNAL_COLS
+        }
+        val_cols = [c for c in our_user_types if c not in key_cols]
+        evolved = _evolve_schema(table_schema, val_cols, our_user_types, key_cols)
+        # bucket pruning: rewrite only touched buckets
         if touched is None:
-            touched = sorted(
-                r[0] for r in folded.select("_bucket").distinct().collect()
-            )
-        base_files = self._resolve_files(head["version"])
-        touched_files = [
-            f for b, fl in base_files.items() if int(b) in touched for f in fl
-        ]
-        target = (
-            self.spark.read.schema(evolved).parquet(*touched_files)
-            if touched_files
-            else self.spark.createDataFrame([], evolved)
-        )
-        base_mor = {int(b) for b in head.get("mor_buckets", [])}
-        base_delta_files = head.get("delta_files", [])
-        mor_touched = base_mor & set(touched)
-        if base_delta_files and mor_touched:
-            # flat MOR delta rows for our buckets live outside the bucket
-            # file lists — surface them (evolved schema null-fills)
-            target = target.unionByName(
-                self.spark.read.schema(evolved)
-                .parquet(*base_delta_files)
-                .filter(F.col("_bucket").isin(sorted(mor_touched)))
-            )
-        if mor_touched:
-            # MOR buckets carry multiple delta generations (duplicate keys
-            # across files) — fold to one row per key before the merge join
-            target = self._lww_fold_read(target, key_cols)
+            touched = sorted(r[0] for r in rows.select("_bucket").distinct().collect())
 
-        # ---- bucket-aligned full-outer merge join (no added exchange:
-        # both sides are hash-partitioned on the _bucket join key) ----
-        evolved_types = {f.name: f.dataType for f in evolved.fields}
-        val_cols = [c for c in user_cols if c not in key_cols]
-        src_sel = folded.select(
-            F.col("_bucket").alias("_sb"),
-            *[F.col(k).alias(f"_s_{k}") for k in key_cols],
-            F.struct(
+        def conform(df: DataFrame, is_table_row: bool) -> DataFrame:
+            have = set(df.columns)
+            return df.select(
                 *[
-                    # cast-up so src/target struct types agree after a
-                    # widening evolution (no-op when types already match)
-                    (
-                        F.col(c).cast(evolved_types[c])
-                        if c in folded.columns
-                        else F.lit(None).cast(evolved_types[c])
-                    ).alias(c)
-                    for c in val_cols
+                    (F.col(f.name) if f.name in have else F.lit(None))
+                    .cast(f.dataType).alias(f.name)
+                    for f in evolved.fields
                 ],
-                F.col(seq_col).cast("long").alias("_seq"),
-                (F.col(op_col) == "D").alias("_deleted"),
-                F.col("_bucket"),
-            ).alias("_src"),
-        )
-        tgt_sel = target.repartition(self.n_buckets, F.col("_bucket")).select(
-            F.col("_bucket").alias("_tb"),
-            *key_cols,
-            F.struct(*val_cols, "_seq", "_deleted", "_bucket").alias("_tgt"),
-        )
-        joined = tgt_sel.join(
-            src_sel,
-            on=[F.col("_tb") == F.col("_sb")]
-            + [F.col(k) == F.col(f"_s_{k}") for k in key_cols],
-            how="full_outer",
-        )
-        take_src = F.col("_tgt").isNull() | (
-            F.col("_src").isNotNull() & (F.col("_src._seq") > F.col("_tgt._seq"))
-        )
-        winner = F.when(take_src, F.col("_src")).otherwise(F.col("_tgt"))
-        merged = joined.select(
-            *[F.coalesce(F.col(k), F.col(f"_s_{k}")).alias(k) for k in key_cols],
-            winner.alias("_w"),
-        ).select(*key_cols, "_w.*")
+                F.lit(is_table_row).alias("_tbl"),
+            )
 
+        target = self.read_raw(buckets=touched, version=head["version"])
+        merged = self._fold(
+            conform(target, True).unionByName(conform(rows, False)), key_cols, tie="_tbl"
+        )
         tag = self._new_tag()
         new_files = self._write_partitioned(merged, tag)
         new_stats = self._collect_stats(new_files, head)
-        our_user_types = {
-            f.name: f.dataType for f in evolved.fields if f.name not in INTERNAL_COLS
-        }
 
         def build(h: dict) -> dict:
             # re-derive the schema against the head built on, so a rebase

@@ -814,10 +814,7 @@ class CdcPipeline:
         Returns ``(version, per_file)``: the committed version (None when
         nothing committed) and the ``self._obs_aggs`` rows, one per source
         file."""
-        kw = dict(
-            seq_col="seq", op_col="op", batch_id=batch_id,
-            pre_folded=self.salt_buckets > 1,
-        )
+        kw = dict(seq_col="seq", op_col="op", batch_id=batch_id)
         if self.sink_mode == "merge":
             per_file = self._per_file(flagged)
             counts = self._counts(per_file)
@@ -853,8 +850,7 @@ class CdcPipeline:
 
     def _payload(self, flagged: DataFrame) -> DataFrame:
         """The admitted events in sink column order, salted-folded when
-        ``salt_buckets > 1`` (the hot-key defence; the sink is then told
-        ``pre_folded``)."""
+        ``salt_buckets > 1`` (the hot-key defence)."""
         events = flagged.filter(self._good)
         if self.from_json_payload:
             payload = events.select(*self._payload_cols)
@@ -1081,8 +1077,7 @@ class CdcPipeline:
             # docs x matched buckets), so one writer suffices. A batch
             # with no pairs writes one empty file that carries the schema.
             (
-                pairs.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
+                pairs.observe(obs, F.count(F.lit(1)).alias("n"))
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(

@@ -123,16 +123,16 @@ def test_compact_buckets_conflicts_with_concurrent_append(spark, tmp_path, monke
     mor = [int(b) for b in t._manifest()["mor_buckets"]]
     racer = LakeTable(spark, path, n_buckets=4)
     racer_batch = _batch(spark, [(3, "U", "c1", 0, "user", "v3", None, TS)])
-    orig = t._write_buckets
+    orig = t._write_partitioned
 
-    def hooked(df, prefix):
-        files = orig(df, prefix)
+    def hooked(df, prefix, **kw):
+        files = orig(df, prefix, **kw)
         # a racer appends to the compacting bucket after our read, before
         # our commit — its rows would be silently dropped by the rewrite
         racer.append_events(racer_batch, KEYS, batch_id=3)
         return files
 
-    monkeypatch.setattr(t, "_write_buckets", hooked)
+    monkeypatch.setattr(t, "_write_partitioned", hooked)
     before = set(os.listdir(f"{path}/data"))
     with pytest.raises(CommitConflict):
         t.compact_buckets(mor)
@@ -141,7 +141,7 @@ def test_compact_buckets_conflicts_with_concurrent_append(spark, tmp_path, monke
         p.split("/")[-2] for p in racer._manifest()["delta_files"]
     }
     # the racer's write survives; re-running compaction (fresh base) succeeds
-    monkeypatch.setattr(t, "_write_buckets", orig)
+    monkeypatch.setattr(t, "_write_partitioned", orig)
     assert _rows(t) == {("c1", 0): "v3"}
     t.compact_buckets([int(b) for b in t._manifest()["mor_buckets"]])
     assert t._manifest()["mor_buckets"] == []

@@ -312,22 +312,68 @@ def _batch(spark, rows):
     )
 
 
-def test_merge_events_single_exchange_plan(spark):
-    """The fold groupBy must reuse the bucket repartition exchange."""
-    import tempfile
+def _bucket_keys(spark, t):
+    """One conv id per bucket of ``t``, in bucket order."""
+    probe = spark.createDataFrame(
+        [(f"c{i}",) for i in range(40)], "conv_id string"
+    ).withColumn("b", t._bucket_col("conv_id")).collect()
+    return [next(r.conv_id for r in probe if r.b == b) for b in range(t.n_buckets)]
 
-    with tempfile.TemporaryDirectory() as d:
-        t = LakeTable(spark, d, n_buckets=8)
-        ev = _batch(spark, [(1, "I", "c1", 0, "a"), (2, "U", "c1", 0, "b")])
-        src = ev.withColumn("_bucket", t._bucket_col("conv_id"))
-        np_ = [c for c in ev.columns if c not in KEYS]
-        folded = (
-            src.repartition(8, F.col("_bucket"))
-            .groupBy("_bucket", *KEYS)
-            .agg(F.max_by(F.struct(*np_), F.col("seq")).alias("_w"))
-        )
-        plan = folded._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1
+
+def test_merge_events_single_exchange_plan(spark, tmp_path, monkeypatch):
+    """Every bucket rewrite hands its file write ONE hash exchange (on
+    ``_bucket``) and no join — the fold and the partitioned write reuse
+    it: a merge touching a merge-on-read bucket, a merge touching clean
+    buckets only, and compact_buckets."""
+    t = LakeTable(spark, str(tmp_path / "t"), n_buckets=2)
+    c0, c1 = _bucket_keys(spark, t)
+    t.merge(_batch(spark, [(1, "I", c0, 0, "a"), (2, "I", c1, 0, "b")]), KEYS, batch_id=0)
+    t.append_events(_batch(spark, [(3, "U", c0, 0, "a2")]), KEYS, batch_id=1)
+    assert t._manifest()["mor_buckets"] == [0]
+    plans = []
+    real = t._write_partitioned
+
+    def capture(df, tag, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, tag, **kw)
+
+    monkeypatch.setattr(t, "_write_partitioned", capture)
+    # merge-on-read bucket, touched set handed in (the pipeline's shape)
+    t.merge_events(_batch(spark, [(4, "U", c0, 0, "a3")]), KEYS, batch_id=2, touched=[0])
+    # clean bucket, probe path (touched derived by the merge)
+    t.merge_events(_batch(spark, [(5, "U", c1, 0, "b2")]), KEYS, batch_id=3)
+    t.append_events(_batch(spark, [(6, "U", c0, 0, "a4")]), KEYS, batch_id=4)
+    t.compact_buckets([0])
+    assert len(plans) == 3
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "Join" not in plan, plan
+    assert {r.conv_id: r.text for r in t.read().collect()} == {c0: "a4", c1: "b2"}
+
+
+def test_merge_equal_seq_keeps_table_row(spark, tmp_path):
+    """A batch row whose seq equals the table's row for its key loses:
+    the table's row stays (the ``s.seq > t._seq`` guard of MERGE INTO),
+    whether that row sits in a bucket file or in a merge-on-read delta.
+    A strictly newer row still wins and an absent key still inserts."""
+    t = LakeTable(spark, str(tmp_path / "t"), n_buckets=2)
+    c0, c1 = _bucket_keys(spark, t)
+    t.merge(_batch(spark, [(5, "I", c0, 0, "base"), (5, "I", c1, 0, "base")]), KEYS, batch_id=0)
+    t.append_events(_batch(spark, [(7, "U", c1, 0, "delta")]), KEYS, batch_id=1)
+    t.merge_events(
+        _batch(spark, [
+            (5, "D", c0, 0, None),  # tie with a bucket-file row
+            (7, "U", c1, 0, "batch"),  # tie with a delta row
+            (5, "U", c0, 1, "new"),  # absent key
+        ]),
+        KEYS, batch_id=2,
+    )
+    got = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
+    assert got == {(c0, 0): "base", (c1, 0): "delta", (c0, 1): "new"}
+    t.merge_events(_batch(spark, [(8, "U", c1, 0, "newer")]), KEYS, batch_id=3)
+    assert {r.conv_id: r.text for r in t.read().filter("turn_idx = 0").collect()} == {
+        c0: "base", c1: "newer"
+    }
 
 
 def test_commit_rebase_disjoint_buckets(spark, tmp_path):
