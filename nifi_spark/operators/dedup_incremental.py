@@ -7,28 +7,36 @@ these NEW documents near-duplicate anything ingested SO FAR?". Recomputing
 the self-join per batch is O(corpus) per batch — at 10^10 documents that is
 the whole job again each trigger. :class:`LshIndex` makes it O(batch):
 
-- the index persists, per ingested document, its ``n_bands`` LSH band rows
-  ``(doc_id, band, bhash)`` under ``path/bands/batch=N/pb=K/`` and its
+- the index is a set of immutable PARTS named by one JSON manifest,
+  ``path/_commits/v{N:08d}.json`` — its only commit point, staged with
+  ``FsIO.write_text`` and published by ``FsIO.rename_no_overwrite``, as
+  the lake table commits (Structured Streaming versions operator state
+  the same way). A batch's part holds, per document, its ``n_bands`` LSH
+  band rows ``(doc_id, band, bhash)`` under ``bands/batch=N/pb=K/`` and its
   distinct hashed-shingle array (the exact-verify side) under
-  ``path/shingles/batch=N/sb=K/`` — append-only, one partition directory
-  per batch, idempotent by ``batch_id`` (a replayed batch detects its
-  ``_SUCCESS`` marker, skips the write, and re-derives the same pairs);
+  ``shingles/batch=N/sb=K/``; the manifest records each part's id, its two
+  directories and the sub-buckets each holds. Idempotent by ``batch_id``:
+  a replay finds its id in the head and re-derives the same pairs; a
+  write that crashed before its publish left files no manifest names;
+- :meth:`LshIndex.compact` folds the parts up to a cursor into one part
+  under a fresh directory, publishes a manifest naming it with
+  ``compacted_upto``, and only then deletes every data directory the head
+  does not name;
 - both sides are SUB-BUCKETED by hash (``pb = pmod(xxhash64(bhash),
   n_sub_buckets)`` on the band side, ``sb = pmod(xxhash64(doc_id),
   n_sub_buckets)`` on the shingle side), so a probe reads only the index
   files whose buckets the new batch can possibly hit — the scan is
-  O(index / n_sub_buckets × buckets-hit), not O(index). Without the
-  sub-bucket layout every micro-batch re-listed and re-scanned the whole
-  persisted index (the r4 scale-shape finding). The writes repartition by
-  the sub-bucket, so each ``pb=``/``sb=`` directory of a batch holds ONE
-  file, whatever the batch's task count: a probe or a compaction lists
-  and opens one file per sub-bucket and batch;
+  O(index / n_sub_buckets × buckets-hit), not O(index). The writes
+  repartition by the sub-bucket, so each ``pb=``/``sb=`` directory of a
+  part holds ONE file, whatever the batch's task count;
 - a batch probe joins the NEW band rows (small, broadcast) against the
   pruned index scan on ``(band, bhash)``: the corpus is never re-shingled
   and never shuffled — per-batch cost is O(batch + matched buckets). Both
   sides prune STATICALLY: the new batch's ``pb`` set and the candidate
-  ids' ``sb`` set (each bounded by ``n_sub_buckets``, each one bounded
-  collect) are pushed as partition ``IN`` filters;
+  ids' ``sb`` set (each bounded by ``n_sub_buckets``; the first is known
+  from the manifest, the second is one bounded collect) select the
+  ``pb=K``/``sb=K`` directories the head names, read as explicit paths
+  with an explicit schema — no partition discovery, no schema inference;
 - the sb prune requires materializing the candidate set inside
   ``add_batch`` (one eager Spark job per batch — its sub-bucket values
   cannot be known before the probe join runs; the checkpointed candidates
@@ -58,13 +66,15 @@ arrays ~8 B/shingle — both linear, partitioned by (ingest batch,
 sub-bucket); the probe broadcasts only the new batch's band rows and
 bucket counts and scans only the hit sub-buckets; compaction of many small
 batch directories is the same maintenance story as the lake table's
-(re-write old partitions wider — layout, not semantics; sub-buckets are
+(re-write old parts wider — layout, not semantics; sub-buckets are
 preserved so compacted history prunes identically).
 """
 
 from __future__ import annotations
 
 import json
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,6 +82,7 @@ from pyspark.sql import functions as F
 from ..fsio import FsIO
 from ..fsio import join as fsio_join
 from ..session import release_checkpoint
+from ..sinks.laketable import CommitConflict
 from .dedup_fuzzy import (
     _guard_internal,
     band_rows,
@@ -80,6 +91,10 @@ from .dedup_fuzzy import (
     shingles,
     verify_jaccard_pairs,
 )
+
+_MANIFEST = re.compile(r"v\d{8}\.json")
+# the two sides of a part, each with its sub-bucket column, in write order
+_SIDES = (("shingles", "sb"), ("bands", "pb"))
 
 
 class LshIndex:
@@ -123,59 +138,100 @@ class LshIndex:
         self.max_bucket = max_bucket
         self.n_sub_buckets = n_sub_buckets
         self._io = FsIO(spark, path)
-        self.bands_dir = fsio_join(path, "bands")
-        self.sh_dir = fsio_join(path, "shingles")
+        self.commits_dir = fsio_join(path, "_commits")
         self._held: list[DataFrame] = []
-        # the id column's type, learned from the docs of each add_batch:
-        # with it every index read carries its schema, so none launches a
-        # footer-inference job
-        self._id_type: str | None = None
+        # the newest manifest this instance read or published, by file
+        # name (a published manifest is immutable), and the _commits/
+        # entries of the last head read, which the next publish replaces
+        self._cached: tuple[str, dict] | None = None
+        self._listed: list[str] = []
 
     # -- state ------------------------------------------------------------
 
+    def _head(self) -> dict:
+        """The head manifest, the newest entry of one ``_commits/``
+        listing: ``{"version", "id_type", "compacted_upto", "parts"}``, each
+        part ``{"id", "bands", "pb", "shingles", "sb"}`` — directories
+        relative to the index root; a compacted part's id is the highest
+        batch it covers. Version 0 is the empty index; one with ``bands/``
+        but no ``_commits/`` predates the manifest and is refused."""
+        names = self._io.list_names(self.commits_dir)
+        self._listed = names
+        versions = sorted(n for n in names if _MANIFEST.fullmatch(n))
+        if not versions:
+            if not self._io.exists(self.commits_dir) and self._io.exists(
+                fsio_join(self.path, "bands")
+            ):
+                raise ValueError(
+                    f"LshIndex at {self.path} predates the commit manifest "
+                    "(bands/ without _commits/); rebuild the index"
+                )
+            return {"version": 0, "id_type": None, "compacted_upto": None, "parts": []}
+        name = versions[-1]
+        if self._cached is None or self._cached[0] != name:
+            text = self._io.read_text(fsio_join(self.commits_dir, name))
+            self._cached = (name, json.loads(text))
+        return self._cached[1]
+
+    def _publish(self, head: dict, parts: list[dict], **fields) -> dict:
+        """Stage manifest v+1 naming ``parts`` (``fields`` override the
+        head's others) and publish it by no-overwrite rename — the index's
+        one commit point — then delete what the head's listing held (the
+        replaced manifest, a crashed publish's staging). Single writer: a
+        lost rename raises :class:`CommitConflict`."""
+        m = {**head, **fields, "version": head["version"] + 1, "parts": parts}
+        name = f"v{m['version']:08d}.json"
+        tmp = fsio_join(self.commits_dir, f".tmp-{uuid.uuid4().hex}.json")
+        self._io.write_text(tmp, json.dumps(m))
+        if not self._io.rename_no_overwrite(tmp, fsio_join(self.commits_dir, name)):
+            self._io.delete(tmp)
+            raise CommitConflict(
+                f"LshIndex at {self.path}: {name} was published by another writer"
+            )
+        self._cached = (name, m)
+        for old in self._listed:
+            self._io.delete(fsio_join(self.commits_dir, old))
+        self._listed = [name]
+        return m
+
     def committed_batches(self) -> list[int]:
-        """Batch ids whose index partitions are durably written."""
-        out = []
-        for name in self._io.list_names(self.bands_dir):
-            if name.startswith("batch="):
-                bid = int(name.split("=", 1)[1])
-                if self._io.exists(
-                    fsio_join(self.bands_dir, name, "_SUCCESS")
-                ):
-                    out.append(bid)
-        return sorted(out)
+        """Batch ids of the head's parts (after a compaction, the folded
+        range shows as its highest id)."""
+        return [p["id"] for p in self._head()["parts"]]
 
-    def _compacted_upto(self) -> int | None:
-        """Compaction watermark: highest batch id folded into a merged
-        partition (replays at or below it are refused — see compact())."""
-        p = fsio_join(self.path, "_compacted_upto")
-        if not self._io.exists(p):
-            return None
-        return int(self._io.read_text(p).strip())
+    def _write_side(self, df: DataFrame, side: str, col: str, rel: str, n: int | None = None) -> dict:
+        """Write ``df`` under ``rel`` partitioned by its sub-bucket column
+        ``col``, one file per sub-bucket (no fixed count unless ``n``
+        — AQE sizes the writer stage), and return the part entries for
+        it: the directory and its sub-buckets, from one listing."""
+        part = df.repartition(*([n] if n else []), col).write.partitionBy(col)
+        part.mode("overwrite").parquet(fsio_join(self.path, rel))
+        subs = sorted(
+            int(name.split("=", 1)[1])
+            for name in self._io.list_names(fsio_join(self.path, rel))
+            if name.startswith(f"{col}=")
+        )
+        return {side: rel, col: subs}
 
-    def _set_compacted_upto(self, upto: int) -> None:
-        cur = self._compacted_upto()
-        if cur is None or upto > cur:
-            self._io.write_text(fsio_join(self.path, "_compacted_upto"), str(upto))
-
-    def _schema(self, base: str) -> str:
-        """DDL of one batch partition of ``base`` (the bands or the
-        shingles side): its file columns, then its sub-bucket column."""
-        if base == self.bands_dir:
-            cols = "band int, bhash string, pb int"
-        else:
-            cols = "_sh array<bigint>, sb int"
-        return f"`{self.id_col}` {self._id_type}, {cols}"
-
-    def _read_part(self, base: str, upto: int) -> DataFrame:
-        """Partition-discovered read of ``base`` filtered to batch <= upto
-        (partition pruning keeps later/replayed batches out of the scan).
-        The schema is explicit once an add_batch has given the id type; a
-        compact() on an instance that has not seen one infers it."""
-        reader = self.spark.read
-        if self._id_type is not None:
-            reader = reader.schema(f"{self._schema(base)}, batch int")
-        return reader.parquet(base).filter(F.col("batch") <= upto)
+    def _scan(
+        self, side: str, parts: list[dict], buckets: list[int] | None, id_type: str
+    ) -> DataFrame:
+        """Rows of ``side`` in the sub-bucket directories the ``parts``
+        name (all, or those in ``buckets``): explicit paths and an
+        explicit schema, so the read lists only those directories and
+        launches no schema-inference job."""
+        col = dict(_SIDES)[side]
+        cols = "band int, bhash string" if side == "bands" else "_sh array<bigint>"
+        schema = f"`{self.id_col}` {id_type}, {cols}"
+        paths = [
+            fsio_join(self.path, p[side], f"{col}={k}")
+            for p in parts
+            for k in p[col]
+            if buckets is None or k in buckets
+        ]
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _pb(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.n_sub_buckets)).cast("int")
@@ -206,58 +262,38 @@ class LshIndex:
         (monotone ingest cursor — the streaming pipeline's micro-batch
         id) OR an already-committed id: that is the idempotent-retry /
         replay path — the write is skipped and the SAME pairs re-derive
-        (the probe scans only batches <= batch_id, so a replay is blind
-        to batches committed after it).
+        (the probe scans only parts with id <= batch_id, so a replay is
+        blind to batches committed after it).
         Document ids must be new (an UPDATED document is a delete+insert
         at the dedup layer — re-ingesting an id would pair it with its
         own stale band rows); this is the caller's contract, same as
         DetectDuplicate's cache-key discipline.
         """
-        # an interrupted compact() left its commit marker: finish it FIRST,
-        # so the watermark/partition state the guards read is consistent (a
-        # crash after the bands pass but before the watermark write must
-        # not open a replay window — the marker is the single commit point)
         self._held = []
-        self._recover_compact()
-        upto = self._compacted_upto()
+        head = self._head()
+        upto = head["compacted_upto"]
         if upto is not None and batch_id <= upto:
-            # the target partition now holds the MERGED history, so a
-            # "replay" of any covered id would probe the whole corpus as
-            # if it were new and re-emit every historical pair — refuse,
-            # like time travel past an expired snapshot
+            # the compacted part holds the MERGED history, so a "replay"
+            # of any covered id would probe the whole corpus as if it were
+            # new and re-emit every historical pair — refuse, like time
+            # travel past an expired snapshot
             raise ValueError(
                 f"batch_id {batch_id} is at or below the compaction "
                 f"watermark {upto}; compacted batches cannot be replayed"
             )
-        done = self.committed_batches()
+        done = [p["id"] for p in head["parts"]]
         if done and batch_id < done[-1] and batch_id not in done:
             raise ValueError(
                 f"batch_id {batch_id} below committed cursor {done[-1]} "
                 "and not a replay of a committed batch"
             )
-        if done:
-            # legacy-layout guard (one listing): an index persisted before
-            # the pb=/sb= sub-bucket layout would otherwise mix layouts on
-            # the next write and fail partition discovery mid-probe
-            oldest = self._io.list_names(
-                fsio_join(self.bands_dir, f"batch={done[0]}")
-            )
-            if not any(n.startswith("pb=") for n in oldest) and any(
-                n.endswith(".parquet") for n in oldest
-            ):
-                raise ValueError(
-                    f"LshIndex at {self.path}: committed batch {done[0]} "
-                    "uses the legacy flat layout (no pb= sub-buckets); "
-                    "rebuild the index before adding new batches"
-                )
-        _guard_internal(
-            docs, ["_sh", "sig", "band", "bhash", "batch", "pb", "sb"], "LshIndex"
-        )
-        self._id_type = dict(docs.dtypes)[self.id_col]
-
-        band_part = fsio_join(self.bands_dir, f"batch={batch_id}")
-        sh_part = fsio_join(self.sh_dir, f"batch={batch_id}")
-        if not self._io.exists(fsio_join(band_part, "_SUCCESS")):
+        _guard_internal(docs, ["_sh", "sig", "band", "bhash", "pb", "sb"], "LshIndex")
+        id_type = dict(docs.dtypes)[self.id_col]
+        if batch_id not in done:
+            if not head["version"]:
+                # before any data lands: an index with bands/ but no
+                # _commits/ is one that predates the manifest
+                self._io.mkdirs(self.commits_dir)
             with_sig = minhash_signature(
                 docs, self.text_col, self.n_hashes, self.shingle_n
             ).withColumn(
@@ -270,56 +306,43 @@ class LshIndex:
                 ),
             ).persist()  # two write actions below share one shingle+hash pass
             try:
-                # shingles FIRST: the bands-side _SUCCESS is the batch's
-                # commit marker (committed_batches + the skip above), so it
-                # must land last — a crash between the writes then replays
-                # both (overwrite mode), never leaving a committed batch
-                # whose verify side is missing
-                # repartition by the sub-bucket so each sb=/pb= directory
-                # gets ONE file (not one per upstream task); no fixed
-                # count — AQE sizes the writer stage
-                with_sig.select(
-                    self.id_col, "_sh", self._pb(F.col(self.id_col)).alias("sb")
-                ).repartition("sb").write.partitionBy("sb").mode(
-                    "overwrite"
-                ).parquet(sh_part)
-                band_rows(
-                    with_sig, self.id_col, "sig", self.n_bands, self.rows_per_band
-                ).withColumn("pb", self._pb(F.col("bhash"))).repartition(
-                    "pb"
-                ).write.partitionBy("pb").mode("overwrite").parquet(band_part)
+                part = {"id": batch_id}
+                part.update(self._write_side(
+                    with_sig.select(
+                        self.id_col, "_sh", self._pb(F.col(self.id_col)).alias("sb")
+                    ),
+                    "shingles", "sb", f"shingles/batch={batch_id}",
+                ))
+                part.update(self._write_side(
+                    band_rows(
+                        with_sig, self.id_col, "sig", self.n_bands, self.rows_per_band
+                    ).withColumn("pb", self._pb(F.col("bhash"))),
+                    "bands", "pb", f"bands/batch={batch_id}",
+                ))
             finally:
                 with_sig.unpersist()
+            head = self._publish(head, head["parts"] + [part], id_type=id_type)
         if not return_pairs:
             return None
+        parts = [p for p in head["parts"] if p["id"] <= batch_id]
+        new = parts[-1]  # this batch's part
 
         # ---- probe: new band rows vs the index scan (old ∪ this batch).
         # The new side is one micro-batch — broadcast it; the index scan
         # streams (never shuffled, never re-shingled) and is PRUNED to the
-        # sub-buckets the new batch actually hits: the batch's distinct pb
-        # set (<= n_sub_buckets values, one tiny job over its own files)
-        # becomes a static partition IN filter on the index read.
-        # explicit schema: an EMPTY batch writes only _SUCCESS (dynamic
-        # partitioning emits no files for zero rows), which would fail
-        # schema inference
-        new_bands = self.spark.read.schema(self._schema(self.bands_dir)).parquet(band_part)
-        # the batch's pb set comes from its partition DIRECTORIES (dynamic
-        # partitioning creates pb=X only for present values) — one listing,
-        # no Spark job
-        pbs = sorted(
-            int(name.split("=", 1)[1])
-            for name in self._io.list_names(band_part)
-            if name.startswith("pb=")
-        )
+        # sub-buckets the new batch actually hits: the batch's pb set, as
+        # its part records it (dynamic partitioning creates pb=X only for
+        # present values), selects the index directories to read.
+        pbs = new["pb"]
         self.last_pb_buckets = pbs  # pruning witness (tests/ops visibility)
         if not pbs:  # empty batch: nothing can match anything
             self.last_probe_plan = None  # witnesses reflect THIS batch,
             self.last_sh_buckets = []  # not a stale predecessor
-            idt = self._id_type
-            return self.spark.createDataFrame([], f"id_a {idt}, id_b {idt}, jaccard double")
-        all_bands = self._read_part(self.bands_dir, batch_id).filter(
-            F.col("pb").isin(pbs)
-        )
+            return self.spark.createDataFrame(
+                [], f"id_a {id_type}, id_b {id_type}, jaccard double"
+            )
+        new_bands = self._scan("bands", [new], None, id_type)
+        all_bands = self._scan("bands", parts, pbs, id_type)
         probe = F.broadcast(
             new_bands.select(
                 F.col(self.id_col).alias("_nid"), "band", "bhash"
@@ -391,9 +414,7 @@ class LshIndex:
             .distinct()
         )
         sh_small = self._hold(
-            self._read_part(self.sh_dir, batch_id)
-            .filter(F.col("sb").isin(sbs))
-            .select(self.id_col, "_sh")
+            self._scan("shingles", parts, sbs, id_type)
             .join(F.broadcast(cand_ids), self.id_col, "left_semi")
         )
         return verify_jaccard_pairs(cand, sh_small, self.id_col, self.threshold)
@@ -401,88 +422,48 @@ class LshIndex:
     # -- maintenance --------------------------------------------------------
 
     def compact(self, upto: int | None = None, n_files: int = 8) -> int:
-        """Merge the batch partitions <= ``upto`` into ONE partition
-        (sub-buckets preserved, so compacted history prunes identically).
+        """Fold the parts with id <= ``upto`` (default: all) into ONE part
+        whose id is the highest it covers (sub-buckets preserved, so
+        compacted history prunes identically); return the number of parts
+        merged (0 = nothing to do).
 
         A thousand-batch ingest leaves a thousand small ``batch=N``
         directories per side — the probe still prunes correctly but pays
-        file-listing and tiny-file overhead (the same merge-on-read debt
-        LakeTable repays via ``compact_buckets``). Compaction rewrites the
-        covered range as a single ``batch=<upto>`` partition per side;
-        probes and the union invariant are unchanged (every covered row
-        keeps batch <= any later probe's cursor). Replay of batch ids AT
-        or BELOW the compacted watermark becomes impossible (their
-        partitions are merged away; the target id's partition now holds
-        the whole covered history, so replaying it would re-probe every
-        historical doc as new) — add_batch refuses them, the same trade
+        file-listing and tiny-file overhead (the merge-on-read debt
+        LakeTable repays via ``compact_buckets``). The folded part goes
+        under a fresh directory, and the manifest naming it sets
+        ``compacted_upto`` to its id: add_batch refuses replays at or below
+        it (the part holds the whole covered history, so replaying its id
+        would re-probe every historical doc as new), the trade
         ``expire_snapshots`` makes for time travel.
 
-        Single-writer maintenance op. Crash-safe via ONE top-level commit
-        marker: BOTH sides are staged under discovery-ignored
-        ``_tmp_compact`` dirs first, then ``_compact_commit`` (covered ids
-        + target) lands at the index root — the single COMMIT POINT.
-        Every delete/rename happens after it, and recovery (the next
-        ``compact`` OR ``add_batch`` call) replays deletes+renames for
-        BOTH sides from that one marker — a crash after one side finished
-        but before the other can neither reopen a replay window (the
-        marker refuses it until recovery completes and sets the
-        watermark) nor leave duplicate rows on the unfinished side (its
-        delete list comes from the marker, not from either side's
-        directory listing). A crash BEFORE the marker leaves only staged
-        temp dirs, which the next run discards. Returns the number of
-        batch partitions merged (0 = nothing to do).
+        Single-writer, never run beside :meth:`add_batch`. Nothing is
+        deleted before the publish; after it, every data directory the
+        head does not name goes — the folded parts and the leftovers of a
+        write that crashed before its publish.
         """
-        self._recover_compact()
-
-        done = self.committed_batches()
-        upto = done[-1] if upto is None else upto
-        merge = [b for b in done if b <= upto]
-        if len(merge) < 2:
-            return 0
-        target = merge[-1]
-        for base, pcol in ((self.bands_dir, "pb"), (self.sh_dir, "sb")):
-            tmp = fsio_join(base, "_tmp_compact")
-            self._io.delete(tmp)  # stale pre-marker staging from a crash
-            (
-                self._read_part(base, target)
-                .drop("batch")
-                .repartition(n_files, F.col(pcol))
-                .write.partitionBy(pcol)
-                .mode("overwrite")
-                .parquet(fsio_join(tmp, f"batch={target}"))
+        head = self._head()
+        done = [p["id"] for p in head["parts"]]
+        upto = (done or [0])[-1] if upto is None else upto
+        merge = [p for p in head["parts"] if p["id"] <= upto]
+        if len(merge) >= 2:
+            target = merge[-1]["id"]
+            part = {"id": target}
+            fresh = f"compact={target}-{uuid.uuid4().hex[:12]}"
+            for side, col in _SIDES:
+                key = self.id_col if side == "shingles" else "bhash"
+                part.update(self._write_side(
+                    self._scan(side, merge, None, head["id_type"]).withColumn(
+                        col, self._pb(F.col(key))
+                    ),
+                    side, col, f"{side}/{fresh}", n_files,
+                ))
+            head = self._publish(
+                head, [part] + head["parts"][len(merge):], compacted_upto=target
             )
-        self._io.write_text(
-            fsio_join(self.path, "_compact_commit"),
-            json.dumps({"covered": merge, "target": target}),
-        )
-        self._finish_compact(merge, target)
-        return len(merge)
-
-    def _recover_compact(self) -> None:
-        """Finish an interrupted compact. Cheap when idle (one exists())."""
-        marker = fsio_join(self.path, "_compact_commit")
-        if self._io.exists(marker):
-            rec = json.loads(self._io.read_text(marker))
-            self._finish_compact(
-                [int(b) for b in rec["covered"]], int(rec["target"])
-            )
-
-    def _finish_compact(self, covered: list[int], target: int) -> None:
-        """Deletes + renames after the commit marker — idempotent, so a
-        crash anywhere inside is replayed from the marker."""
-        for base in (self.bands_dir, self.sh_dir):
-            tmp = fsio_join(base, "_tmp_compact")
-            staged = fsio_join(tmp, f"batch={target}")
-            if self._io.exists(staged):
-                for b in covered:
-                    self._io.delete(fsio_join(base, f"batch={b}"))
-                self._io.rename_dir(staged, fsio_join(base, f"batch={target}"))
-            else:
-                # this side's rename already committed — clear any covered
-                # leftovers EXCEPT the live target partition
-                for b in covered:
-                    if b != target:
-                        self._io.delete(fsio_join(base, f"batch={b}"))
-            self._io.delete(tmp)
-        self._set_compacted_upto(target)
-        self._io.delete(fsio_join(self.path, "_compact_commit"))
+        for side, _ in _SIDES:
+            live = {p[side].split("/", 1)[1] for p in head["parts"]}
+            for name in self._io.list_names(fsio_join(self.path, side)):
+                if name not in live:
+                    self._io.delete(fsio_join(self.path, side, name))
+        return len(merge) if len(merge) >= 2 else 0

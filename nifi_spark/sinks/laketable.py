@@ -767,6 +767,20 @@ class LakeTable:
         Do NOT fold (LWW) over a stats-pruned raw read: dropping a file
         that held a key's newest version would resurrect an older row —
         :meth:`read` therefore only stats-prunes clean buckets."""
+        return self._read_files(buckets, version, stats_filter)
+
+    def _read_files(
+        self,
+        buckets: list[int] | None,
+        version: int | None,
+        stats_filter: dict | None = None,
+        rank: str | None = None,
+    ) -> DataFrame:
+        """:meth:`read_raw`'s body. ``rank`` names a column that orders
+        rows by commit: 0 for bucket files, ``-1 - i`` for
+        ``delta_files[i]`` — the ``tie`` of a :meth:`_fold` that keeps the
+        row committed first on equal ``_seq``, as :meth:`merge_events`
+        does."""
         version = version or self.current_version()
         schema = self.schema(version)
         if schema is None:
@@ -787,31 +801,26 @@ class LakeTable:
         parts: list[DataFrame] = []
         if files:
             # explicit schema => additive evolution for free (null-fill)
-            parts.append(self.spark.read.schema(schema).parquet(*files))
+            df = self.spark.read.schema(schema).parquet(*files)
+            parts.append(df.withColumn(rank, F.lit(0).cast("long")) if rank else df)
         if delta:
-            parts.append(
-                self.spark.read.schema(schema)
-                .parquet(*delta)
-                .filter(F.col("_bucket").isin(sorted(want)))
-            )
+            df = self.spark.read.schema(schema).parquet(*delta)
+            if rank:
+                # a file's rank from its position in the manifest's list
+                # (Spark's part-file names are unique per write job)
+                names = F.array(*[F.lit(f.rsplit("/", 1)[-1]) for f in delta])
+                df = df.withColumn(
+                    rank, -F.array_position(names, F.col("_metadata.file_name"))
+                )
+            parts.append(df.filter(F.col("_bucket").isin(sorted(want))))
         if not parts:
+            if rank:
+                schema = T.StructType([*schema.fields, T.StructField(rank, T.LongType())])
             return self.spark.createDataFrame([], schema)
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
         return df
-
-    @staticmethod
-    def _lww_fold_read(df: DataFrame, key_cols: list[str]) -> DataFrame:
-        """Last-writer-wins per key over raw rows (internal cols intact) —
-        the merge-on-read reconciliation: one groupBy keyed shuffle picking
-        max(_seq) per key across delta generations."""
-        np = [c for c in df.columns if c not in key_cols]
-        return (
-            df.groupBy(*key_cols)
-            .agg(F.max_by(F.struct(*np), F.col("_seq")).alias("_w"))
-            .select(*key_cols, "_w.*")
-        )
 
     def read(
         self,
@@ -838,8 +847,11 @@ class LakeTable:
 
         Buckets with unfolded merge-on-read deltas (manifest
         ``mor_buckets``, written by :meth:`append_events`) are LWW-folded
-        here; clean buckets stream through with no shuffle. The fold cost
-        is O(rows in MOR buckets), bounded by the compaction cadence.
+        here by the write path's :meth:`_fold`; on equal ``_seq`` the row
+        committed first wins (bucket files, then ``delta_files`` in list
+        order), as in :meth:`merge_events` and compaction. Clean buckets
+        stream through with no shuffle. The fold cost is O(rows in MOR
+        buckets), bounded by the compaction cadence.
         """
         version = version or self.current_version()
         m = self._manifest(version)
@@ -856,8 +868,9 @@ class LakeTable:
             df = self.read_raw(
                 buckets=clean, version=version, stats_filter=stats_filter
             ).unionByName(
-                self._lww_fold_read(
-                    self.read_raw(buckets=mor, version=version), m["key_cols"]
+                self._fold(
+                    self._read_files(mor, version, rank="_rank"),
+                    m["key_cols"], tie="_rank",
                 )
             )
         else:
@@ -1120,8 +1133,8 @@ class LakeTable:
         ):
             return None
         df = self._fold(
-            self.read_raw(buckets=None if whole else buckets, version=head["version"]),
-            head["key_cols"],
+            self._read_files(None if whole else buckets, head["version"], rank="_rank"),
+            head["key_cols"], tie="_rank",
         )
         if purge_tombstones_below_seq is not None:
             df = df.filter(
@@ -1227,8 +1240,9 @@ class LakeTable:
         n_buckets: int | None = None,
         tie: str | None = None,
     ) -> DataFrame:
-        """The write path's last-writer-wins kernel, shared by every bucket
-        rewrite (merge, a table's first commit, compaction, rebucket).
+        """The last-writer-wins kernel, shared by every bucket rewrite
+        (merge, a table's first commit, compaction, rebucket) and by the
+        merge-on-read fold of :meth:`read`.
         ``rows`` carry the user columns plus ``_seq``, ``_deleted`` and
         ``_bucket``; they are hash-repartitioned once on ``_bucket`` and
         folded per key to the row with the highest ``_seq`` — the
@@ -1321,11 +1335,13 @@ class LakeTable:
         if head is None:
             raise CommitConflict("cannot rebucket an empty table")
         key_cols = list(head["key_cols"])
-        rows = self.read_raw(version=head["version"]).withColumn(
+        rows = self._read_files(None, head["version"], rank="_rank").withColumn(
             "_bucket", self._bucket_col(key_cols[0], new_n_buckets)
         )
         tag = self._new_tag()
-        files = self._write_partitioned(self._fold(rows, key_cols, new_n_buckets), tag)
+        files = self._write_partitioned(
+            self._fold(rows, key_cols, new_n_buckets, tie="_rank"), tag
+        )
         new_stats = self._collect_stats(files, head)
         old_n = self.n_buckets
 
@@ -1520,7 +1536,7 @@ class LakeTable:
         reconciles in-batch duplicates by seq exactly like cross-batch
         ones. Readers reconcile via :meth:`read`, which LWW-folds buckets
         listed in the manifest's ``mor_buckets`` over bucket files +
-        ``delta_files`` (groupBy key → max_by(_seq)), so the queryable
+        ``delta_files`` (the write path's :meth:`_fold`), so the queryable
         state is identical to the COW path's. Read amplification is
         bounded by compaction (:meth:`compact_buckets` /
         :meth:`compact`), which folds the deltas into per-bucket zstd

@@ -16,11 +16,16 @@ Spark restatement of the reference flow
   data. Events older than the watermark route to the late count
   (≙ EnforceOrder wait-timeout → ``skipped``, reference
   EnforceOrder.java:205) and are excluded from the merge.
-- **fold** — salted two-phase last-writer-wins per ``(conv_id, turn_idx)``
-  (operators.ordering), keeping delete-winners as tombstone candidates.
-- **apply** — ``foreachBatch``: LakeTable.merge with the streaming
+- **fold** — last-writer-wins per ``(conv_id, turn_idx)`` by ``seq``,
+  keeping delete-winners as tombstones: the sink's one fold kernel
+  (``LakeTable._fold``) in the bucket rewrite of a merge or compaction and
+  in the merge-on-read ``read``; with ``salt_buckets > 1`` the batch is
+  first pre-folded by the salted two-phase fold (operators.ordering), the
+  hot-key defence.
+- **apply** — ``foreachBatch``: ``LakeTable.merge_events`` (copy-on-write)
+  or ``LakeTable.append_events`` (merge-on-read) with the streaming
   ``batch_id`` as the idempotent commit id. Spark may re-run a batch after
-  a sink success but before the checkpoint commit; the merge skips
+  a sink success but before the checkpoint commit; the sink skips
   already-applied ids, which upgrades at-least-once replay to exactly-once
   table state (≙ PutIceberg snapshot-summary uuid check,
   reference PutIceberg.java:89-93,392-399).
@@ -159,12 +164,13 @@ class CdcPipeline:
         - ``"merge"`` (default): copy-on-write — every batch folds into the
           touched base buckets (LakeTable.merge_events). Per-batch cost is
           O(touched table data); reads are fold-free.
-        - ``"append"``: merge-on-read — every batch appends folded delta
-          files (LakeTable.append_events), per-batch cost O(batch) — the
-          shape a thousand-batch production stream needs; reads LWW-fold
-          the delta generations, bounded by inline partial compaction every
-          ``compact_every`` batches (bucket rewrite amortized 1/N per
-          batch, read amplification ≤ N generations).
+        - ``"append"``: merge-on-read — every batch appends its events
+          unfolded (salt-pre-folded only when ``salt_buckets > 1``) as
+          delta files (LakeTable.append_events), per-batch cost O(batch) —
+          the shape a thousand-batch production stream needs; reads
+          LWW-fold the delta generations, bounded by inline partial
+          compaction every ``compact_every`` batches (bucket rewrite
+          amortized 1/N per batch, read amplification ≤ N generations).
         """
         if sink_mode not in ("merge", "append"):
             raise ValueError(f"sink_mode must be 'merge' or 'append', got {sink_mode!r}")
@@ -781,11 +787,12 @@ class CdcPipeline:
         that follow the sink commit and may have been lost to a crash.
         The batch's DDL re-applies (``LakeTable.evolve`` is idempotent)
         and its bad rows re-write their DLQ directory (an overwrite). The
-        near-dup index partition is rebuilt when missing — state from
-        runs that committed the sink before the index; the current order
-        indexes first. The txn-admitted set of the original run cannot be
-        rebuilt (the pending store has moved on), so txn mode records the
-        index skip instead of freezing a wrong doc set.
+        near-dup index gets the batch when its head manifest neither names
+        a part with this id nor covers it by ``compacted_upto`` — state
+        from runs that committed the sink before the index; the current
+        order indexes first. The txn-admitted set of the original run
+        cannot be rebuilt (the pending store has moved on), so txn mode
+        records the index skip instead of freezing a wrong doc set.
 
         The heal frame is the PARSED batch — never the raw one, whose
         text column is NULL under from_json_payload — flagged for ``_bad``
@@ -796,10 +803,13 @@ class CdcPipeline:
         bad = healed.filter(F.col("_bad"))
         if not bad.isEmpty():
             self._write_dlq(bad, batch_id, "unparseable-or-missing-key")
-        if self._ndx is None or batch_id in self._ndx.committed_batches():
+        if self._ndx is None:
             return
-        wm = self._ndx._compacted_upto()
-        if wm is not None and batch_id <= wm:
+        head = self._ndx._head()
+        wm = head["compacted_upto"]
+        if batch_id in [p["id"] for p in head["parts"]] or (
+            wm is not None and batch_id <= wm
+        ):
             return
         if self.txn_consistent:
             metrics["near_dup_heal_skipped"] = True
@@ -969,7 +979,7 @@ class CdcPipeline:
         - LSH index compaction (``index_compact_every``) runs on a thread
           of its own, side by side with the tasks below: it reads and
           writes only the index directory and commits through its own
-          marker, so it shares no state with them. The batch waits for it
+          manifest, so it shares no state with them. The batch waits for it
           before returning, and its error fails the batch after the
           others ran (the view refresh still commits); the next due
           compaction folds what this one left;
@@ -1103,46 +1113,50 @@ class CdcPipeline:
         (≙ TimerDrivenSchedulingAgent.java:35)."""
         from ..schema import CHANGE_EVENTS_TXN
 
-        feed_schema = CHANGE_EVENTS_TXN if self.txn_consistent else CHANGE_EVENTS
-        reader = (
-            self.spark.readStream.schema(feed_schema)
-            .format("parquet")
+        return start_stream(
+            self, CHANGE_EVENTS_TXN if self.txn_consistent else CHANGE_EVENTS,
+            feed_dir, max_files_per_trigger, available_now, processing_time,
+            # a file-state-dependent watermark cutoff stays per-batch
+            bake_late=self.watermark_delay_s is None,
         )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.load(feed_dir)
-        # Bake the batch-invariant plan prefix into the STREAM: parse +
-        # bad-row flag (+ constant-false _late when no engine watermark is
-        # configured — a file-state-dependent watermark cutoff must stay
-        # per-batch in apply_batch). The incremental planner re-analyzes
-        # this Scala-side; foreachBatch then adds zero (or one) plan nodes
-        # per batch instead of rebuilding the whole chain through Py4J.
-        if self.from_json_payload:
-            stream = (
-                stream.select(*self._parse_cols)
-                .select(*self._norm_cols)
-                .withColumn("_bad", self._bad_cond)
-            )
-        else:
-            stream = stream.withColumn("_bad", F.lit(False))
-        if self.watermark_delay_s is None:
-            stream = stream.withColumn("_late", F.lit(False))
-
-        writer = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.apply_batch(df, bid)
-            )
-            .option("checkpointLocation", self.checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
     def run_to_completion(self, feed_dir: str, **kw) -> None:
         q = self.start(feed_dir, **kw)
         q.awaitTermination()
+
+
+def start_stream(
+    pipe, feed_schema, feed_dir: str, max_files_per_trigger: int | None,
+    available_now: bool, processing_time: str | None, bake_late: bool = False,
+):
+    """readStream over ``feed_dir`` → ``foreachBatch(pipe.apply_batch)``,
+    the stream wiring of both pipelines. The batch-invariant plan prefix
+    is baked into the STREAM: parse + bad-row flag (+ constant-false
+    ``_late`` when ``bake_late``). The incremental planner re-analyzes it
+    Scala-side, so foreachBatch adds zero (or one) plan nodes per batch
+    instead of rebuilding the whole chain through Py4J."""
+    reader = pipe.spark.readStream.schema(feed_schema).format("parquet")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.load(feed_dir)
+    if pipe.from_json_payload:
+        stream = (
+            stream.select(*pipe._parse_cols)
+            .select(*pipe._norm_cols)
+            .withColumn("_bad", pipe._bad_cond)
+        )
+    else:
+        stream = stream.withColumn("_bad", F.lit(False))
+    if bake_late:
+        stream = stream.withColumn("_late", F.lit(False))
+    writer = stream.writeStream.foreachBatch(
+        lambda df, bid: pipe.apply_batch(df, bid)
+    ).option("checkpointLocation", pipe.checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 def _cli(argv: list[str] | None = None) -> None:

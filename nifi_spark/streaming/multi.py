@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 
 from ..fsio import join as fsio_join
 from ..schema import CHANGE_EVENTS, CHANGE_EVENTS_TXN
-from .job import CdcPipeline, build_parse_exprs
+from .job import CdcPipeline, build_parse_exprs, start_stream
 
 
 class MultiTableCdcPipeline:
@@ -199,32 +199,12 @@ class MultiTableCdcPipeline:
         feed_schema = T.StructType(
             list(base.fields) + [T.StructField(self.table_col, T.StringType(), True)]
         )
-        reader = self.spark.readStream.schema(feed_schema).format("parquet")
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.load(feed_dir)
-        # bake the batch-invariant prefix into the stream, as in the
-        # single-table pipeline: parse + bad flag Scala-side, the routing
-        # column carried through as metadata
-        if self.from_json_payload:
-            stream = (
-                stream.select(*self._parse_cols)
-                .select(*self._norm_cols)
-                .withColumn("_bad", self._bad_cond)
-            )
-        else:
-            stream = stream.withColumn("_bad", F.lit(False))
-        writer = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: self.apply_batch(df, bid)
-            )
-            .option("checkpointLocation", self.checkpoint_dir)
+        # the routing column rides through as metadata; each table's
+        # apply_batch adds its own per-batch _late
+        return start_stream(
+            self, feed_schema, feed_dir, max_files_per_trigger, available_now,
+            processing_time,
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
     def run_to_completion(self, feed_dir: str, **kw) -> None:
         q = self.start(feed_dir, **kw)

@@ -234,7 +234,7 @@ def test_index_compaction_error_fails_batch_after_view_refresh(spark, tmp_path, 
     assert p._ndx.committed_batches() == [1, 2]
 
     p.apply_batch(batches[2], batch_id=3)
-    assert p._ndx.committed_batches() == [3] and p._ndx._compacted_upto() == 3
+    assert p._ndx.committed_batches() == [3] and p._ndx._head()["compacted_upto"] == 3
     got = sorted(
         tuple(r) for r in spark.read.parquet(str(tmp_path / "t" / "_near_dups"))
         .select("id_a", "id_b", "jaccard").collect()

@@ -7,6 +7,8 @@ so a pipeline that checks each micro-batch against the index loses nothing
 vs a periodic full self-join, at O(batch) instead of O(corpus) per batch.
 """
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +23,7 @@ def _docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").repartition(8)
 
 
+@functools.lru_cache(maxsize=1)
 def _one_shot(spark):
     return sorted(
         (r.id_a, r.id_b, r.jaccard)
@@ -74,44 +77,18 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert idx.committed_batches() == [0, 1, 2]
 
 
-def test_crash_between_shingle_and_band_write_replays_cleanly(spark, tmp_path):
-    """The bands-side _SUCCESS is the batch's commit marker and lands
-    LAST (shingles first): a crash between the two writes leaves the
-    batch UNCOMMITTED, and the replay rewrites BOTH sides and derives
-    the same pairs — committed_batches() drives add_batch's skip-write
-    replay and the streaming heal check, so this ordering is
-    load-bearing."""
+def test_legacy_flat_layout_refused(spark, tmp_path):
+    """An index persisted before the commit manifest — here the flat
+    layout (data files directly under batch=N, no pb= dirs), with
+    ``bands/`` but no ``_commits/`` — is refused loudly, on the new-batch
+    path and on the replay path, instead of probing zero parts."""
     import shutil
 
-    docs = _docs(spark)
-    idx = LshIndex(spark, str(tmp_path / "lsh"), **PARAMS)
-    idx.add_batch(docs.filter("doc_id % 2 = 0"), 0).collect()
-    want = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in idx.add_batch(docs.filter("doc_id % 2 = 1"), 1).collect()
-    )
-    # simulate the crash window: shingles for batch 1 persisted, bands not
-    shutil.rmtree(tmp_path / "lsh" / "bands" / "batch=1")
-    assert idx.committed_batches() == [0]  # batch 1 is NOT committed
-    got = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in idx.add_batch(docs.filter("doc_id % 2 = 1"), 1).collect()
-    )
-    assert got == want
-    assert idx.committed_batches() == [0, 1]
-
-
-def test_legacy_flat_layout_refused(spark, tmp_path):
-    """An index persisted by the pre-sub-bucket layout (data files
-    directly under batch=N, no pb= dirs) is refused loudly instead of
-    silently probing zero partitions or failing partition discovery."""
     docs = _docs(spark)
     idx = LshIndex(spark, str(tmp_path / "lsh"), **PARAMS)
     idx.add_batch(docs.filter("doc_id < 100"), 0).collect()
-    # flatten batch 0 into the legacy layout: move the pb= files up
-    import os
-    import shutil
-
+    # flatten batch 0 into the legacy layout: move the pb= files up, and
+    # drop the manifest the legacy writer never had
     bdir = tmp_path / "lsh" / "bands" / "batch=0"
     for sub in list(bdir.iterdir()):
         if sub.name.startswith("pb="):
@@ -119,9 +96,11 @@ def test_legacy_flat_layout_refused(spark, tmp_path):
                 if f.name.endswith(".parquet"):
                     shutil.move(str(f), str(bdir / f"flat_{f.name}"))
             shutil.rmtree(sub)
-    with pytest.raises(ValueError, match="legacy flat layout"):
+    shutil.rmtree(tmp_path / "lsh" / "_commits")
+    idx = LshIndex(spark, str(tmp_path / "lsh"), **PARAMS)
+    with pytest.raises(ValueError, match="predates the commit manifest"):
         idx.add_batch(docs.filter("doc_id >= 100 AND doc_id < 200"), 1)
-    with pytest.raises(ValueError, match="legacy flat layout"):
+    with pytest.raises(ValueError, match="predates the commit manifest"):
         idx.add_batch(docs.filter("doc_id < 100"), 0)  # replay path too
 
 
@@ -181,8 +160,9 @@ def test_probe_broadcasts_the_batch_not_the_index(spark, tmp_path):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    # the index side is partition-pruned to the batch's pb sub-buckets
-    assert "pb" in plan and "PartitionFilters" in plan
+    # the index side reads only the batch's pb sub-bucket directories:
+    # one explicit path per part (batches 0 and 1) and hit sub-bucket
+    assert f"InMemoryFileIndex({2 * len(idx.last_pb_buckets)} paths)" in plan
     vplan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in vplan and "BroadcastNestedLoop" not in vplan
 
@@ -284,17 +264,19 @@ def test_compact_preserves_probe_semantics(spark, tmp_path):
     merged = idx.compact(n_files=2)
     assert merged == 3
     assert idx.committed_batches() == [2]
-    band_files = _parquet_files(tmp_path / "lsh" / "bands" / "batch=2")
+    head = idx._head()
+    assert head["compacted_upto"] == 2
+    compacted = tmp_path / "lsh" / head["parts"][0]["bands"]
+    # the folded batch directories are gone; only the compacted part is left
+    assert [d.name for d in (tmp_path / "lsh" / "bands").iterdir()] == [compacted.name]
+    band_files = _parquet_files(compacted)
     # one file per populated pb sub-bucket (repartitioned by pb), fewer
     # total files than the three uncompacted batch dirs held
     assert 0 < len(band_files) <= 4 < files_before
     # the sub-bucket dirs survive compaction — later probes still prune
     import os
 
-    assert any(
-        n.startswith("pb=")
-        for n in os.listdir(tmp_path / "lsh" / "bands" / "batch=2")
-    )
+    assert any(n.startswith("pb=") for n in os.listdir(compacted))
     # the next batch probes the compacted index identically
     got += [
         (r.id_a, r.id_b, r.jaccard)
@@ -311,144 +293,86 @@ def test_compact_preserves_probe_semantics(spark, tmp_path):
     assert idx.compact(upto=2) == 0
 
 
-def _stage_compact_without_finishing(spark, idx, root, covered, target):
-    """Reproduce exactly what compact() does up to and including the
-    commit-marker write, then 'crash' (do none of the deletes/renames)."""
-    import json
-
-    for base, pcol in (("bands", "pb"), ("shingles", "sb")):
-        (
-            spark.read.parquet(str(root / base))
-            .filter(F.col("batch") <= target)
-            .drop("batch")
-            .repartition(2, F.col(pcol))
-            .write.partitionBy(pcol)
-            .mode("overwrite")
-            .parquet(str(root / base / "_tmp_compact" / f"batch={target}"))
-        )
-    (root / "_compact_commit").write_text(
-        json.dumps({"covered": covered, "target": target})
-    )
+class _Crash(Exception):
+    pass
 
 
-def test_compact_crash_recovery(spark, tmp_path):
-    """A compact that crashed right after its commit marker landed (both
-    sides staged, nothing deleted/renamed yet) is finished by the next
-    compact call — no data lost, no duplicates on EITHER side."""
+# the scenario the crash harness runs, and every durable write it makes,
+# in order: the Spark part writes and the FsIO writes of each call
+_SCENARIO = [("add", 0), ("add", 1), ("compact", None), ("add", 2)]
+_PUBLISH = ["write_text", "rename_no_overwrite"]
+_WRITES = (
+    ["mkdirs", "parquet", "parquet", *_PUBLISH]  # add_batch(0): the first
+    + ["parquet", "parquet", *_PUBLISH, "delete"]  # add_batch(1)
+    # compact(): both sides, the publish, the replaced manifest, then the
+    # two folded batch directories of each side
+    + ["parquet", "parquet", *_PUBLISH, "delete"] + ["delete"] * 4
+    + ["parquet", "parquet", *_PUBLISH, "delete"]  # add_batch(2)
+)
+_COMMITTED_AFTER = [[0], [0, 1], [1], [1, 2]]
+
+
+def _step(idx, docs, op, b):
+    if op == "compact":
+        idx.compact()
+        return []
+    pairs = idx.add_batch(docs.filter(f"doc_id % 3 = {b}"), b)
+    return [(r.id_a, r.id_b, r.jaccard) for r in pairs.collect()]
+
+
+@pytest.mark.parametrize(
+    "k", [None, *range(len(_WRITES))],
+    ids=lambda k: "clean" if k is None else f"k{k:02d}-{_WRITES[k]}",
+)
+def test_index_crash_at_any_write_replays(spark, tmp_path, monkeypatch, k):
+    """The k-th durable write of add_batch/compact raises (a crash); a
+    fresh LshIndex on the same path sees the head as before the call — or
+    as after it, once the manifest is published — and replaying the call
+    and the rest of the scenario leaves the same committed batches, the
+    pairs of the one-shot operator (none twice), and no data directory
+    the head does not name."""
+    from pyspark.sql import DataFrameWriter
+
+    from nifi_spark.fsio import FsIO
+
+    seen = []
+
+    def crash_at_k(owner, name):
+        orig = getattr(owner, name)
+
+        def write(*a, **kw):
+            seen.append(name)
+            if len(seen) - 1 == k:
+                raise _Crash(f"write {k}: {name}")
+            return orig(*a, **kw)
+
+        monkeypatch.setattr(owner, name, write)
+
+    crash_at_k(DataFrameWriter, "parquet")
+    for name in ("mkdirs", "write_text", "rename_no_overwrite", "delete", "rename_dir"):
+        crash_at_k(FsIO, name)
     docs = _docs(spark)
-    idx = LshIndex(spark, str(tmp_path / "lsh"), **PARAMS)
-    _drain(idx, docs, ["doc_id % 3 = 0", "doc_id % 3 = 1"])
     root = tmp_path / "lsh"
-    before = {
-        s: spark.read.parquet(str(root / s)).filter("batch <= 1").count()
-        for s in ("bands", "shingles")
-    }
-    _stage_compact_without_finishing(spark, idx, root, [0, 1], 1)
-
-    merged = idx.compact()  # recovery finishes the staged compact first
-    assert merged == 0  # nothing NEW to merge afterwards
-    assert idx.committed_batches() == [1]
-    for s in ("bands", "shingles"):
-        assert spark.read.parquet(str(root / s)).count() == before[s]
-        assert not (root / s / "_tmp_compact").exists()
-    assert not (root / "_compact_commit").exists()
-    # index still answers probes correctly after recovery
-    got = [
-        (r.id_a, r.id_b, r.jaccard)
-        for r in idx.add_batch(docs.filter("doc_id % 3 = 2"), 2).collect()
-    ]
-    pre = _drain(
-        LshIndex(spark, str(tmp_path / "fresh"), **PARAMS),
-        docs,
-        ["doc_id % 3 < 2", "doc_id % 3 = 2"],
-    )
-    assert sorted(got) == sorted(t for t in pre if t not in set(
-        _drain(LshIndex(spark, str(tmp_path / "fresh2"), **PARAMS),
-               docs, ["doc_id % 3 < 2"])
-    ))
-
-
-def test_compact_crash_between_sides_recovers_both(spark, tmp_path):
-    """ADVICE r4 (medium): crash AFTER the bands side finished its
-    delete+rename but BEFORE the shingles side — the old per-side commit
-    left (a) the watermark unset, so replaying the merged target id
-    re-emitted every historical pair, and (b) duplicate shingle rows. The
-    single top-level marker must close both: recovery (triggered by
-    add_batch, not only compact) completes the shingles side, sets the
-    watermark, and the target replay is refused."""
-    import shutil
-
-    docs = _docs(spark)
-    idx = LshIndex(spark, str(tmp_path / "lsh"), **PARAMS)
-    _drain(idx, docs, ["doc_id % 3 = 0", "doc_id % 3 = 1"])
-    root = tmp_path / "lsh"
-    sh_before = spark.read.parquet(str(root / "shingles")).count()
-    _stage_compact_without_finishing(spark, idx, root, [0, 1], 1)
-    # replay the bands-side finish by hand: delete covered, rename staged
-    for b in (0, 1):
-        shutil.rmtree(root / "bands" / f"batch={b}")
-    (root / "bands" / "_tmp_compact" / "batch=1").rename(
-        root / "bands" / "batch=1"
-    )
-    shutil.rmtree(root / "bands" / "_tmp_compact")
-    # crash here: shingles untouched, watermark unset, marker present.
-    # add_batch alone (no compact call) must run recovery and then refuse
-    # the covered-batch replay — the exact replay hole the advice names.
-    with pytest.raises(ValueError, match="compaction watermark"):
-        idx.add_batch(docs.filter("doc_id % 3 = 1"), 1)
-    assert not (root / "_compact_commit").exists()
-    assert not (root / "shingles" / "_tmp_compact").exists()
-    # no duplicate shingle rows survived (old bug: covered sh batch dirs
-    # were copied into the merged partition but never deleted)
-    sh = spark.read.parquet(str(root / "shingles"))
-    assert sh.count() == sh_before
-    assert sh.groupBy("doc_id").count().filter("count > 1").count() == 0
-    # and the index still probes correctly
-    got = [
-        (r.id_a, r.id_b, r.jaccard)
-        for r in idx.add_batch(docs.filter("doc_id % 3 = 2"), 2).collect()
-    ]
-    pre = _drain(
-        LshIndex(spark, str(tmp_path / "fresh"), **PARAMS),
-        docs,
-        ["doc_id % 3 < 2", "doc_id % 3 = 2"],
-    )
-    assert sorted(got) == sorted(t for t in pre if t not in set(
-        _drain(LshIndex(spark, str(tmp_path / "fresh2"), **PARAMS),
-               docs, ["doc_id % 3 < 2"])
-    ))
-
-
-def test_compact_crash_after_commit_rename_loses_nothing(spark, tmp_path):
-    """Crash AFTER both renames but BEFORE the marker is cleared: the
-    leftover marker must NOT cause recovery to delete the live compacted
-    partition (the delete list only replays covered ids OTHER than the
-    target once the staged partition is gone)."""
-    import json
-
-    docs = _docs(spark)
-    idx = LshIndex(spark, str(tmp_path / "lsh"), **PARAMS)
-    _drain(idx, docs, ["doc_id % 3 = 0", "doc_id % 3 = 1"])
-    assert idx.compact() == 2
-    # simulate the crash: resurrect the marker (renames already done)
-    root = tmp_path / "lsh"
-    (root / "_compact_commit").write_text(
-        json.dumps({"covered": [0, 1], "target": 1})
-    )
-    n_before = spark.read.parquet(str(root / "bands")).count()
-    assert idx.compact() == 0  # recovery is a no-op beyond cleanup
-    assert spark.read.parquet(str(root / "bands")).count() == n_before
-    assert not (root / "_compact_commit").exists()
-    got = _drain(idx, docs, []) + [
-        (r.id_a, r.id_b, r.jaccard)
-        for r in idx.add_batch(docs.filter("doc_id % 3 = 2"), 2).collect()
-    ]
-    # full index intact: final batch still finds its pairs vs history
-    fresh = LshIndex(spark, str(tmp_path / "fresh"), **PARAMS)
-    expect = _drain(fresh, docs, ["doc_id % 3 < 2", "doc_id % 3 = 2"])
-    first = set(_drain(LshIndex(spark, str(tmp_path / "f2"), **PARAMS),
-                       docs, ["doc_id % 3 < 2"]))
-    assert sorted(got) == sorted(t for t in expect if t not in first)
+    idx = LshIndex(spark, str(root), **PARAMS)
+    got = []
+    for (op, b), after in zip(_SCENARIO, _COMMITTED_AFTER):
+        before, start = idx.committed_batches(), len(seen)
+        try:
+            got += _step(idx, docs, op, b)
+        except _Crash:
+            published = "rename_no_overwrite" in seen[start:-1]
+            idx = LshIndex(spark, str(root), **PARAMS)  # a restarted process
+            assert idx.committed_batches() == (after if published else before)
+            got += _step(idx, docs, op, b)
+        assert idx.committed_batches() == after
+    if k is None:
+        assert seen == _WRITES
+    assert len(got) == len(set(got)), "a pair was emitted twice"
+    assert sorted(got) == _one_shot(spark)
+    parts = idx._head()["parts"]
+    for side in ("bands", "shingles"):
+        named = {p[side].split("/", 1)[1] for p in parts}
+        assert {d.name for d in (root / side).iterdir()} == named
 
 
 def test_probe_reads_only_hit_sub_buckets(spark, tmp_path):
@@ -503,15 +427,14 @@ def test_index_writes_one_file_per_sub_bucket(spark, tmp_path):
                 assert len(files) == 1, f"{d}: {len(files)} files"
 
 
-def test_cdc_pipeline_in_stream_near_dup(spark, tmp_path):
+def test_cdc_pipeline_in_stream_near_dup(spark, tmp_path, monkeypatch):
     """VERDICT r4 #5 — LshIndex wired into CdcPipeline: each micro-batch's
     admitted inserts probe+extend the index inside apply_batch; a
     near-copy conversation ingested in batch k is flagged IN batch k;
     flagged pairs land under _near_dups/batch=k; replays produce no
-    duplicate pairs; a crash between the sink commit and the index add is
-    healed on replay."""
+    duplicate pairs; a batch the sink committed but the index never saw
+    is healed on replay."""
     import datetime
-    import shutil
 
     from nifi_spark.streaming.job import CdcPipeline
 
@@ -559,40 +482,40 @@ def test_cdc_pipeline_in_stream_near_dup(spark, tmp_path):
         sink_mode="append", near_dup_index=str(tmp_path / "lsh"),
     )
     seen = {}
-    for b, rows in batches.items():
-        m = p.apply_batch(feed(rows, seq0=b * 100), batch_id=b)
+    for b in (1, 2):
+        m = p.apply_batch(feed(batches[b], seq0=b * 100), batch_id=b)
         seen[b] = m["n_near_dups"]
-    assert seen == {1: 0, 2: 1, 3: 1}
+    assert seen == {1: 0, 2: 1}
     nd2 = spark.read.parquet(str(tmp_path / "t" / "_near_dups" / "batch=2")).collect()
     assert [(r.id_a, r.id_b) for r in nd2] == [("c0", "c3")]
-    all_nd = spark.read.parquet(str(tmp_path / "t" / "_near_dups")).collect()
-    assert sorted((r.id_a, r.id_b) for r in all_nd) == [("c0", "c3"), ("c1", "c4")]
 
     # replay of an applied-and-indexed batch: short-circuits, no dup pairs
     m = p.apply_batch(feed(batches[2], seq0=200), batch_id=2)
     assert m["n_events"] == 0 and "n_near_dups" not in m
     all_nd = spark.read.parquet(str(tmp_path / "t" / "_near_dups")).collect()
-    assert len(all_nd) == 2
+    assert len(all_nd) == 1
 
-    # crash between sink commit and index add: wipe the index's batch-3
-    # partitions, replay batch 3 — the short-circuit path heals the index
-    # and rewrites the same pair (no duplicates)
-    for side in ("bands", "shingles"):
-        shutil.rmtree(tmp_path / "lsh" / side / "batch=3")
+    # a batch the sink committed but the index never saw (a run that
+    # committed the sink before the index step): replaying batch 3, the
+    # short-circuit path heals the index and writes the pair once
+    with monkeypatch.context() as mp:
+        mp.setattr(p, "_near_dup_step", lambda *a: None)
+        m = p.apply_batch(feed(batches[3], seq0=300), batch_id=3)
+    assert m["version"] is not None and "n_near_dups" not in m
+    assert 3 not in p._ndx.committed_batches()
     m = p.apply_batch(feed(batches[3], seq0=300), batch_id=3)
-    assert m["n_near_dups"] == 1
+    assert m["n_events"] == 0 and m["n_near_dups"] == 1
     assert 3 in p._ndx.committed_batches()
     all_nd = spark.read.parquet(str(tmp_path / "t" / "_near_dups")).collect()
     assert sorted((r.id_a, r.id_b) for r in all_nd) == [("c0", "c3"), ("c1", "c4")]
 
 
-def test_near_dup_heal_parses_json_payloads(spark, tmp_path):
+def test_near_dup_heal_parses_json_payloads(spark, tmp_path, monkeypatch):
     """The defensive index heal must index the PARSED batch, not the raw
     frame: under from_json_payload the raw batch's top-level text is
-    NULL, so an unparsed heal would commit an EMPTY index partition and
+    NULL, so an unparsed heal would commit an EMPTY index part and
     the conversations could never be flagged again."""
     import json as _json
-    import shutil
 
     from nifi_spark.streaming.job import CdcPipeline
 
@@ -629,13 +552,16 @@ def test_near_dup_heal_parses_json_payloads(spark, tmp_path):
     near = text_a[:1] + [text_a[1].replace("twelve", "thirteen")]
     m = p.apply_batch(feed("c1", near, 200), batch_id=2)
     assert m["n_near_dups"] == 1
-    # crash window: sink committed, index partition lost → the heal (the
-    # replay short-circuit) must re-parse and re-derive the same pair
-    for side in ("bands", "shingles"):
-        shutil.rmtree(tmp_path / "lsh" / side / "batch=2")
-    m = p.apply_batch(feed("c1", near, 200), batch_id=2)
-    assert m["n_events"] == 0 and m["n_near_dups"] == 1
-    assert 2 in p._ndx.committed_batches()
+    # the sink commits batch 3 without the index step (a run that
+    # committed the sink first) → the heal (the replay short-circuit)
+    # must re-parse and derive c2's pairs with c0 and c1
+    with monkeypatch.context() as mp:
+        mp.setattr(p, "_near_dup_step", lambda *a: None)
+        m = p.apply_batch(feed("c2", near, 300), batch_id=3)
+    assert m["n_events"] > 0 and 3 not in p._ndx.committed_batches()
+    m = p.apply_batch(feed("c2", near, 300), batch_id=3)
+    assert m["n_events"] == 0 and m["n_near_dups"] == 2
+    assert 3 in p._ndx.committed_batches()
 
 
 def test_cdc_pipeline_index_compact_cadence(spark, tmp_path):

@@ -56,6 +56,32 @@ def test_append_events_lww_fold_on_read(spark, tmp_path):
     assert _rows(t) == {("c1", 0): "hello v3", ("c3", 0): "new"}
 
 
+def test_equal_seq_keeps_the_row_committed_first(spark, tmp_path):
+    """On equal ``_seq`` the row committed first wins on every path: the
+    copy-on-write merge, the merge-on-read ``read()`` and its compaction
+    agree — bucket-file rows beat delta rows, an earlier delta beats a
+    later one — and the changelog reports no change for the base keys."""
+    def batch(text, keys):
+        return _batch(spark, [(5, "I", f"c{k}", 0, "user", text, None, TS) for k in keys])
+
+    cow = LakeTable(spark, str(tmp_path / "cow"), n_buckets=4)
+    mor = LakeTable(spark, str(tmp_path / "mor"), n_buckets=4)
+    for t in (cow, mor):
+        t.merge_events(batch("base", range(20)), KEYS, batch_id=1)
+    cow.merge_events(batch("delta", range(30)), KEYS, batch_id=2)
+    cow.merge_events(batch("later", range(30)), KEYS, batch_id=3)
+    mor.append_events(batch("delta", range(30)), KEYS, batch_id=2)
+    mor.append_events(batch("later", range(30)), KEYS, batch_id=3)
+    want = {(f"c{k}", 0): "base" if k < 20 else "delta" for k in range(30)}
+    assert _rows(cow) == want
+    assert _rows(mor) == want
+    base_keys = [f"c{k}" for k in range(20)]
+    assert mor.changes(1).filter(F.col("conv_id").isin(base_keys)).count() == 0
+    mor.compact_buckets(list(range(4)))
+    assert not mor._manifest().get("mor_buckets")
+    assert _rows(mor) == want
+
+
 def test_append_is_idempotent_on_batch_replay(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"), n_buckets=4)
     t.merge(_batch(spark, [(1, "I", "c1", 0, "user", "v1", None, TS)]), KEYS, batch_id=1)
